@@ -258,6 +258,17 @@ REPS = {
 }
 
 
+def cpu_count() -> int:
+    """SPARK_GRAFT_CPUS, or os.cpu_count() when it is unset or not a
+    positive integer: it is read after the timed work, so a bad value
+    must not lose the record."""
+    try:
+        cpus = int(os.environ["SPARK_GRAFT_CPUS"])
+    except (KeyError, ValueError):
+        cpus = 0
+    return cpus if cpus > 0 else os.cpu_count() or 8
+
+
 def materialize(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
@@ -623,8 +634,7 @@ def main() -> None:
     # BEFORE this session spun up means per-query statuses at +-20% are
     # noise, and the record should say so itself instead of reading as
     # code regressions.
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
-    contaminated = loadavg_start[0] > cpus / 4
+    contaminated = loadavg_start[0] > cpu_count() / 4
     record = {
         "metric": "headline_queries_total_wall",
         "value": total,

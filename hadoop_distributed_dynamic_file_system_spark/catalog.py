@@ -18,7 +18,9 @@ from __future__ import annotations
 
 import os
 import time
+import weakref
 from dataclasses import dataclass, field
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -38,6 +40,70 @@ TPCH_TABLES = (
 # Reference defaults: dfs.dynamic.alpha=0.5, precision clamp 30 s.
 DEFAULT_ALPHA = 0.5
 DEFAULT_PRECISION_MS = 30_000
+
+
+# Session confs that change what parquet schema inference returns
+# (column types from the footer, merged columns, partition types).
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.timestampType",
+)
+
+# session -> {(path, conf values): (listing fingerprint, schema)}. Keyed
+# by the session object, so a stopped or new session infers again.
+_schemas: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _listing(path: str) -> tuple | None:
+    """(relative path, size, mtime_ns, inode) of every file under a
+    local `path`, or None when the path cannot be fingerprinted: a
+    non-local URI, a glob pattern, or a path that does not exist or
+    changes while it is listed."""
+    url = urlparse(path)
+    if url.scheme not in ("", "file") or any(c in path for c in "*?[{"):
+        return None
+    local = url.path if url.scheme else path
+    if os.path.isfile(local):
+        files = [local]
+    elif os.path.isdir(local):
+        files = [os.path.join(root, f) for root, _dirs, fs in os.walk(local) for f in fs]
+    else:
+        return None
+    out = []
+    try:
+        for f in sorted(files):
+            st = os.stat(f)
+            out.append((os.path.relpath(f, local), st.st_size, st.st_mtime_ns, st.st_ino))
+    except FileNotFoundError:
+        return None
+    return tuple(out)
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """`spark.read.parquet(path)` that infers each schema once per session.
+
+    Plain schema inference reads the footers in a Spark job on every
+    call. The inferred schema is kept per session under the path, the
+    values of `_INFERENCE_CONFS` and a listing fingerprint of the files,
+    so any added, removed or rewritten file infers again. A path that
+    cannot be fingerprinted takes the plain read, so Spark raises its
+    own errors for it."""
+    fingerprint = _listing(path)
+    if fingerprint is None:
+        return spark.read.parquet(path)
+    key = (path, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
+    memo = _schemas.setdefault(spark, {})
+    hit = memo.get(key)
+    if hit is not None and hit[0] == fingerprint:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    memo[key] = (fingerprint, df.schema)
+    return df
 
 
 @dataclass
@@ -91,8 +157,9 @@ class Catalog:
     def table(self, name: str, track_access: bool = True) -> DataFrame:
         ent = self._tables[name]
         if ent.df is None:
-            ent.df = self.spark.read.parquet(ent.path)
-            ent.num_partitions = ent.df.rdd.getNumPartitions()
+            ent.df = read_parquet(self.spark, ent.path)
+            # counted on the JVM: df.rdd would build a Python RDD wrapper
+            ent.num_partitions = ent.df._jdf.queryExecution().toRdd().getNumPartitions()
         if track_access:
             self._touch(ent)
         return ent.df
@@ -116,13 +183,3 @@ class Catalog:
     def sql(self, query: str) -> DataFrame:
         """Run SQL against registered views (register_dir(as_views=True))."""
         return self.spark.sql(query)
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Plain dict of DataFrames for code that doesn't need the catalog."""
-    out = {}
-    for name in TPCH_TABLES:
-        p = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(p):
-            out[name] = spark.read.parquet(p)
-    return out

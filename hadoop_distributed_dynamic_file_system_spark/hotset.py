@@ -32,11 +32,14 @@ the meaningful Spark storage tiers).
 
 from __future__ import annotations
 
+import logging
 from dataclasses import dataclass, field
 
 from pyspark.storagelevel import StorageLevel
 
 from .catalog import Catalog
+
+logger = logging.getLogger(__name__)
 
 # level 0 = base (not cached) ≙ dfs.replication; higher = hotter
 DEFAULT_LEVELS = [None, StorageLevel.DISK_ONLY, StorageLevel.MEMORY_AND_DISK]
@@ -83,7 +86,10 @@ class HotSetManager:
                 total += max_mem
                 used += max_mem - rem_mem
             return 100.0 * used / total if total else 0.0
-        except Exception:  # pragma: no cover - py4j shape drift
+        except Exception:
+            # reading 0 % disables demotion, so the failure must show
+            logger.warning("storage memory probe failed; reading capacity as 0%",
+                           exc_info=True)
             return 0.0
 
     # -- the getBlockLocations hook ------------------------------------

@@ -95,7 +95,10 @@ def assign_to_centroids(
     lowest centroid id — only cscore (always double) is negated, so
     centroid ids of ANY orderable type keep the window form's
     tie-break (negating the id itself would raise CAST_INVALID_INPUT
-    under ANSI for string ids)."""
+    under ANSI for string ids). A NULL cscore (a zero-norm vector with
+    ANSI off) would sort first in that struct and win, so it takes no
+    part in the argmax; a vector with no non-NULL score gets a NULL
+    centroid."""
     c = corpus.select(F.col(id_col), _as_double(F.col(vec_col)).alias("cv"))
     cen = centroids.select(
         F.col(centroid_id), _as_double(F.col(vec_col)).alias("zv")
@@ -110,7 +113,10 @@ def assign_to_centroids(
         F.first("cv").alias("cv"),
         F.min_by(
             F.col(centroid_id),
-            F.struct((-F.col("cscore")).alias("_neg"), F.col(centroid_id)),
+            F.when(
+                F.col("cscore").isNotNull(),
+                F.struct((-F.col("cscore")).alias("_neg"), F.col(centroid_id)),
+            ),
         ).alias(centroid_id),
     ).select(id_col, "cv", centroid_id)
 

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .cache import tracked_persist
+from .catalog import read_parquet
 
 from .operators import aggregate as agg_ops
 from .operators import fieldsel, joins, sampling, sort, transforms
@@ -30,7 +31,7 @@ ORACLE: dict[str, str] = {}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -38,7 +39,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     reader rejects; read nanos as long and floor-truncate to micros —
     the same truncation DuckDB applies, so oracles agree exactly."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    e = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    e = read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
     if dict(e.dtypes).get("ts") == "bigint":
         # TIMESTAMP_NTZ via pure arithmetic: no session/host timezone
         # participates (timestamp_micros() would yield LTZ, whose

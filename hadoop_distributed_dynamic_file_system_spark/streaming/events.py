@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..catalog import read_parquet
 from ..operators import dedup as dedup_ops
 
 logger = logging.getLogger(__name__)
@@ -48,7 +49,7 @@ def on_disk_events_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
     so the stream reader takes its mandatory schema from the file it
     will actually read instead of a frozen literal."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    return read_parquet(spark, os.path.join(sf_dir, "events.parquet")).schema
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:

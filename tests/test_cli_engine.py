@@ -1,6 +1,7 @@
 """Engine facade + CLI surface (the bin/hadoop analog)."""
 
 import json
+import os
 
 from hadoop_distributed_dynamic_file_system_spark import cli
 from hadoop_distributed_dynamic_file_system_spark.engine import Engine
@@ -285,6 +286,19 @@ class TestBenchRoundInference:
         assert bench.infer_phase(d) == "close"
         (tmp_path / "BENCH_r08.json").write_text("{}")
         assert bench.infer_phase(d) == "mid"  # round 9 working runs
+
+    def test_malformed_cpu_count_falls_back(self, monkeypatch):
+        # the count is read after the timed work: a bad value must not
+        # raise and lose the finished record
+        import bench
+
+        for bad in ("", "eight", "0", "-4"):
+            monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
+            assert bench.cpu_count() == (os.cpu_count() or 8)
+        monkeypatch.delenv("SPARK_GRAFT_CPUS")
+        assert bench.cpu_count() == (os.cpu_count() or 8)
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", "6")
+        assert bench.cpu_count() == 6
 
     def test_history_csv_always_has_header(self, tmp_path):
         # ADVICE r8: an empty existing file, or a (round,label) filter

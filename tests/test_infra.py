@@ -6,13 +6,19 @@ fs/FileSystemContractBaseTest (FsShell ops), TestMultipleOutputs,
 jobcontrol tests, and the fork's DynamicReplicationMonitor behavior
 (FSNamesystem.java:4389-4560)."""
 
+import logging
 import os
+import uuid
+from types import SimpleNamespace
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from hadoop_distributed_dynamic_file_system_spark import fileops, pipe, sinks
-from hadoop_distributed_dynamic_file_system_spark.catalog import Catalog
+from hadoop_distributed_dynamic_file_system_spark.catalog import Catalog, read_parquet
 from hadoop_distributed_dynamic_file_system_spark.hotset import HotSetManager
 from hadoop_distributed_dynamic_file_system_spark.plans.jobcontrol import JobControl, State
 from hadoop_distributed_dynamic_file_system_spark.plans.jobspec import JobSpec, run_job
@@ -701,6 +707,117 @@ class TestCatalogAndHotSet:
         cat.table("nation")  # single parquet file -> 1 partition
         mgr.on_access("nation")
         assert mgr.level_of.get("nation", 0) == 0  # exempt, stayed base
+
+    def test_partition_count_matches_python_rdd(self, spark, tmp_path):
+        path = str(tmp_path / "multi")
+        spark.range(3000).repartition(3).write.parquet(path)
+        cat = Catalog(spark)
+        cat.register_path("multi", path)
+        df = cat.table("multi", track_access=False)
+        assert cat.entry("multi").num_partitions == df.rdd.getNumPartitions() == 3
+
+    def test_capacity_probe_failure_is_logged(self, caplog):
+        def broken():
+            raise RuntimeError("py4j shape drift")
+
+        sc = SimpleNamespace(_jsc=SimpleNamespace(
+            sc=lambda: SimpleNamespace(getExecutorMemoryStatus=broken)))
+        cat = SimpleNamespace(spark=SimpleNamespace(sparkContext=sc))
+        mgr = HotSetManager(cat)
+        with caplog.at_level(logging.WARNING, logger="hadoop_distributed_dynamic_file_system_spark.hotset"):
+            assert mgr._storage_memory_used_percent() == 0.0
+        [rec] = caplog.records
+        assert rec.levelno == logging.WARNING
+        assert "py4j shape drift" in str(rec.exc_info[1])
+
+
+class TestParquetSchemaMemo:
+    """read_parquet infers a schema once per session and file listing."""
+
+    @staticmethod
+    def _read(spark, path):
+        """(DataFrame, Spark jobs its construction launched)."""
+        sc = spark.sparkContext
+        group = f"read-parquet-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "read_parquet")
+        try:
+            df = read_parquet(spark, path)
+        finally:
+            sc.setJobGroup("", "")
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return df, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def test_second_read_launches_no_job(self, spark, tmp_path):
+        path = str(tmp_path / "t.parquet")
+        pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
+        first, jobs = self._read(spark, path)
+        assert jobs >= 1  # the inference job
+        second, jobs = self._read(spark, path)
+        assert jobs == 0
+        assert second.schema == first.schema == spark.read.parquet(path).schema
+        assert sorted(second.collect()) == sorted(first.collect())
+
+    def test_rewrite_at_same_path_infers_again(self, spark, tmp_path):
+        path = str(tmp_path / "t.parquet")
+        pq.write_table(pa.table({"a": [1, 2]}), path)
+        assert read_parquet(spark, path).columns == ["a"]
+        pq.write_table(pa.table({"a": ["p", "q"], "c": [1.5, 2.5]}), path)
+        df, jobs = self._read(spark, path)
+        assert jobs >= 1
+        assert df.schema == spark.read.parquet(path).schema
+        assert df.dtypes == [("a", "string"), ("c", "double")]
+
+    @pytest.mark.parametrize("conf, values, column, types", [
+        ("spark.sql.parquet.binaryAsString", ("false", "true"), "b", ("binary", "string")),
+        ("spark.sql.sources.partitionColumnTypeInference.enabled", ("true", "false"),
+         "k", ("int", "string")),
+    ])
+    def test_inference_conf_change_infers_again(self, spark, tmp_path, conf, values,
+                                                column, types):
+        part = tmp_path / "t" / "k=1"
+        part.mkdir(parents=True)
+        pq.write_table(pa.table({"b": pa.array([b"x"], pa.binary())}), str(part / "f.parquet"))
+        path = str(tmp_path / "t")
+        old = spark.conf.get(conf)
+        try:
+            spark.conf.set(conf, values[0])
+            assert dict(read_parquet(spark, path).dtypes)[column] == types[0]
+            spark.conf.set(conf, values[1])
+            df, jobs = self._read(spark, path)
+            assert jobs >= 1
+            assert dict(df.dtypes)[column] == types[1]
+        finally:
+            spark.conf.set(conf, old)
+
+    def test_missing_path_raises_like_plain_read(self, spark, tmp_path):
+        path = str(tmp_path / "absent.parquet")
+        with pytest.raises(AnalysisException) as plain:
+            spark.read.parquet(path)
+        with pytest.raises(AnalysisException) as memo:
+            read_parquet(spark, path)
+        assert memo.value.getCondition() == plain.value.getCondition() == "PATH_NOT_FOUND"
+        assert str(memo.value) == str(plain.value)
+
+    def test_partitioned_directory_matches_plain_read(self, spark, tmp_path):
+        path = str(tmp_path / "parted")
+        spark.range(40).select(
+            F.col("id"), (F.col("id") % 3).alias("k"), F.lit("v").alias("s")
+        ).write.partitionBy("k").parquet(path)
+        plain = spark.read.parquet(path)
+        read_parquet(spark, path)
+        df, jobs = self._read(spark, path)
+        assert jobs == 0
+        assert df.schema == plain.schema
+        assert sorted(df.collect()) == sorted(plain.collect())
+
+    def test_new_session_infers_again(self, spark, tmp_path):
+        path = str(tmp_path / "t.parquet")
+        pq.write_table(pa.table({"a": [1]}), path)
+        read_parquet(spark, path)
+        other = spark.newSession()
+        df, jobs = self._read(other, path)
+        assert jobs >= 1
+        assert df.schema == read_parquet(spark, path).schema
 
 
 class TestCompressionCodecs:

@@ -43,6 +43,25 @@ class TestKMeans:
         # IVF probing half the space should still recover most of top-5
         assert len(a & e) / len(e) >= 0.5
 
+    def test_zero_norm_centroid_never_wins_with_ansi_off(self, spark):
+        # with ANSI off a zero-norm vector's cosine is NULL, and NULL
+        # sorts first in min_by's (-cscore, id) struct: it must not win
+        corpus = spark.createDataFrame(
+            [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [0.0, 0.0])],
+            "vec_id long, embedding array<double>")
+        cents = spark.createDataFrame(
+            [(0, [0.0, 0.0]), (1, [1.0, 0.1]), (2, [0.1, 1.0])],
+            "centroid_id int, embedding array<double>")
+        old = spark.conf.get("spark.sql.ansi.enabled")
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        try:
+            got = {r.vec_id: r.centroid_id for r in
+                   similarity.assign_to_centroids(corpus, cents).collect()}
+        finally:
+            spark.conf.set("spark.sql.ansi.enabled", old)
+        # the zero-norm corpus vector has no score at all: NULL centroid
+        assert got == {1: 1, 2: 2, 3: None}
+
 
 class TestIvfIndex:
     def test_indexed_matches_unindexed_and_skips_routing(self, spark, embeddings):
