@@ -19,9 +19,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from hadoop_distributed_dynamic_file_system_spark.session import get_spark  # noqa: E402
-from hadoop_distributed_dynamic_file_system_spark import cache  # noqa: E402
+from hadoop_distributed_dynamic_file_system_spark import measure  # noqa: E402
 from hadoop_distributed_dynamic_file_system_spark import queries as q  # noqa: E402
 from hadoop_distributed_dynamic_file_system_spark import queries_llm  # noqa: E402,F401  (registers)
+from hadoop_distributed_dynamic_file_system_spark.measure import materialize  # noqa: E402
 
 # Headline set: one per operator family, weighted toward shuffle-heavy
 # shapes where the 100 TB design actually shows.
@@ -269,10 +270,6 @@ def cpu_count() -> int:
     return cpus if cpus > 0 else os.cpu_count() or 8
 
 
-def materialize(df) -> None:
-    df.write.mode("overwrite").format("noop").save()
-
-
 def _artifact_rounds(repo: str) -> tuple[int, int]:
     """(max CORRECTNESS round, max BENCH round) from the driver's
     artifact files — the single source both infer_round and
@@ -350,6 +347,33 @@ def update_history(
         f.writelines([header] + kept + new_rows)
 
 
+STDOUT_BUDGET = 1800
+STDOUT_FLOOR = 12
+
+
+def stdout_line(fields: dict, timings: dict[str, float]) -> str:
+    """`fields` as one compact JSON line whose "queries" holds the
+    slowest entries of `timings`, as many as fit in STDOUT_BUDGET chars
+    but never fewer than STDOUT_FLOOR. A line that is over budget even
+    at the floor is still returned, with a warning on stderr."""
+    ordered = sorted(timings.items(), key=lambda kv: -kv[1])
+
+    def line(k: int) -> str:
+        return json.dumps({**fields, "queries": dict(ordered[:k])}, separators=(",", ":"))
+
+    k = len(ordered)
+    while k > STDOUT_FLOOR and len(line(k)) > STDOUT_BUDGET:
+        k -= 1
+    out = line(k)
+    if len(out) > STDOUT_BUDGET:
+        print(
+            f"bench: stdout line is {len(out)} chars, over the {STDOUT_BUDGET}-char "
+            f"budget at the {STDOUT_FLOOR}-entry floor",
+            file=sys.stderr,
+        )
+    return out
+
+
 def main() -> None:
     # --round N / --label STR pin the round this run records under
     # (ADVICE r7: the max(CORRECTNESS_r*)+1 inference mislabels a
@@ -380,46 +404,27 @@ def main() -> None:
     # Warm-up at the smallest SF: pays whole-stage-codegen JIT for each
     # plan shape once, so timings below measure steady-state throughput
     # (on a long-lived cluster the JIT cost amortizes to zero).
-    warm_dir = "/root/testdata/sf0.001"
-    if os.path.isdir(warm_dir) and warm_dir != sf_dir:
-        for name in HEADLINE:
-            fn = q.QUERIES.get(name)
-            if fn is not None:
-                try:
-                    materialize(fn(spark, warm_dir))
-                except Exception:
-                    pass
-        cache.release_all()
-        spark.catalog.clearCache()
+    runs = {name: measure.query(spark, name) for name in HEADLINE if name in q.QUERIES}
+    for name, run in runs.items():
+        measure.warm_small(name, run, sf_dir)
+    spark.catalog.clearCache()
 
     timings: dict[str, float] = {}
     spreads: dict[str, list[float]] = {}
-    for name in HEADLINE:
-        fn = q.QUERIES.get(name)
-        if fn is None:
-            continue
-        # min-of-2 by default: single shots swing 2-3x under GC/
-        # scheduling noise (measured in round 3); the minimum is the
-        # steady-state cost the plan actually has. Variance-family
-        # entries (REPS) run 3 reps and record the MEDIAN instead —
-        # see the REPS comment. All rep times are kept in the full
+
+    def single_shot(name: str, thunk) -> None:
+        timings[name] = round(measure.time_reps(spark, thunk, 1, name).value, 3)
+
+    for name, run in runs.items():
+        # min-of-2 by default, median of 3 for the REPS entries (see
+        # measure.statistic). All rep times are kept in the full
         # record (queries_spread): a wide max/min spread on entries
         # whose code did not change marks a load-contaminated run
         # (VERDICT r8 "what's wrong #2" — the driver's mid-round
         # capture read 1.26x high from concurrent machine activity).
-        reps = []
-        for _ in range(REPS.get(name, 2)):
-            t0 = time.time()
-            materialize(fn(spark, sf_dir))
-            reps.append(time.time() - t0)
-            # Release engine-internal persists between entries: a
-            # multi-query session otherwise accumulates executor
-            # storage until eviction pressure taxes every later entry
-            # (~2× uniform inflation in r02).
-            cache.release_all()
-        stat = sorted(reps)[len(reps) // 2] if len(reps) >= 3 else min(reps)
-        timings[name] = round(stat, 3)
-        spreads[name] = [round(min(reps), 3), round(max(reps), 3)]
+        t = measure.time_reps(spark, lambda: run(sf_dir), REPS.get(name, 2), name)
+        timings[name] = round(t.value, 3)
+        spreads[name] = t.spread
 
     # TeraSort-shaped sort throughput (datagen → total-order sort),
     # scaled with the SF so the number tracks data volume
@@ -427,11 +432,10 @@ def main() -> None:
     from hadoop_distributed_dynamic_file_system_spark.operators import sort as sort_ops
 
     n_rows = int(2_000_000 * (float(sf) if sf.replace(".", "").isdigit() else 0.1))
-    materialize(sort_ops.total_order_sort(datagen.teragen(spark, 10_000), "key10"))  # warm
-    t0 = time.time()
-    materialize(sort_ops.total_order_sort(datagen.teragen(spark, n_rows), "key10"))
-    timings["terasort"] = round(time.time() - t0, 3)
-    cache.release_all()
+    measure.warm("terasort", lambda: materialize(
+        sort_ops.total_order_sort(datagen.teragen(spark, 10_000), "key10")))
+    single_shot("terasort", lambda: materialize(
+        sort_ops.total_order_sort(datagen.teragen(spark, n_rows), "key10")))
 
     # shuffle-free SMJ over bucketed tables (layout write NOT timed —
     # it's the amortized cost the layout exists to amortize)
@@ -451,13 +455,10 @@ def main() -> None:
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        t0 = time.time()
-        joined = spark.table("bench_li").join(
+        single_shot("bucketed_join", lambda: materialize(spark.table("bench_li").join(
             spark.table("bench_o"),
             F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        materialize(joined)
-        timings["bucketed_join"] = round(time.time() - t0, 3)
+        )))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         for t in ("bench_li", "bench_o"):
@@ -491,18 +492,11 @@ def main() -> None:
     try:
         for k, v in skew_confs.items():
             spark.conf.set(k, v)
-        t0 = time.time()
-        materialize(skewed.join(dim, on="k"))
-        timings["skew_join_plain"] = round(time.time() - t0, 3)
-
+        single_shot("skew_join_plain", lambda: materialize(skewed.join(dim, on="k")))
         spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-        t0 = time.time()
-        materialize(skewed.join(dim, on="k"))
-        timings["skew_join_aqe"] = round(time.time() - t0, 3)
-
-        t0 = time.time()
-        materialize(skew.salted_join(skewed, dim, ["k"], salt=32))
-        timings["skew_join_salted"] = round(time.time() - t0, 3)
+        single_shot("skew_join_aqe", lambda: materialize(skewed.join(dim, on="k")))
+        single_shot("skew_join_salted", lambda: materialize(
+            skew.salted_join(skewed, dim, ["k"], salt=32)))
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
@@ -521,12 +515,8 @@ def main() -> None:
     gm_rows = max(
         10_000, int(1_000_000 * (float(sf) if sf.replace(".", "").isdigit() else 0.1))
     )
-    gridmix(10_000)  # warm the composite plan shape once
-    cache.release_all()
-    t0 = time.time()
-    gridmix(gm_rows)
-    timings["gridmix_pipeline"] = round(time.time() - t0, 3)
-    cache.release_all()
+    measure.warm("gridmix", lambda: gridmix(10_000))  # the composite plan shape
+    single_shot("gridmix_pipeline", lambda: gridmix(gm_rows))
 
     # TestDFSIO analog (ref src/test/.../fs/TestDFSIO.java:63): bulk
     # sequential write then read of a generated table, reported both as
@@ -694,30 +684,23 @@ def main() -> None:
     # budget (compact separators): ~55 entries instead of 12.
     # Additions-only: the old top-12 is always a prefix of this window,
     # and the complete dict stays in BENCH_LOCAL_r{N}.json.
-    ordered = sorted(timings.items(), key=lambda kv: -kv[1])
-
-    def _stdout_line(k: int) -> str:
-        return json.dumps({
-            "metric": "headline_queries_total_wall",
-            "value": total,
-            "unit": "sec",
-            "queries": dict(ordered[:k]),
-            "n_queries": len(timings),
-            "contaminated": contaminated,
-            "loadavg_start": loadavg_start,
-            "io": io_stats,
-            "sf": record["sf"],
-            "round_label": label,
-            "full_record": os.path.basename(full_path),
-        }, separators=(",", ":"))
-
-    k = len(ordered)
-    while k > 12 and len(_stdout_line(k)) > 1800:
-        k -= 1
+    line = stdout_line({
+        "metric": "headline_queries_total_wall",
+        "value": total,
+        "unit": "sec",
+        "queries": {},
+        "n_queries": len(timings),
+        "contaminated": contaminated,
+        "loadavg_start": loadavg_start,
+        "io": io_stats,
+        "sf": record["sf"],
+        "round_label": label,
+        "full_record": os.path.basename(full_path),
+    }, timings)
     # stop BEFORE printing: the JSON line must be the last bytes of the
     # driver's tail capture, and session shutdown can emit log lines
     spark.stop()
-    print(_stdout_line(k))
+    print(line)
 
 
 if __name__ == "__main__":

@@ -119,18 +119,6 @@ def exact_dedup(df: DataFrame, content_cols: list[str], id_col: str) -> DataFram
 
 
 # ------------------------------------------------------------------ shingles
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingles as an array<string> Column (whitespace
-    tokenization; empty/short docs yield an empty array).
-
-    NOTE: as a single inline expression the tokenize runs once per
-    element_at reference — O(words²) per doc. Prefer
-    `exploded_shingles` on data paths; this Column form is for small
-    inputs / tests."""
-    words = F.split(text, r"\s+")
-    return _shingles_of(words, n)
-
-
 def _shingles_of(words: Column, n: int) -> Column:
     """Shingle array from an already-bound words-array Column."""
     # sequence(1, 0) would yield a DESCENDING [1,0]; short docs must
@@ -168,28 +156,13 @@ def exploded_shingles(
 # ------------------------------------------------------------------ minhash
 def _salted_md5(s: int):
     """The engine's ONE salted-hash family: x -> md5('{s}:' || x).
-    Every minhash producer (signature table, Column form, stateless
-    band keys) and every SQL oracle mirrors exactly this expression —
+    Every minhash producer (signature table, stateless band keys) and
+    every SQL oracle mirrors exactly this expression —
     a second definition anywhere risks a silent index/probe mismatch.
     Closure factory: a `lambda x, s=s:` default arg would make the
     lambda arity-2 and PySpark would bind the array INDEX to `s`."""
     prefix = F.lit(f"{s}:")
     return lambda x: F.md5(F.concat(prefix, x))
-
-
-def minhash_signature(text: Column, num_hashes: int, shingle_n: int = 3) -> list[Column]:
-    """k minhash values: for salt s, min over shingles of
-    md5(s || ':' || shingle), compared lexicographically.
-
-    The md5-hex-lexicographic hash family is engine-portable (the
-    DuckDB oracle computes the identical signature), deterministic,
-    and needs no registered UDF. Returns one Column per hash.
-    """
-    shingles = word_shingles(text, shingle_n)
-    return [
-        F.array_min(F.transform(shingles, _salted_md5(s))).alias(f"mh_{s}")
-        for s in range(num_hashes)
-    ]
 
 
 def minhash_signatures(

@@ -92,10 +92,3 @@ def select_fields(
         F.array_join(_ranges_to_array(fields, key_ranges), sep).alias(key_name),
         F.array_join(_ranges_to_array(fields, value_ranges), sep).alias(value_name),
     )
-
-
-def field_spec_columns(line_col: str, spec_list: str, sep: str = "\t") -> Column:
-    """One side of a spec as a single joined string column."""
-    ranges = parse_field_spec_list(spec_list)
-    fields = F.split(F.col(line_col), re.escape(sep), -1)
-    return F.array_join(_ranges_to_array(fields, ranges), sep)

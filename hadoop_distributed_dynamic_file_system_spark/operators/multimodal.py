@@ -17,11 +17,11 @@ REAL (no media library needed — pure byte/numpy arithmetic):
   restarts; binary PPM) and luminance statistics;
 - `wav_chunks`: RIFF/PCM16 parse with true windowed RMS.
 
-STUBBED (needs a codec, gated on REAL_DECODE_AVAILABLE / absent libs):
+NOT DECODED (needs a codec library, which the engine does not ship):
 pixel-level work on the remaining exotic profiles (progressive/
-arithmetic JPEG, WebP, resize re-encode, video frame extraction) —
-those keep the deterministic md5-derived fakes so the plumbing stays
-testable in this container.
+arithmetic JPEG, WebP, 16-bit/palette PNG) yields null features;
+resize re-encode and video frame extraction keep deterministic
+md5-derived fakes so the plumbing stays testable.
 
 Scale notes: mapInPandas streams Arrow batches; memory is bounded by
 `spark.sql.execution.arrow.maxRecordsPerBatch`, decode parallelism by
@@ -41,15 +41,6 @@ DECODE_SCHEMA = (
     "doc_id bigint, n_bytes bigint, format string, width int, height int"
 )
 
-# flip to use a real decoder when the media libs exist
-REAL_DECODE_AVAILABLE = False
-try:  # pragma: no cover - not present in this container
-    import PIL.Image  # noqa: F401
-
-    REAL_DECODE_AVAILABLE = True
-except Exception:
-    pass
-
 
 # ----------------------------------------------------------- real parsers
 # Uncompressed/self-describing containers are pure byte arithmetic — no
@@ -60,8 +51,8 @@ except Exception:
 # integer arithmetic — _lzw_decode below). Since round 7 baseline
 # sequential JPEG decodes REAL too (jpeg_pixels — pure-numpy
 # canonical Huffman + dequantize + IDCT); only progressive/
-# arithmetic/hierarchical JPEG profiles and WebP still need PIL and
-# stay behind REAL_DECODE_AVAILABLE.
+# arithmetic/hierarchical JPEG profiles and WebP would need a codec
+# library, and they decode to nulls.
 
 
 def make_bmp(width: int, height: int, rgb: tuple[int, int, int]) -> bytes:
@@ -353,8 +344,7 @@ def decode_media_metadata(binaries: DataFrame) -> DataFrame:
 def image_features(binaries: DataFrame) -> DataFrame:
     """REAL pixel features for decodable rasters (BMP + 8-bit PNG, via
     raster_pixels): mean/std luminance (ITU-R 601) per image; nulls
-    for formats whose raster needs a codec (JPEG routes through the
-    PIL gate)."""
+    for formats whose raster needs a codec library."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -397,11 +387,8 @@ def compressed_raster_features(binaries: DataFrame) -> DataFrame:
     8-bit gray/truecolor PNG (stdlib zlib), non-interlaced GIF (pure
     LZW), baseline sequential JPEG (pure-numpy Huffman+IDCT,
     jpeg_pixels), BMP, PPM — in every container; only the exotic
-    residue (progressive JPEG, WebP, 16-bit/palette PNG) still needs
-    a codec library and runs through the PIL gate. Without PIL those
-    rows yield nulls — the plumbing (schema, batching, null
-    discipline) is identical either way, so flipping the gate changes
-    values, not the plan.
+    residue (progressive JPEG, WebP, 16-bit/palette PNG) needs a
+    codec library and yields nulls.
 
     Raises nothing on malformed payloads (nulls, like image_features):
     a poison row must not fail a 100 TB decode job."""
@@ -414,17 +401,7 @@ def compressed_raster_features(binaries: DataFrame) -> DataFrame:
             for b in pdf["payload"]:
                 b = bytes(b)
                 try:
-                    try:
-                        px = raster_pixels(b).astype(np.float64)
-                    except Exception:
-                        if not REAL_DECODE_AVAILABLE:
-                            raise ValueError("no codec library in environment")
-                        import io as _io
-
-                        import PIL.Image
-
-                        img = PIL.Image.open(_io.BytesIO(b)).convert("RGB")
-                        px = np.asarray(img, dtype=np.float64)
+                    px = raster_pixels(b).astype(np.float64)
                     lum = (
                         0.299 * px[:, :, 0]
                         + 0.587 * px[:, :, 1]
@@ -523,9 +500,7 @@ def attach_binary(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 def _fake_decode(payload: bytes) -> tuple[str, int, int]:
     """Deterministic fake 'image header parse': md5-derived dims.
 
-    STUB: a real implementation would be PIL.Image.open(BytesIO(b));
-    raise NotImplementedError there if called with REAL_DECODE_AVAILABLE
-    unset and fakes disallowed.
+    STUB: the real header parse is decode_media_metadata.
     """
     h = hashlib.md5(payload).hexdigest()
     width = int(h[:4], 16) % 1920 + 1
@@ -1198,9 +1173,9 @@ def audio_near_pairs(
 # PNG's only mandatory compression is zlib (RFC 1950 inside the IDAT
 # chunks) and zlib ships in the standard library — so 8-bit
 # gray/truecolor PNG is decodable with pure byte arithmetic + numpy,
-# no media library. This moves PNG from the "needs PIL" tier into the
-# REAL tier (baseline JPEG followed in round 7 — jpeg_pixels below —
-# leaving only progressive/arithmetic profiles PIL-gated).
+# no media library. This moves PNG from the "needs a codec" tier into
+# the REAL tier (baseline JPEG followed in round 7 — jpeg_pixels below —
+# leaving only progressive/arithmetic profiles undecoded).
 
 
 def _png_paeth(a: int, b: int, c: int) -> int:

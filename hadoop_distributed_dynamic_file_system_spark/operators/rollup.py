@@ -64,8 +64,3 @@ def merge_rollups(
     for c in sketch_cols or []:
         aggs.append(F.hll_union_agg(c).alias(c))
     return u.groupBy(*dims).agg(*aggs)
-
-
-def estimate_distinct(rollup: DataFrame, sketch_col: str, out: str) -> DataFrame:
-    """Read-time HLL estimate of a sketch column."""
-    return rollup.withColumn(out, F.hll_sketch_estimate(F.col(sketch_col)))

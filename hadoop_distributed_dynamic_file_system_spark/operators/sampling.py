@@ -47,8 +47,3 @@ def md5_bucket(key: Column, num_hex_digits: int = 4) -> Column:
 def md5_filter(df: DataFrame, key_col: str, frequency: int) -> DataFrame:
     """MD5Filter: keep rows where md5-hash-bucket(key) % f == 0."""
     return df.filter(md5_bucket(F.col(key_col)) % frequency == 0)
-
-
-def sample_fraction(df: DataFrame, fraction: float, seed: int = 42) -> DataFrame:
-    """InputSampler.RandomSampler analog — probabilistic, seeded."""
-    return df.sample(fraction=fraction, seed=seed)

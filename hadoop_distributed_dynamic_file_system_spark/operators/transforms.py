@@ -20,11 +20,10 @@ All built-ins — no Python UDFs in any hot path.
 
 from __future__ import annotations
 
-import re
 from functools import reduce
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -125,8 +124,3 @@ def chain(*stages: Callable[[DataFrame], DataFrame]) -> Callable[[DataFrame], Da
     def run(df: DataFrame) -> DataFrame:
         return reduce(lambda acc, f: f(acc), stages, df)
     return run
-
-
-def field_count(df: DataFrame, line_col: str, sep: str) -> DataFrame:
-    """Utility: number of sep-delimited fields per line."""
-    return df.withColumn("n_fields", F.size(F.split(F.col(line_col), re.escape(sep), -1)))

@@ -35,11 +35,6 @@ def array_of(element: str) -> T.ArrayType:
     return T.ArrayType(WRITABLE_TO_SPARK[element])
 
 
-def two_d_array_of(element: str) -> T.ArrayType:
-    """TwoDArrayWritable analog."""
-    return T.ArrayType(T.ArrayType(WRITABLE_TO_SPARK[element]))
-
-
 def map_writable() -> T.MapType:
     """MapWritable (heterogeneous runtime-typed) — modelled as a string
     map; truly dynamic unions should become structs of nullable fields

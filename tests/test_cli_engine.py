@@ -323,6 +323,33 @@ class TestBenchRoundInference:
         assert set(lines[1:]) == {"9,q,2.0,r09-mid-inferred", "9,q,3.0,r09-final"}
 
 
+class TestBenchStdoutLine:
+    FIELDS = {"metric": "headline_queries_total_wall", "value": 1.0,
+              "queries": {}, "io": {}, "round_label": "r13"}
+
+    def test_packs_slowest_prefix_under_budget(self, capsys):
+        import bench
+
+        timings = {f"entry_{i:03d}": round(0.1 + i * 0.037, 3) for i in range(150)}
+        line = bench.stdout_line(self.FIELDS, timings)
+        assert len(line) <= bench.STDOUT_BUDGET
+        got = list(json.loads(line)["queries"])
+        slowest = sorted(timings, key=lambda k: -timings[k])
+        assert got == slowest[:len(got)] and len(got) > bench.STDOUT_FLOOR
+        assert list(json.loads(line)) == list(self.FIELDS)
+        assert capsys.readouterr().err == ""
+
+    def test_oversized_io_block_warns(self, capsys):
+        import bench
+
+        fields = {**self.FIELDS, "io": {"pad": "x" * 2000}}
+        timings = {f"entry_{i:03d}": float(i) for i in range(150)}
+        line = bench.stdout_line(fields, timings)
+        assert len(json.loads(line)["queries"]) == bench.STDOUT_FLOOR
+        err = capsys.readouterr().err
+        assert f"stdout line is {len(line)} chars" in err
+
+
 class TestShippedScripts:
     def test_streaming_file_ships_mapper_script(self, spark, tmp_path):
         # Hadoop Streaming -file: the mapper is a LOCAL script referenced

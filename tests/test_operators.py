@@ -1118,8 +1118,9 @@ class TestCountMinSketch:
 
 
 class TestCompressedRasterDecode:
-    """The PIL-gated decode tier: real in environments that ship a
-    codec library, all-nulls (same plan/schema) where they don't."""
+    """The compressed-raster decode tier: real for every container
+    raster_pixels decodes, nulls for malformed payloads and for
+    profiles that would need a codec library."""
 
     def test_nulls_on_truncated_payload_either_gate_state(self, spark):
         from hadoop_distributed_dynamic_file_system_spark.operators import (
@@ -1127,7 +1128,7 @@ class TestCompressedRasterDecode:
         )
 
         # payload that LOOKS like a PNG but is truncated: must yield
-        # nulls under BOTH gate states (malformed -> null contract)
+        # nulls (malformed -> null contract)
         df = spark.createDataFrame(
             [(1, b"\x89PNG\r\n\x1a\n_truncated_")],
             "doc_id long, payload binary",
@@ -1135,28 +1136,6 @@ class TestCompressedRasterDecode:
         rows = mm.compressed_raster_features(df).collect()
         assert len(rows) == 1
         assert rows[0].mean_luma is None and rows[0].std_luma is None
-
-    def test_real_png_decode_with_pil(self, spark):
-        """Green wherever PIL exists: a solid-color PNG decodes to its
-        exact luminance with zero variance. Skipped (gate off) in
-        containers without a codec library."""
-        from hadoop_distributed_dynamic_file_system_spark.operators import (
-            multimodal as mm,
-        )
-
-        if not mm.REAL_DECODE_AVAILABLE:
-            pytest.skip("PIL not available in this container (gate off)")
-        import io
-
-        import PIL.Image
-
-        buf = io.BytesIO()
-        PIL.Image.new("RGB", (6, 4), (100, 100, 100)).save(buf, format="PNG")
-        df = spark.createDataFrame(
-            [(1, buf.getvalue())], "doc_id long, payload binary"
-        )
-        rows = mm.compressed_raster_features(df).collect()
-        assert rows[0].mean_luma == 100.0 and rows[0].std_luma == 0.0
 
 
 class TestWinnowFingerprints:

@@ -167,6 +167,42 @@ class TestDsirImportance:
         )._jdf.queryExecution().executedPlan().toString()
         assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
 
+    def _flagged(self, spark):
+        # doc 4's NULL tag must count as non-target in both forms, and
+        # the non-target vocabulary leaves buckets unseen in the target
+        df = spark.createDataFrame(
+            [(1, "spark shuffle spark partition", "t"),
+             (2, "cat dog fish bird", "o"),
+             (3, "broadcast shuffle join", "t"),
+             (4, "mouse cat spark", None)],
+            "doc_id long, text string, tag string",
+        )
+        return df, F.col("tag") == "t"
+
+    def test_fused_weights_equal_two_pass(self, spark):
+        df, flag = self._flagged(spark)
+        fused = wq.dsir_bucket_weights(df, "text", target_flag=flag)
+        twopass = wq.dsir_bucket_weights(df, "text", df.filter(flag))
+        assert sorted(fused.collect()) == sorted(twopass.collect())
+
+    def test_fused_importance_equals_two_pass(self, spark):
+        df, flag = self._flagged(spark)
+        cols = ["doc_id", "n_tokens", "avg_llr"]
+        fused = wq.dsir_importance(df, "doc_id", "text", target_flag=flag)
+        twopass = wq.dsir_importance(df, "doc_id", "text", df.filter(flag))
+        assert sorted(fused.select(cols).collect()) == sorted(
+            twopass.select(cols).collect()
+        )
+
+    def test_exactly_one_target_form(self, spark):
+        df, flag = self._flagged(spark)
+        for fn, args in ((wq.dsir_bucket_weights, ("text",)),
+                         (wq.dsir_importance, ("doc_id", "text"))):
+            with pytest.raises(ValueError, match="exactly one"):
+                fn(df, *args)
+            with pytest.raises(ValueError, match="exactly one"):
+                fn(df, *args, df.filter(flag), target_flag=flag)
+
 
 class TestEmptyDocRobustness:
     def test_gopher_handles_empty_and_whitespace_docs(self, spark):

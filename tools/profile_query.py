@@ -1,10 +1,10 @@
 """Per-query profiler for the optimization rounds.
 
-For each named query: run it through the bench's noop-sink methodology
-(warm once at sf0.001, then N timed reps at the target SF), report
-per-rep wall seconds, the number of Spark jobs per rep (scheduling
-overhead is the local-mode tax; fewer jobs = fewer serial barriers),
-and optionally dump `.explain("formatted")` to a file.
+For each named query: run it through the bench's measurement loop
+(measure.py: warm once at sf0.001, then N timed reps at the target SF),
+report per-rep wall seconds, the number of Spark jobs per rep
+(scheduling overhead is the local-mode tax; fewer jobs = fewer serial
+barriers), and optionally dump `.explain("formatted")` to a file.
 
 Usage:
   python tools/profile_query.py [--sf DIR] [--reps N] [--plan-dir DIR] q1 q2 ...
@@ -16,12 +16,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hadoop_distributed_dynamic_file_system_spark.session import get_spark  # noqa: E402
-from hadoop_distributed_dynamic_file_system_spark import cache  # noqa: E402
+from hadoop_distributed_dynamic_file_system_spark import cache, measure  # noqa: E402
 from hadoop_distributed_dynamic_file_system_spark import queries as q  # noqa: E402
 from hadoop_distributed_dynamic_file_system_spark import queries_llm  # noqa: E402,F401
 
@@ -57,8 +56,6 @@ def main() -> None:
             if k in q.QUERIES]
 
     spark = get_spark("profile")
-    sc = spark.sparkContext
-    warm_dir = "/root/testdata/sf0.001"
 
     out = {}
     for name in names:
@@ -66,13 +63,8 @@ def main() -> None:
         if fn is None:
             print(f"!! unknown query {name}", file=sys.stderr)
             continue
-        # warm: JIT + plan shape, off the clock
-        if os.path.isdir(warm_dir) and warm_dir != sf_dir:
-            try:
-                fn(spark, warm_dir).write.mode("overwrite").format("noop").save()
-            except Exception as exc:  # noqa: BLE001
-                print(f"!! warm {name}: {exc}", file=sys.stderr)
-            cache.release_all()
+        run = measure.query(spark, name)
+        measure.warm_small(name, run, sf_dir)
         if plan_dir:
             os.makedirs(plan_dir, exist_ok=True)
             try:
@@ -84,18 +76,10 @@ def main() -> None:
             except Exception as exc:  # noqa: BLE001
                 print(f"!! plan {name}: {exc}", file=sys.stderr)
             cache.release_all()
-        times, jobs = [], []
-        for i in range(reps):
-            group = f"prof-{name}-{i}"
-            sc.setJobGroup(group, name)
-            t0 = time.time()
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            times.append(round(time.time() - t0, 3))
-            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
-            sc.setJobGroup("", "")
-            cache.release_all()
-        out[name] = {"reps": times, "min": min(times), "jobs": jobs}
-        print(f"{name:40s} min={min(times):7.3f}  reps={times}  jobs={jobs}",
+        t = measure.time_reps(spark, lambda: run(sf_dir), reps, name)
+        times = [round(x, 3) for x in t.reps]
+        out[name] = {"reps": times, "min": min(times), "jobs": t.jobs}
+        print(f"{name:40s} min={min(times):7.3f}  reps={times}  jobs={t.jobs}",
               flush=True)
     print(json.dumps(out))
     spark.stop()

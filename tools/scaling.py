@@ -10,7 +10,6 @@ job overhead dominates small SFs); anything super-linear is a red flag
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -153,31 +152,23 @@ SFS = ["sf0.001", "sf0.01", "sf0.1"]
 
 
 def main() -> None:
-    from hadoop_distributed_dynamic_file_system_spark import cache
-    from hadoop_distributed_dynamic_file_system_spark import queries as q
-    from hadoop_distributed_dynamic_file_system_spark import queries_llm  # noqa: F401
+    from hadoop_distributed_dynamic_file_system_spark import measure
     from hadoop_distributed_dynamic_file_system_spark.session import get_spark
 
     spark = get_spark("scaling", master="local[32]")
     # warm the JVM/codegen path so sf0.001 isn't charged the session cost
-    q.QUERIES["wordcount"](spark, "/root/testdata/sf0.01").write.mode(
-        "overwrite"
-    ).format("noop").save()
+    wordcount = measure.query(spark, "wordcount")
+    measure.warm("wordcount", lambda: wordcount(f"{measure.TESTDATA}/sf0.01"))
 
     rows = []
     for name in QUERIES:
-        times = []
-        for sf in SFS:
-            best = float("inf")
-            for _ in range(2):  # min-of-2: single shots swing 2-3x
-                t0 = time.time()
-                q.QUERIES[name](spark, f"/root/testdata/{sf}").write.mode(
-                    "overwrite"
-                ).format("noop").save()
-                best = min(best, time.time() - t0)
-                cache.release_all()  # engine-internal persists: one
-                # measurement's cache must not tax the next
-            times.append(best)
+        run = measure.query(spark, name)
+        times = [
+            measure.time_reps(
+                spark, lambda sf=sf: run(f"{measure.TESTDATA}/{sf}"), 2, name
+            ).value
+            for sf in SFS
+        ]
         rows.append((name, times))
         print(name, [round(t, 2) for t in times])
 

@@ -8,7 +8,6 @@ to a real cluster. Writes STRESS.md. Regenerate: `python tools/stress.py`.
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -16,7 +15,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     from pyspark.sql import functions as F
 
-    from hadoop_distributed_dynamic_file_system_spark import cache, datagen
+    from hadoop_distributed_dynamic_file_system_spark import cache, datagen, measure
     from hadoop_distributed_dynamic_file_system_spark.operators import (
         dedup, graph, sort as sort_ops,
     )
@@ -31,18 +30,12 @@ def main() -> None:
     rows = []
 
     def bench(name, n_rows, fn, warm_fn=None, reps=2):
-        # min-of-reps, same discipline as bench.py/tools/scaling.py:
+        # measure.time_reps, the loop bench.py and tools/scaling.py use:
         # single shots swing 2-3x (GC, scheduling, cold JIT) and a
         # round-6 single-shot table showed +-80% on unchanged shapes
         if warm_fn is not None:
-            warm_fn()
-            cache.release_all()
-        dt = float("inf")
-        for _ in range(reps):
-            t0 = time.time()
-            fn()
-            dt = min(dt, time.time() - t0)
-            cache.release_all()
+            measure.warm(name, warm_fn)
+        dt = measure.time_reps(spark, fn, reps, name).value
         rows.append((name, n_rows, dt, 1e6 * dt / n_rows))
         print(f"{name}: {n_rows:,} rows in {dt:.1f}s "
               f"({1e6 * dt / n_rows:.2f} us/row)")
