@@ -5,8 +5,10 @@ EWMA of file access *time* and adjusts replication dynamically
 (reference: src/hdfs/org/apache/hadoop/hdfs/server/namenode/
 FSDirectory.java:1341-1386 for the EWMA, FSNamesystem.java:4389-4560 for
 the monitor). Here the namespace is a dict of parquet-backed DataFrames;
-every `table()` call updates the same EWMA, which `hotset.HotSetManager`
-uses to promote/demote cache levels.
+every `table()` call updates the same EWMA. Each `TableEntry` is the one
+record of its table's heat and hot-set level: `hotset.HotSetManager`
+reads them to decide, and `Catalog.set_level` is the only code that
+persists or unpersists a table.
 
 EWMA formula (FSDirectory.java:1365-1373, replicated exactly):
     new = (1 - alpha) * old + alpha * now
@@ -16,6 +18,7 @@ updates closer together than the precision are skipped.
 
 from __future__ import annotations
 
+import logging
 import os
 import time
 import weakref
@@ -23,6 +26,7 @@ from dataclasses import dataclass, field
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
 TPCH_TABLES = (
     "region",
@@ -38,8 +42,17 @@ TPCH_TABLES = (
 )
 
 # Reference defaults: dfs.dynamic.alpha=0.5, precision clamp 30 s.
-DEFAULT_ALPHA = 0.5
-DEFAULT_PRECISION_MS = 30_000
+ALPHA = 0.5
+PRECISION_MS = 30_000
+
+# Hot-set level -> persist level. Level 0 = base (not cached) ≙
+# dfs.replication; higher = hotter. The reference's min=3..max=6
+# replication ladder maps onto the meaningful Spark storage tiers.
+LEVELS = (None, StorageLevel.DISK_ONLY, StorageLevel.MEMORY_AND_DISK)
+
+# The fork's NameNode.allocationLog (NameNode.java:126): one record per
+# level change and per capacity-triggered demotion pass.
+allocation_log = logging.getLogger(f"{__package__}.allocation")
 
 
 # Session confs that change what parquet schema inference returns
@@ -113,45 +126,42 @@ class TableEntry:
     access_time_ewma_ms: float = 0.0
     access_count: int = 0
     num_partitions: int = 1
-    cache_level: str | None = None  # managed by hotset.HotSetManager
+    level: int = 0  # hot-set level, changed only by Catalog.set_level
     df: DataFrame | None = field(default=None, repr=False)
+
+    @property
+    def cache_level(self) -> str | None:
+        """The persist level this entry's hot-set level maps to."""
+        return str(LEVELS[self.level]) if self.level else None
 
 
 class Catalog:
     """Registry of named parquet tables with access-EWMA tracking."""
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        alpha: float = DEFAULT_ALPHA,
-        precision_ms: int = DEFAULT_PRECISION_MS,
-        clock=None,
-    ) -> None:
+    def __init__(self, spark: SparkSession, clock=None) -> None:
         self.spark = spark
-        self.alpha = alpha
-        self.precision_ms = precision_ms
         self._clock = clock or (lambda: time.time() * 1000.0)
         self._tables: dict[str, TableEntry] = {}
 
     # -- registration ------------------------------------------------
     def register_path(self, name: str, path: str) -> None:
+        """Register `name`, replacing any earlier table of that name. The
+        replaced entry drops to level 0 while it is still registered,
+        which frees its cached copy (the reference's delete hook,
+        FSNamesystem.java:301-303)."""
+        old = self._tables.get(name)
+        if old is not None:
+            self.set_level(old, 0)
         self._tables[name] = TableEntry(name=name, path=path)
-
-    def register_dir(self, sf_dir: str, names=TPCH_TABLES, as_views: bool = False) -> None:
-        """Register every `<name>.parquet` under a testdata dir."""
-        for name in names:
-            p = os.path.join(sf_dir, f"{name}.parquet")
-            if os.path.exists(p):
-                self.register_path(name, p)
-                if as_views:
-                    # registration is not an access — don't heat the EWMA
-                    self.table(name, track_access=False).createOrReplaceTempView(name)
 
     def names(self) -> list[str]:
         return sorted(self._tables)
 
     def entry(self, name: str) -> TableEntry:
         return self._tables[name]
+
+    def entries(self) -> list[TableEntry]:
+        return list(self._tables.values())
 
     # -- access path (the getBlockLocations analog) --------------------
     def table(self, name: str, track_access: bool = True) -> DataFrame:
@@ -166,20 +176,29 @@ class Catalog:
 
     def _touch(self, ent: TableEntry) -> None:
         now = self._clock()
-        # Precision clamp: skip updates within `precision_ms` of the last
+        # Precision clamp: skip updates within `PRECISION_MS` of the last
         # EWMA value (FSDirectory.java:1352 keeps precision <= 30 s).
-        if ent.access_count > 0 and now - ent.access_time_ewma_ms < self.precision_ms:
+        if ent.access_count > 0 and now - ent.access_time_ewma_ms < PRECISION_MS:
             ent.access_count += 1
             return
         if ent.access_count == 0:
             ent.access_time_ewma_ms = now
         else:
-            ent.access_time_ewma_ms = (
-                (1.0 - self.alpha) * ent.access_time_ewma_ms + self.alpha * now
-            )
+            ent.access_time_ewma_ms = (1.0 - ALPHA) * ent.access_time_ewma_ms + ALPHA * now
         ent.access_count += 1
 
-    # -- convenience ---------------------------------------------------
-    def sql(self, query: str) -> DataFrame:
-        """Run SQL against registered views (register_dir(as_views=True))."""
-        return self.spark.sql(query)
+    # -- the one persist point -------------------------------------------
+    def set_level(self, ent: TableEntry, level: int) -> None:
+        """Move a table to hot-set `level`, re-persisting it at that
+        level's storage. The only code that persists or unpersists a
+        catalog table."""
+        if level == ent.level:
+            return
+        df = self.table(ent.name, track_access=False)
+        if ent.level:
+            df.unpersist()
+        if level:
+            df.persist(LEVELS[level])
+        allocation_log.info("%s: level %d -> %d (ewma %.0f ms)",
+                            ent.name, ent.level, level, ent.access_time_ewma_ms)
+        ent.level = level

@@ -11,9 +11,11 @@ manager its promotion/demotion hook — queries just use DataFrames.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
-from .catalog import Catalog
+from .catalog import TPCH_TABLES, Catalog
 from .hotset import HotSetManager
 from .session import get_spark
 
@@ -30,7 +32,10 @@ class Engine:
         self.catalog = Catalog(self.spark)
         self.hotset = HotSetManager(self.catalog) if hot_set else None
         if data_dir:
-            self.catalog.register_dir(data_dir, as_views=True)
+            for name in TPCH_TABLES:
+                path = os.path.join(data_dir, f"{name}.parquet")
+                if os.path.exists(path):
+                    self.register(name, path)
 
     # -- the getBlockLocations-shaped access path ----------------------
     def table(self, name: str) -> DataFrame:
@@ -47,12 +52,15 @@ class Engine:
         return self.spark.sql(query)
 
     def register(self, name: str, path: str) -> None:
+        """(Re-)register a parquet table and its SQL view, the only code
+        that creates one. Registration is not an access: it does not
+        heat the table."""
         self.catalog.register_path(name, path)
         self.catalog.table(name, track_access=False).createOrReplaceTempView(name)
 
     def heat_report(self) -> list[dict]:
-        """Per-table access heat + current cache level (the
-        allocationLog analog, NameNode.java:126)."""
+        """Per-table access heat + current cache level; the changes
+        themselves go to `catalog.allocation_log`."""
         out = []
         for name in self.catalog.names():
             e = self.catalog.entry(name)
@@ -61,7 +69,7 @@ class Engine:
                     "table": name,
                     "accesses": e.access_count,
                     "ewma_ms": e.access_time_ewma_ms,
-                    "level": (self.hotset.level_of.get(name, 0) if self.hotset else 0),
+                    "level": e.level,
                     "cached_as": e.cache_level,
                 }
             )

@@ -19,9 +19,9 @@ REAL (no media library needed — pure byte/numpy arithmetic):
 
 NOT DECODED (needs a codec library, which the engine does not ship):
 pixel-level work on the remaining exotic profiles (progressive/
-arithmetic JPEG, WebP, 16-bit/palette PNG) yields null features;
-resize re-encode and video frame extraction keep deterministic
-md5-derived fakes so the plumbing stays testable.
+arithmetic JPEG, WebP, 16-bit/palette PNG) yields null features.
+`decode_metadata` keeps md5-derived fake dimensions for the one query
+that still uses it.
 
 Scale notes: mapInPandas streams Arrow batches; memory is bounded by
 `spark.sql.execution.arrow.maxRecordsPerBatch`, decode parallelism by
@@ -429,7 +429,7 @@ def wav_chunks(binaries: DataFrame, chunk_samples: int = 48000) -> DataFrame:
     """REAL audio chunking for PCM16 WAV payloads: RIFF parse + true
     windowed RMS over the sample stream (numpy int16) — the fan-out a
     speech pipeline runs before per-chunk transcribe/embed. Non-WAV
-    payloads fall back to the byte-halved stub semantics."""
+    payloads fall back to byte-halved samples with md5-derived rms."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -441,7 +441,7 @@ def wav_chunks(binaries: DataFrame, chunk_samples: int = 48000) -> DataFrame:
                 decoded = False
                 if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
                     # Malformed RIFF (no data chunk, truncated stream)
-                    # must fall through to the stub path, not raise
+                    # must fall through to the fallback, not raise
                     # KeyError inside the executor (mirrors sniff_media).
                     try:
                         m = _wav_meta(b)
@@ -469,7 +469,7 @@ def wav_chunks(binaries: DataFrame, chunk_samples: int = 48000) -> DataFrame:
                         decoded = True
                     except Exception:
                         decoded = False
-                if not decoded:  # non-audio payload: stub fan-out semantics
+                if not decoded:  # non-audio payload: byte-halved fallback
                     n_samples = max(1, len(b) // 2)
                     for c, start in enumerate(
                         range(0, n_samples, chunk_samples)
@@ -530,115 +530,6 @@ def decode_metadata(binaries: DataFrame) -> DataFrame:
             )
 
     return binaries.mapInPandas(batches, schema=DECODE_SCHEMA)
-
-
-def resize_stub(binaries: DataFrame, max_side: int = 256) -> DataFrame:
-    """Resize operator shape: payload→payload with target dims.
-
-    STUB: passes payload through untouched and records the target
-    box; a real version decodes, resizes, re-encodes per batch.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = pdf.copy()
-            out["target_side"] = max_side
-            yield out
-
-    return binaries.mapInPandas(
-        batches, schema="doc_id bigint, payload binary, target_side int"
-    )
-
-
-def frame_sample_stub(binaries: DataFrame, every_n: int = 30) -> DataFrame:
-    """Video frame-sampling shape: payload → (doc_id, frame_no, frame).
-
-    STUB: emits md5-sliced pseudo-frames so downstream plumbing
-    (explode-like fan-out from mapInPandas) is exercised; a real
-    version seeks the container every_n frames.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, frames, nos = [], [], []
-            for _, row in pdf.iterrows():
-                n_frames = max(1, len(row["payload"]) // 512)
-                for i in range(0, n_frames, every_n):
-                    ids.append(row["doc_id"])
-                    nos.append(i)
-                    frames.append(hashlib.md5(row["payload"] + str(i).encode()).digest())
-            yield pd.DataFrame({"doc_id": ids, "frame_no": nos, "frame": frames})
-
-    return binaries.mapInPandas(
-        batches, schema="doc_id bigint, frame_no int, frame binary"
-    )
-
-
-def audio_chunk_stub(
-    binaries: DataFrame, chunk_samples: int = 48000
-) -> DataFrame:
-    """Audio chunking shape: payload → (doc_id, chunk_no, n_samples,
-    rms) — fixed-length windows over the sample stream, the fan-out a
-    speech pipeline runs before per-chunk transcribe/embed.
-
-    STUB: samples = payload halved as 16-bit PCM; rms is md5-derived.
-    A real version is soundfile/torchaudio decode + true windowed rms;
-    the mapInPandas fan-out, schema, and chunk arithmetic are real.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, nos, lens, rms = [], [], [], []
-            for _, row in pdf.iterrows():
-                n_samples = max(1, len(row["payload"]) // 2)
-                for c, start in enumerate(range(0, n_samples, chunk_samples)):
-                    ids.append(row["doc_id"])
-                    nos.append(c)
-                    lens.append(min(chunk_samples, n_samples - start))
-                    h = hashlib.md5(row["payload"] + str(c).encode()).hexdigest()
-                    rms.append((int(h[:8], 16) % 10**6) / 10**6)
-            yield pd.DataFrame(
-                {"doc_id": ids, "chunk_no": nos, "n_samples": lens, "rms": rms}
-            )
-
-    return binaries.mapInPandas(
-        batches, schema="doc_id bigint, chunk_no int, n_samples int, rms double"
-    )
-
-
-def embed_stub(binaries: DataFrame, dim: int = 16) -> DataFrame:
-    """Media → embedding extraction shape: payload → unit-norm
-    array<float> — the bridge from the multimodal family into the
-    similarity/ANN family (the output plugs directly into
-    similarity.brute_force_topk / ivf_topk).
-
-    STUB: md5-seeded deterministic pseudo-embedding; a real version
-    runs a vision/audio encoder per Arrow batch (exactly where
-    GPU-batched inference slots in).
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            vecs = []
-            for b in pdf["payload"]:
-                h = hashlib.md5(b).digest()
-                raw = [
-                    int.from_bytes(h[2 * i: 2 * i + 2], "big") / 65535.0 - 0.5
-                    for i in range(min(dim, 8))
-                ]
-                while len(raw) < dim:
-                    h = hashlib.md5(h).digest()
-                    raw.extend(
-                        int.from_bytes(h[2 * i: 2 * i + 2], "big") / 65535.0 - 0.5
-                        for i in range(min(dim - len(raw), 8))
-                    )
-                norm = sum(x * x for x in raw) ** 0.5 or 1.0
-                vecs.append([float(x / norm) for x in raw])
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "embedding": vecs})
-
-    return binaries.mapInPandas(
-        batches, schema="doc_id bigint, embedding array<float>"
-    )
 
 
 def ahash_codes(binaries: DataFrame, hash_side: int = 8) -> DataFrame:

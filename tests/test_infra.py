@@ -18,7 +18,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from hadoop_distributed_dynamic_file_system_spark import fileops, pipe, sinks
-from hadoop_distributed_dynamic_file_system_spark.catalog import Catalog, read_parquet
+from hadoop_distributed_dynamic_file_system_spark.catalog import LEVELS, Catalog, read_parquet
+from hadoop_distributed_dynamic_file_system_spark.engine import Engine
 from hadoop_distributed_dynamic_file_system_spark.hotset import HotSetManager
 from hadoop_distributed_dynamic_file_system_spark.plans.jobcontrol import JobControl, State
 from hadoop_distributed_dynamic_file_system_spark.plans.jobspec import JobSpec, run_job
@@ -603,10 +604,19 @@ class TestCatalogAndHotSet:
         yield
         spark.catalog.clearCache()
 
-    def _catalog(self, spark, sf_dir, clock):
+    TOP = len(LEVELS) - 1
+
+    def _catalog(self, spark, sf_dir, clock, names=("nation", "orders", "lineitem")):
         cat = Catalog(spark, clock=clock)
-        cat.register_dir(sf_dir, names=("nation", "orders", "lineitem"))
+        for name in names:
+            cat.register_path(name, os.path.join(sf_dir, f"{name}.parquet"))
         return cat
+
+    def _read(self, cat, mgr, t, name, at_s):
+        t["now"] = at_s * 1000.0
+        cat.table(name)
+        cat.entry(name).num_partitions = 4  # sf0.001 files are 1 block
+        mgr.on_access(name)
 
     def test_ewma_formula_and_precision_clamp(self, spark, sf_dir):
         t = {"now": 1_000_000.0}
@@ -623,29 +633,105 @@ class TestCatalogAndHotSet:
         assert e.access_time_ewma_ms == pytest.approx(1_030_000.0)
         assert e.access_count == 3
 
-    def test_promotion_and_cold_half_demotion(self, spark, sf_dir):
+    def test_promotion_and_cold_half_demotion(self, spark, sf_dir, caplog):
         t = {"now": 0.0}
         usage = {"pct": 10.0}
         cat = self._catalog(spark, sf_dir, clock=lambda: t["now"])
         mgr = HotSetManager(cat, usage_fn=lambda: usage["pct"])
+        caplog.set_level(logging.INFO, logger="hadoop_distributed_dynamic_file_system_spark.allocation")
 
-        for name in ("orders", "lineitem"):
-            t["now"] += 100_000
-            cat.table(name)
-            cat.entry(name).num_partitions = 4  # sf0.001 files are 1 block
-            mgr.on_access(name)
+        self._read(cat, mgr, t, "orders", 100)
+        self._read(cat, mgr, t, "lineitem", 200)
         # both promoted to the hottest level (empty sets accept anyone)
-        top = max(mgr.sets)
-        assert set(mgr.levels_snapshot()[top]) == {"orders", "lineitem"}
+        assert mgr.level_of == {"orders": self.TOP, "lineitem": self.TOP}
 
         # capacity pressure: colder half (orders, older EWMA) demoted
         usage["pct"] = 95.0
-        t["now"] += 100_000
-        cat.table("lineitem")
-        mgr.on_access("lineitem")
-        snap = mgr.levels_snapshot()
-        assert "orders" not in snap[top] and "lineitem" in snap[top]
-        assert mgr.level_of["orders"] == top - 1
+        self._read(cat, mgr, t, "lineitem", 300)
+        assert mgr.level_of == {"orders": self.TOP - 1, "lineitem": self.TOP}
+
+        # the allocation log: every level change and the capacity pass
+        assert [(r.levelno, r.getMessage()) for r in caplog.records] == [
+            (logging.INFO, "orders: level 0 -> 2 (ewma 100000 ms)"),
+            (logging.INFO, "lineitem: level 0 -> 2 (ewma 200000 ms)"),
+            (logging.INFO, "storage 95.0% used > 80%: demoting cold halves"),
+            (logging.INFO, "orders: level 2 -> 1 (ewma 100000 ms)"),
+        ]
+
+    def test_demotion_ranks_by_live_heat(self, spark, sf_dir):
+        """The read that crosses `top` ranks tables by their live EWMA:
+        orders, read again at 400 s, is hotter (250 s) than lineitem
+        (200 s), so lineitem is the cold half."""
+        t = {"now": 0.0}
+        usage = {"pct": 10.0}
+        cat = self._catalog(spark, sf_dir, clock=lambda: t["now"])
+        mgr = HotSetManager(cat, usage_fn=lambda: usage["pct"])
+        self._read(cat, mgr, t, "orders", 100)
+        self._read(cat, mgr, t, "lineitem", 200)
+        usage["pct"] = 95.0
+        self._read(cat, mgr, t, "orders", 400)
+        assert cat.entry("orders").access_time_ewma_ms == 250_000.0
+        assert mgr.level_of["orders"] == self.TOP
+        assert mgr.level_of["lineitem"] == self.TOP - 1
+
+    # (seconds, table, storage used %, level_of after the step): promotion
+    # into empty and occupied levels, two cascading cold-half passes and
+    # an exempt read above `top`
+    REPLAY = [
+        (100, "orders", 10, {"orders": 2}),
+        (200, "lineitem", 10, {"orders": 2, "lineitem": 2}),
+        (310, "customer", 10, {"orders": 2, "lineitem": 2, "customer": 2}),
+        (320, "part", 10, {"orders": 2, "lineitem": 2, "customer": 2, "part": 2}),
+        (400, "supplier", 95, {"lineitem": 1, "customer": 2, "part": 2}),
+        (500, "orders", 10, {"orders": 1, "lineitem": 1, "customer": 2, "part": 2}),
+        (600, "lineitem", 10, {"orders": 1, "lineitem": 2, "customer": 2, "part": 2}),
+        (700, "nation", 95, {"orders": 1, "lineitem": 2, "customer": 2, "part": 2}),
+        (800, "part", 10, {"orders": 1, "lineitem": 2, "customer": 2, "part": 2}),
+        (900, "supplier", 95, {"lineitem": 2, "customer": 1, "part": 2}),
+        (1000, "orders", 10, {"orders": 2, "lineitem": 2, "customer": 1, "part": 2}),
+        (1100, "supplier", 10,
+         {"orders": 2, "lineitem": 2, "customer": 1, "part": 2, "supplier": 2}),
+    ]
+
+    def test_replay_levels_step_by_step(self, spark, sf_dir):
+        t = {"now": 0.0}
+        usage = {"pct": 0.0}
+        names = ("nation", "orders", "lineitem", "customer", "part", "supplier")
+        cat = self._catalog(spark, sf_dir, lambda: t["now"], names)
+        for name in names[1:]:  # nation keeps its single partition: exempt
+            cat.table(name, track_access=False)
+            cat.entry(name).num_partitions = 4
+        mgr = HotSetManager(cat, usage_fn=lambda: usage["pct"])
+        for at_s, name, pct, want in self.REPLAY:
+            t["now"], usage["pct"] = at_s * 1000.0, pct
+            cat.table(name)
+            mgr.on_access(name)
+            got = {n: lvl for n, lvl in mgr.level_of.items() if lvl}
+            assert got == want, (at_s, name)
+
+    def test_reregister_unhooks_cached_table(self, spark, tmp_path):
+        """Re-registering a name frees the old cached copy and drops the
+        table to level 0 (the reference's delete hook,
+        FSNamesystem.java:301-303); the next read promotes it again."""
+        def cached():
+            infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+            return {i.id() for i in infos if i.numCachedPartitions() > 0}
+
+        before = cached()  # earlier tests may leave checkpointed RDDs
+        path = str(tmp_path / "t")
+        spark.range(3000).repartition(3).write.parquet(path)
+        eng = Engine(spark=spark)
+        eng.hotset = HotSetManager(eng.catalog, usage_fn=lambda: 0.0)
+        eng.register("t", path)
+        eng.table("t").count()
+        assert eng.hotset.level_of == {"t": self.TOP}
+        assert cached() - before
+        eng.register("t", path)
+        assert "t" not in eng.hotset.level_of
+        assert cached() <= before
+        eng.table("t")
+        assert eng.hotset.level_of == {"t": self.TOP}
+        assert eng.catalog.entry("t").cache_level is not None
 
     def test_live_persist_change_and_demotion_under_pressure(
         self, spark, sf_dir
@@ -662,12 +748,9 @@ class TestCatalogAndHotSet:
         cat = self._catalog(spark, sf_dir, clock=lambda: t["now"])
         mgr = HotSetManager(cat, usage_fn=lambda: usage["pct"])
 
-        for name in ("orders", "lineitem"):
-            t["now"] += 100_000
-            cat.table(name)
-            cat.entry(name).num_partitions = 4  # sf0.001 files are 1 block
-            mgr.on_access(name)
-        top = max(mgr.sets)
+        self._read(cat, mgr, t, "orders", 100)
+        self._read(cat, mgr, t, "lineitem", 200)
+        top = self.TOP
         assert mgr.level_of["orders"] == mgr.level_of["lineitem"] == top
 
         # materialize the promoted blocks, then read the LIVE level
@@ -683,9 +766,7 @@ class TestCatalogAndHotSet:
         # capacity pressure: the next access demotes the cold half
         # (orders — older EWMA) one level down, as a REAL re-persist
         usage["pct"] = 95.0
-        t["now"] += 100_000
-        cat.table("lineitem")
-        mgr.on_access("lineitem")
+        self._read(cat, mgr, t, "lineitem", 300)
         assert mgr.level_of["orders"] == top - 1
         cat.table("orders", track_access=False).count()
         lvl2 = cat.table("orders", track_access=False).storageLevel

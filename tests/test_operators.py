@@ -835,20 +835,6 @@ class TestJoinHelpers:
         assert "BroadcastHashJoin" in plan
 
 
-class TestMultimodalStubs:
-    def test_resize_and_frame_sample_plumbing(self, spark):
-        from hadoop_distributed_dynamic_file_system_spark.operators import multimodal
-
-        df = spark.createDataFrame(
-            [(1, b"x" * 2048), (2, b"y" * 600)], "doc_id long, payload binary"
-        )
-        resized = multimodal.resize_stub(df, max_side=128).collect()
-        assert {r.target_side for r in resized} == {128}
-        frames = multimodal.frame_sample_stub(df, every_n=2).collect()
-        assert len(frames) >= 2  # doc 1: 4 pseudo-frames, sampled every 2
-        assert all(len(r.frame) == 16 for r in frames)  # md5-sized
-
-
 class TestPipeAggregate:
     def test_stream_aggregate_shape(self, spark):
         from hadoop_distributed_dynamic_file_system_spark import pipe as pipe_mod

@@ -203,14 +203,14 @@ def test_zorder_value_matches_reference_interleave(spark):
 
 # ------------------------------------------------- multimodal widening
 
-from hadoop_distributed_dynamic_file_system_spark.operators import multimodal, similarity
+from hadoop_distributed_dynamic_file_system_spark.operators import multimodal
 
 
 def test_audio_chunks_cover_stream_exactly(spark):
     df = spark.createDataFrame(
         [(1, b"x" * 200000), (2, b"y" * 1000)], "doc_id long, payload binary"
     )
-    chunks = multimodal.audio_chunk_stub(df, chunk_samples=48000).collect()
+    chunks = multimodal.wav_chunks(df, chunk_samples=48000).collect()
     by_doc = {}
     for r in chunks:
         by_doc.setdefault(r.doc_id, []).append(r)
@@ -219,25 +219,6 @@ def test_audio_chunks_cover_stream_exactly(spark):
         [48000, 48000, 4000]
     assert [c.n_samples for c in by_doc[2]] == [500]
     assert all(0.0 <= r.rms < 1.0 for r in chunks)
-
-
-def test_embed_stub_feeds_ann_family(spark):
-    """Multimodal embeddings plug straight into the ANN operator
-    (self-matches are excluded there, so plant duplicate payloads:
-    each query's nearest neighbor must be its byte-identical twin)."""
-    docs = spark.createDataFrame(
-        [(i, f"document body {i}".encode()) for i in range(20)]
-        + [(100 + i, f"document body {i}".encode()) for i in range(3)],
-        "doc_id long, payload binary",
-    )
-    emb = multimodal.embed_stub(docs, dim=16)
-    assert dict(emb.dtypes)["embedding"] == "array<float>"
-    qs = emb.filter(F.col("doc_id") < 3)
-    top = similarity.brute_force_topk(
-        emb, qs, id_col="doc_id", vec_col="embedding", k=1
-    )
-    got = {r.query_id: r.doc_id for r in top.collect()}
-    assert got == {0: 100, 1: 101, 2: 102}  # identical payload wins (cos=1)
 
 
 # ------------------------------------------------- incremental rollups
