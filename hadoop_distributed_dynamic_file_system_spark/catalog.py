@@ -8,7 +8,9 @@ the monitor). Here the namespace is a dict of parquet-backed DataFrames;
 every `table()` call updates the same EWMA. Each `TableEntry` is the one
 record of its table's heat and hot-set level: `hotset.HotSetManager`
 reads them to decide, and `Catalog.set_level` is the only code that
-persists or unpersists a table.
+persists or unpersists a table. Registering a table is metadata-only,
+like opening a file on the NameNode: `read_parquet` reads one footer on
+the driver and no Spark job runs.
 
 EWMA formula (FSDirectory.java:1365-1373, replicated exactly):
     new = (1 - alpha) * old + alpha * now
@@ -18,14 +20,17 @@ updates closer together than the precision are skipped.
 
 from __future__ import annotations
 
+import json
 import logging
 import os
 import time
 import weakref
 from dataclasses import dataclass, field
-from urllib.parse import urlparse
+from urllib.parse import unquote, urlparse
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 from pyspark.storagelevel import StorageLevel
 
 TPCH_TABLES = (
@@ -72,15 +77,19 @@ _INFERENCE_CONFS = (
 _schemas: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
-def _listing(path: str) -> tuple | None:
-    """(relative path, size, mtime_ns, inode) of every file under a
-    local `path`, or None when the path cannot be fingerprinted: a
-    non-local URI, a glob pattern, or a path that does not exist or
-    changes while it is listed."""
+def _local(path: str) -> str | None:
+    """The local file system path `path` names, or None for a non-local
+    URI or a glob pattern."""
     url = urlparse(path)
     if url.scheme not in ("", "file") or any(c in path for c in "*?[{"):
         return None
-    local = url.path if url.scheme else path
+    return url.path if url.scheme else path
+
+
+def _listing(local: str) -> tuple | None:
+    """(relative path, size, mtime_ns, inode) of every file under
+    `local`, or None when it does not exist or changes while it is
+    listed. A single file lists as itself, with relative path '.'."""
     if os.path.isfile(local):
         files = [local]
     elif os.path.isdir(local):
@@ -97,16 +106,81 @@ def _listing(path: str) -> tuple | None:
     return tuple(out)
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """`spark.read.parquet(path)` that infers each schema once per session.
+def _hidden(name: str) -> bool:
+    """InMemoryFileIndex's rule for names it leaves out of a listing
+    (HadoopFSUtils.shouldFilterOutPathName)."""
+    if name.startswith(("_common_metadata", "_metadata")):
+        return False
+    return ((name.startswith("_") and "=" not in name) or name.startswith(".")
+            or name.endswith("._COPYING_"))
 
-    Plain schema inference reads the footers in a Spark job on every
-    call. The inferred schema is kept per session under the path, the
-    values of `_INFERENCE_CONFS` and a listing fingerprint of the files,
-    so any added, removed or rewritten file infers again. A path that
-    cannot be fingerprinted takes the plain read, so Spark raises its
-    own errors for it."""
-    fingerprint = _listing(path)
+
+def _footer_file(local: str, listing: tuple) -> str | None:
+    """The one file whose footer Spark's schema inference reads with
+    `mergeSchema` off: the first data file by path string (Java orders
+    strings by UTF-16 unit). None where Spark could read another file: a
+    relative path (the JVM resolves it against its own working
+    directory), a listed summary file or `_`-prefixed directory, or no
+    data file."""
+    if not os.path.isabs(local) or not listing:
+        return None
+    if listing[0][0] == ".":
+        return None if _hidden(os.path.basename(local)) else local
+    parts = [rel.split(os.sep) for rel, *_ in listing]
+    visible = [p for p in parts if not any(_hidden(c) for c in p)]
+    if not visible or any(c.startswith("_") for p in visible for c in p):
+        return None
+    return os.path.join(local, *min(visible, key=lambda p: "/".join(p).encode("utf-16-be")))
+
+
+def _footer_schema(spark: SparkSession, local: str, listing: tuple) -> StructType | None:
+    """The data schema `spark.read.parquet` would infer, read on the
+    driver with Spark's own footer reader and converter, so no job
+    runs. None where the plain read must run: `mergeSchema` on, no
+    single footer file (`_footer_file`), a footer column that is also a
+    partition directory key, or any error reading the footer, which
+    the plain read then raises in Spark's own words."""
+    if spark.conf.get("spark.sql.parquet.mergeSchema").lower() == "true":
+        return None
+    file = _footer_file(local, listing)
+    if file is None:
+        return None
+    jvm = spark._jvm
+    try:
+        conf = spark._jsparkSession.sessionState().newHadoopConf()
+        jpath = jvm.org.apache.hadoop.fs.Path(jvm.java.io.File(file).toURI())
+        files = jvm.java.util.ArrayList()
+        files.add(jpath.getFileSystem(conf).getFileStatus(jpath))
+        pff = getattr(jvm.org.apache.spark.sql.execution.datasources.parquet,
+                      "ParquetFileFormat$").__getattr__("MODULE$")
+        footers = pff.readParquetFootersInParallel(
+            conf, jvm.org.apache.spark.api.python.PythonUtils.toSeq(files), False)
+        schema = StructType.fromJson(
+            json.loads(pff.readSchema(footers, spark._jsparkSession).get().json()))
+    except Py4JError:  # Java-side failures included
+        return None
+    # a column stored in the files and named by a partition directory
+    # keeps the partition's inferred type in the plain read
+    keys = {unquote(c.split("=", 1)[0]).lower()
+            for rel, *_ in listing for c in rel.split(os.sep)[:-1] if "=" in c}
+    if keys & {f.name.lower() for f in schema.fields}:
+        return None
+    return schema
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """`spark.read.parquet(path)` without its schema-inference job.
+
+    A local path's schema is read from one parquet footer on the driver
+    (`_footer_schema`) and kept per session under the path, the values
+    of `_INFERENCE_CONFS` and a listing fingerprint of the files, so
+    any added, removed or rewritten file reads it again. The table is
+    then read with `spark.read.schema(...)`. A path that cannot be
+    fingerprinted, or whose footer Spark could pick differently, takes
+    the plain read, so Spark infers the schema or raises its own
+    errors for it."""
+    local = _local(path)
+    fingerprint = None if local is None else _listing(local)
     if fingerprint is None:
         return spark.read.parquet(path)
     key = (path, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
@@ -114,7 +188,8 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     hit = memo.get(key)
     if hit is not None and hit[0] == fingerprint:
         return spark.read.schema(hit[1]).parquet(path)
-    df = spark.read.parquet(path)
+    schema = _footer_schema(spark, local, fingerprint)
+    df = spark.read.parquet(path) if schema is None else spark.read.schema(schema).parquet(path)
     memo[key] = (fingerprint, df.schema)
     return df
 
@@ -123,11 +198,11 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
 class TableEntry:
     name: str
     path: str
+    df: DataFrame = field(repr=False)
     access_time_ewma_ms: float = 0.0
     access_count: int = 0
-    num_partitions: int = 1
+    num_partitions: int | None = None  # counted on first need: Catalog.num_partitions
     level: int = 0  # hot-set level, changed only by Catalog.set_level
-    df: DataFrame | None = field(default=None, repr=False)
 
     @property
     def cache_level(self) -> str | None:
@@ -146,13 +221,15 @@ class Catalog:
     # -- registration ------------------------------------------------
     def register_path(self, name: str, path: str) -> None:
         """Register `name`, replacing any earlier table of that name. The
-        replaced entry drops to level 0 while it is still registered,
-        which frees its cached copy (the reference's delete hook,
-        FSNamesystem.java:301-303)."""
+        new path is read first, so a path that cannot be read raises and
+        leaves the earlier table as it was. The replaced entry then drops
+        to level 0 while it is still registered, which frees its cached
+        copy (the reference's delete hook, FSNamesystem.java:301-303)."""
+        df = read_parquet(self.spark, path)
         old = self._tables.get(name)
         if old is not None:
             self.set_level(old, 0)
-        self._tables[name] = TableEntry(name=name, path=path)
+        self._tables[name] = TableEntry(name=name, path=path, df=df)
 
     def names(self) -> list[str]:
         return sorted(self._tables)
@@ -163,13 +240,17 @@ class Catalog:
     def entries(self) -> list[TableEntry]:
         return list(self._tables.values())
 
+    def num_partitions(self, ent: TableEntry) -> int:
+        """Partitions of a full scan of the table, counted the first time
+        the hot set asks: the count plans a physical scan."""
+        if ent.num_partitions is None:
+            # counted on the JVM: df.rdd would build a Python RDD wrapper
+            ent.num_partitions = ent.df._jdf.queryExecution().toRdd().getNumPartitions()
+        return ent.num_partitions
+
     # -- access path (the getBlockLocations analog) --------------------
     def table(self, name: str, track_access: bool = True) -> DataFrame:
         ent = self._tables[name]
-        if ent.df is None:
-            ent.df = read_parquet(self.spark, ent.path)
-            # counted on the JVM: df.rdd would build a Python RDD wrapper
-            ent.num_partitions = ent.df._jdf.queryExecution().toRdd().getNumPartitions()
         if track_access:
             self._touch(ent)
         return ent.df
@@ -194,11 +275,10 @@ class Catalog:
         catalog table."""
         if level == ent.level:
             return
-        df = self.table(ent.name, track_access=False)
         if ent.level:
-            df.unpersist()
+            ent.df.unpersist()
         if level:
-            df.persist(LEVELS[level])
+            ent.df.persist(LEVELS[level])
         allocation_log.info("%s: level %d -> %d (ewma %.0f ms)",
                             ent.name, ent.level, level, ent.access_time_ewma_ms)
         ent.level = level

@@ -54,7 +54,9 @@ class Engine:
     def register(self, name: str, path: str) -> None:
         """(Re-)register a parquet table and its SQL view, the only code
         that creates one. Registration is not an access: it does not
-        heat the table."""
+        heat the table, and it launches no Spark job. A path that cannot
+        be read raises and leaves the earlier table of that name as it
+        was."""
         self.catalog.register_path(name, path)
         self.catalog.table(name, track_access=False).createOrReplaceTempView(name)
 

@@ -79,7 +79,7 @@ class HotSetManager:
         """allocateReplication (FSNamesystem.java:4425): called on every
         table access, after the catalog EWMA update."""
         ent = self.catalog.entry(table)
-        if ent.num_partitions <= 1:
+        if self.catalog.num_partitions(ent) <= 1:
             return  # single-block exemption
         usage = self._usage_fn()
         if usage > TOP_PERCENT:

@@ -14,11 +14,17 @@ from types import SimpleNamespace
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from hadoop_distributed_dynamic_file_system_spark import fileops, pipe, sinks
-from hadoop_distributed_dynamic_file_system_spark.catalog import LEVELS, Catalog, read_parquet
+from hadoop_distributed_dynamic_file_system_spark.catalog import (
+    LEVELS,
+    TPCH_TABLES,
+    Catalog,
+    read_parquet,
+)
 from hadoop_distributed_dynamic_file_system_spark.engine import Engine
 from hadoop_distributed_dynamic_file_system_spark.hotset import HotSetManager
 from hadoop_distributed_dynamic_file_system_spark.plans.jobcontrol import JobControl, State
@@ -794,8 +800,41 @@ class TestCatalogAndHotSet:
         spark.range(3000).repartition(3).write.parquet(path)
         cat = Catalog(spark)
         cat.register_path("multi", path)
-        df = cat.table("multi", track_access=False)
-        assert cat.entry("multi").num_partitions == df.rdd.getNumPartitions() == 3
+        ent = cat.entry("multi")
+        assert ent.num_partitions is None  # not counted at registration
+        assert cat.num_partitions(ent) == ent.df.rdd.getNumPartitions() == 3
+        assert ent.num_partitions == 3
+
+    def test_register_launches_no_job(self, spark, tmp_path):
+        """Registration reads one footer on the driver and plans no scan,
+        like the fork's NameNode-only open (FSNamesystem.getBlockLocations)."""
+        path = str(tmp_path / "t")
+        spark.range(3000).repartition(3).write.parquet(path)
+        eng = Engine(spark=spark)
+        _, jobs = _jobs(spark, lambda: eng.register("t", path))
+        assert jobs == 0
+        assert eng.catalog.entry("t").num_partitions is None
+        assert eng.sql("SELECT count(*) FROM t").collect()[0][0] == 3000
+
+    def test_failed_reregister_keeps_old_table(self, spark, tmp_path):
+        """A re-register whose path cannot be read changes nothing: the
+        old path, level, cached copy, table and view all stay."""
+        path = str(tmp_path / "t")
+        spark.range(3000).repartition(3).write.parquet(path)
+        eng = Engine(spark=spark)
+        eng.hotset = HotSetManager(eng.catalog, usage_fn=lambda: 0.0)
+        eng.register("t", path)
+        want = sorted(eng.table("t").collect())
+        ent = eng.catalog.entry("t")
+        assert ent.level == self.TOP
+        with pytest.raises(AnalysisException) as err:
+            eng.register("t", str(tmp_path / "absent"))
+        assert err.value.getCondition() == "PATH_NOT_FOUND"
+        assert eng.catalog.entry("t") is ent
+        assert (ent.path, ent.level) == (path, self.TOP)
+        assert ent.df.storageLevel == LEVELS[self.TOP]
+        assert sorted(eng.table("t").collect()) == want
+        assert sorted(eng.sql("SELECT * FROM t").collect()) == want
 
     def test_capacity_probe_failure_is_logged(self, caplog):
         def broken():
@@ -813,26 +852,19 @@ class TestCatalogAndHotSet:
 
 
 class TestParquetSchemaMemo:
-    """read_parquet infers a schema once per session and file listing."""
+    """read_parquet reads a schema once per session and file listing,
+    from one footer on the driver."""
 
     @staticmethod
     def _read(spark, path):
         """(DataFrame, Spark jobs its construction launched)."""
-        sc = spark.sparkContext
-        group = f"read-parquet-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, "read_parquet")
-        try:
-            df = read_parquet(spark, path)
-        finally:
-            sc.setJobGroup("", "")
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return df, len(sc.statusTracker().getJobIdsForGroup(group))
+        return _jobs(spark, lambda: read_parquet(spark, path))
 
     def test_second_read_launches_no_job(self, spark, tmp_path):
         path = str(tmp_path / "t.parquet")
         pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
         first, jobs = self._read(spark, path)
-        assert jobs >= 1  # the inference job
+        assert jobs == 0  # the footer is read on the driver
         second, jobs = self._read(spark, path)
         assert jobs == 0
         assert second.schema == first.schema == spark.read.parquet(path).schema
@@ -844,7 +876,7 @@ class TestParquetSchemaMemo:
         assert read_parquet(spark, path).columns == ["a"]
         pq.write_table(pa.table({"a": ["p", "q"], "c": [1.5, 2.5]}), path)
         df, jobs = self._read(spark, path)
-        assert jobs >= 1
+        assert jobs == 0
         assert df.schema == spark.read.parquet(path).schema
         assert df.dtypes == [("a", "string"), ("c", "double")]
 
@@ -865,7 +897,7 @@ class TestParquetSchemaMemo:
             assert dict(read_parquet(spark, path).dtypes)[column] == types[0]
             spark.conf.set(conf, values[1])
             df, jobs = self._read(spark, path)
-            assert jobs >= 1
+            assert jobs == 0
             assert dict(df.dtypes)[column] == types[1]
         finally:
             spark.conf.set(conf, old)
@@ -897,8 +929,121 @@ class TestParquetSchemaMemo:
         read_parquet(spark, path)
         other = spark.newSession()
         df, jobs = self._read(other, path)
-        assert jobs >= 1
+        assert jobs == 0
         assert df.schema == read_parquet(spark, path).schema
+
+    # (name, files written into the table directory, confs): each case
+    # takes the footer path, launching no job
+    @staticmethod
+    def _spark_partitioned(spark, d):
+        spark.range(40).select(
+            F.col("id"), (F.col("id") % 3).alias("k"), F.lit("v").alias("s"),
+            F.lit(b"b").alias("raw"),
+        ).write.partitionBy("k").parquet(d)
+
+    @staticmethod
+    def _binary(spark, d):
+        pq.write_table(pa.table({"b": pa.array([b"x"], pa.binary()), "n": [1]}),
+                       os.path.join(d, "f.parquet"))
+
+    @staticmethod
+    def _int96(spark, d):
+        ts = pa.array([1_700_000_000_000_000], pa.timestamp("us"))
+        pq.write_table(pa.table({"ts": ts}), os.path.join(d, "f.parquet"),
+                       use_deprecated_int96_timestamps=True)
+
+    @staticmethod
+    def _ntz(spark, d):
+        ts = pa.array([1_700_000_000_000_000], pa.timestamp("us"))
+        pq.write_table(pa.table({"ts": ts, "tz": ts.cast(pa.timestamp("us", "UTC"))}),
+                       os.path.join(d, "f.parquet"))
+
+    FOOTER_CASES = [
+        ("spark_partitioned", "_spark_partitioned", {}),
+        ("binary_as_bytes", "_binary", {"spark.sql.parquet.binaryAsString": "false"}),
+        ("binary_as_string", "_binary", {"spark.sql.parquet.binaryAsString": "true"}),
+        ("int96", "_int96", {}),
+        ("ntz_inferred", "_ntz", {"spark.sql.parquet.inferTimestampNTZ.enabled": "true"}),
+        ("ntz_not_inferred", "_ntz", {"spark.sql.parquet.inferTimestampNTZ.enabled": "false"}),
+    ] + [(t, None, {}) for t in TPCH_TABLES]  # the sf0.01 testdata tables
+
+    @pytest.mark.parametrize("name, write, confs", FOOTER_CASES, ids=[c[0] for c in FOOTER_CASES])
+    def test_footer_schema_matches_plain_read(self, spark, sf_dir, tmp_path, name, write,
+                                              confs):
+        # a new session has an empty schema memo, so the read is a miss
+        session = spark.newSession()
+        for k, v in confs.items():
+            session.conf.set(k, v)
+        if write is None:
+            path = os.path.join(os.path.dirname(sf_dir), "sf0.01", f"{name}.parquet")
+        else:
+            path = str(tmp_path / name)
+            if write != "_spark_partitioned":
+                os.makedirs(path)
+            getattr(self, write)(session, path)
+        df, jobs = self._read(session, path)
+        assert jobs == 0
+        assert df.schema == session.read.parquet(path).schema
+        if write == "_spark_partitioned":
+            assert {"_SUCCESS"} <= set(os.listdir(path))
+            assert any(f.endswith(".crc") for _, _, fs in os.walk(path) for f in fs)
+
+    def test_common_metadata_file_takes_plain_read(self, spark, tmp_path):
+        """Spark reads `_common_metadata` before any data file; its extra
+        column shows the plain read ran."""
+        path = tmp_path / "t"
+        path.mkdir()
+        pq.write_table(pa.table({"a": [1]}), str(path / "f.parquet"))
+        pq.write_metadata(pa.schema([("a", pa.int64()), ("extra", pa.string())]),
+                          str(path / "_common_metadata"))
+        df = read_parquet(spark.newSession(), str(path))
+        assert df.schema == spark.read.parquet(str(path)).schema
+        assert df.columns == ["a", "extra"]
+
+    def test_merge_schema_takes_plain_read(self, spark, tmp_path):
+        path = tmp_path / "t"
+        path.mkdir()
+        pq.write_table(pa.table({"a": [1]}), str(path / "f1.parquet"))
+        pq.write_table(pa.table({"b": ["x"]}), str(path / "f2.parquet"))
+        session = spark.newSession()
+        session.conf.set("spark.sql.parquet.mergeSchema", "true")
+        df = read_parquet(session, str(path))
+        assert df.schema == session.read.parquet(str(path)).schema
+        assert sorted(df.columns) == ["a", "b"]
+
+    def test_zero_byte_first_file_raises_like_plain_read(self, spark, tmp_path):
+        path = tmp_path / "t"
+        path.mkdir()
+        (path / "a.parquet").write_bytes(b"")
+        pq.write_table(pa.table({"a": [1]}), str(path / "b.parquet"))
+        # the footer error surfaces from the inference job's task
+        with pytest.raises(Py4JJavaError) as plain:
+            spark.read.parquet(str(path))
+        with pytest.raises(Py4JJavaError) as ours:
+            read_parquet(spark.newSession(), str(path))
+        condition = "[FAILED_READ_FILE.CANNOT_READ_FILE_FOOTER]"
+        assert condition in str(plain.value) and condition in str(ours.value)
+
+    def test_empty_directory_raises_like_plain_read(self, spark, tmp_path):
+        path = str(tmp_path)
+        with pytest.raises(AnalysisException) as plain:
+            spark.read.parquet(path)
+        with pytest.raises(AnalysisException) as ours:
+            read_parquet(spark.newSession(), path)
+        assert ours.value.getCondition() == plain.value.getCondition() == "UNABLE_TO_INFER_SCHEMA"
+
+
+def _jobs(spark, fn):
+    """(fn(), Spark jobs it launched), counted by job group."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("", "")
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 class TestCompressionCodecs:
