@@ -126,11 +126,10 @@ def _footer_file(local: str, listing: tuple) -> str | None:
         return None
     if listing[0][0] == ".":
         return None if _hidden(os.path.basename(local)) else local
-    parts = [rel.split(os.sep) for rel, *_ in listing]
-    visible = [p for p in parts if not any(_hidden(c) for c in p)]
-    if not visible or any(c.startswith("_") for p in visible for c in p):
+    visible = [rel for rel, *_ in listing if not any(_hidden(c) for c in rel.split(os.sep))]
+    if not visible or any(c.startswith("_") for rel in visible for c in rel.split(os.sep)):
         return None
-    return os.path.join(local, *min(visible, key=lambda p: "/".join(p).encode("utf-16-be")))
+    return os.path.join(local, min(visible, key=lambda rel: rel.encode("utf-16-be")))
 
 
 def _footer_schema(spark: SparkSession, local: str, listing: tuple) -> StructType | None:
@@ -151,8 +150,8 @@ def _footer_schema(spark: SparkSession, local: str, listing: tuple) -> StructTyp
         jpath = jvm.org.apache.hadoop.fs.Path(jvm.java.io.File(file).toURI())
         files = jvm.java.util.ArrayList()
         files.add(jpath.getFileSystem(conf).getFileStatus(jpath))
-        pff = getattr(jvm.org.apache.spark.sql.execution.datasources.parquet,
-                      "ParquetFileFormat$").__getattr__("MODULE$")
+        pff = getattr(getattr(jvm.org.apache.spark.sql.execution.datasources.parquet,
+                              "ParquetFileFormat$"), "MODULE$")
         footers = pff.readParquetFootersInParallel(
             conf, jvm.org.apache.spark.api.python.PythonUtils.toSeq(files), False)
         schema = StructType.fromJson(

@@ -851,6 +851,34 @@ class TestCatalogAndHotSet:
         assert "py4j shape drift" in str(rec.exc_info[1])
 
 
+def _write_spark_partitioned(spark, path):
+    spark.range(40).select(
+        F.col("id"), (F.col("id") % 3).alias("k"), F.lit("v").alias("s"), F.lit(b"b").alias("raw"),
+    ).write.partitionBy("k").parquet(path)
+    assert "_SUCCESS" in os.listdir(path)
+    assert any(f.endswith(".crc") for _, _, fs in os.walk(path) for f in fs)
+
+
+def _write_pyarrow(path, table, **kwargs):
+    os.makedirs(path)
+    pq.write_table(table, os.path.join(path, "f.parquet"), **kwargs)
+
+
+def _write_binary(spark, path):
+    _write_pyarrow(path, pa.table({"b": pa.array([b"x"], pa.binary()), "n": [1]}))
+
+
+_TS = pa.array([1_700_000_000_000_000], pa.timestamp("us"))
+
+
+def _write_int96(spark, path):
+    _write_pyarrow(path, pa.table({"ts": _TS}), use_deprecated_int96_timestamps=True)
+
+
+def _write_ntz(spark, path):
+    _write_pyarrow(path, pa.table({"ts": _TS, "tz": _TS.cast(pa.timestamp("us", "UTC"))}))
+
+
 class TestParquetSchemaMemo:
     """read_parquet reads a schema once per session and file listing,
     from one footer on the driver."""
@@ -932,40 +960,16 @@ class TestParquetSchemaMemo:
         assert jobs == 0
         assert df.schema == read_parquet(spark, path).schema
 
-    # (name, files written into the table directory, confs): each case
-    # takes the footer path, launching no job
-    @staticmethod
-    def _spark_partitioned(spark, d):
-        spark.range(40).select(
-            F.col("id"), (F.col("id") % 3).alias("k"), F.lit("v").alias("s"),
-            F.lit(b"b").alias("raw"),
-        ).write.partitionBy("k").parquet(d)
-
-    @staticmethod
-    def _binary(spark, d):
-        pq.write_table(pa.table({"b": pa.array([b"x"], pa.binary()), "n": [1]}),
-                       os.path.join(d, "f.parquet"))
-
-    @staticmethod
-    def _int96(spark, d):
-        ts = pa.array([1_700_000_000_000_000], pa.timestamp("us"))
-        pq.write_table(pa.table({"ts": ts}), os.path.join(d, "f.parquet"),
-                       use_deprecated_int96_timestamps=True)
-
-    @staticmethod
-    def _ntz(spark, d):
-        ts = pa.array([1_700_000_000_000_000], pa.timestamp("us"))
-        pq.write_table(pa.table({"ts": ts, "tz": ts.cast(pa.timestamp("us", "UTC"))}),
-                       os.path.join(d, "f.parquet"))
-
+    # (name, table writer or None for the sf0.01 table `name`, confs):
+    # every case takes the footer path
     FOOTER_CASES = [
-        ("spark_partitioned", "_spark_partitioned", {}),
-        ("binary_as_bytes", "_binary", {"spark.sql.parquet.binaryAsString": "false"}),
-        ("binary_as_string", "_binary", {"spark.sql.parquet.binaryAsString": "true"}),
-        ("int96", "_int96", {}),
-        ("ntz_inferred", "_ntz", {"spark.sql.parquet.inferTimestampNTZ.enabled": "true"}),
-        ("ntz_not_inferred", "_ntz", {"spark.sql.parquet.inferTimestampNTZ.enabled": "false"}),
-    ] + [(t, None, {}) for t in TPCH_TABLES]  # the sf0.01 testdata tables
+        ("spark_partitioned", _write_spark_partitioned, {}),
+        ("binary_as_bytes", _write_binary, {"spark.sql.parquet.binaryAsString": "false"}),
+        ("binary_as_string", _write_binary, {"spark.sql.parquet.binaryAsString": "true"}),
+        ("int96", _write_int96, {}),
+        ("ntz_inferred", _write_ntz, {"spark.sql.parquet.inferTimestampNTZ.enabled": "true"}),
+        ("ntz_not_inferred", _write_ntz, {"spark.sql.parquet.inferTimestampNTZ.enabled": "false"}),
+    ] + [(t, None, {}) for t in TPCH_TABLES]
 
     @pytest.mark.parametrize("name, write, confs", FOOTER_CASES, ids=[c[0] for c in FOOTER_CASES])
     def test_footer_schema_matches_plain_read(self, spark, sf_dir, tmp_path, name, write,
@@ -978,15 +982,10 @@ class TestParquetSchemaMemo:
             path = os.path.join(os.path.dirname(sf_dir), "sf0.01", f"{name}.parquet")
         else:
             path = str(tmp_path / name)
-            if write != "_spark_partitioned":
-                os.makedirs(path)
-            getattr(self, write)(session, path)
+            write(session, path)
         df, jobs = self._read(session, path)
         assert jobs == 0
         assert df.schema == session.read.parquet(path).schema
-        if write == "_spark_partitioned":
-            assert {"_SUCCESS"} <= set(os.listdir(path))
-            assert any(f.endswith(".crc") for _, _, fs in os.walk(path) for f in fs)
 
     def test_common_metadata_file_takes_plain_read(self, spark, tmp_path):
         """Spark reads `_common_metadata` before any data file; its extra

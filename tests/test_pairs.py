@@ -1,10 +1,12 @@
 """tools/pairs.py: the gain verdict on canned pair results."""
 
 import json
+import os
 
 import pytest
 
-from tools.pairs import last_json, quartiles, verdict
+from tools import pairs
+from tools.pairs import last_json, quartiles, value, verdict
 
 PARENT = [2.8, 2.9, 2.7, 3.0, 2.85, 2.75, 2.95, 2.8, 2.9, 2.7]  # q1 2.7625, q3 2.9: IQR 0.1375
 
@@ -53,7 +55,35 @@ def test_unequal_pair_lists_raise():
 
 
 def test_last_json_skips_log_lines():
-    out = "perfbench: {\"cpus\": 4}\n" + json.dumps({"failed": 0, "metrics": {"wall_s": 1.5}}) + "\n\n"
-    assert last_json(out)["metrics"] == {"wall_s": 1.5}
+    result = {"failed": 0, "metrics": {"wall_s": {"value": 1.5, "unit": "s"}}}
+    out = "perfbench: {\"cpus\": 4}\n" + json.dumps(result) + "\n\n"
+    assert value(last_json(out), "wall_s") == 1.5
     with pytest.raises(ValueError):
         last_json("\n")
+
+
+def test_main_alternates_sides_and_prints_verdicts(tmp_path, monkeypatch, capsys):
+    bench = {"end_to_end": [
+        {"name": "setup_s", "unit": "s", "better": "lower", "bound": 0.25},
+        {"name": "wall_s", "unit": "s", "better": "lower", "bound": 0.24},
+    ]}
+    parent, change = str(tmp_path / "parent"), str(tmp_path / "change")
+    os.makedirs(change)
+    with open(os.path.join(change, "BENCHMARK.json"), "w") as f:
+        json.dump(bench, f)
+    calls = []
+
+    def fake_run(checkout, workload, seed, seconds):
+        calls.append(checkout)
+        setup = 1.0 if checkout == change else 2.0 + 0.01 * len(calls)
+        return {"failed": 0, "attempted": 48, "metrics": {
+            "setup_s": {"value": setup, "unit": "s"},
+            "wall_s": {"value": 9.0 if checkout == change else 8.0, "unit": "s"}}}
+
+    monkeypatch.setattr(pairs, "run_once", fake_run)
+    assert pairs.main([parent, change, "--workload", "w", "--pairs", "4", "--seed", "7"]) == 0
+    assert calls == [parent, change, change, parent] * 2
+    out = capsys.readouterr().out
+    assert "setup_s:" in out and out.split("setup_s:")[1].split("\n")[0].endswith(": gain")
+    wall = out.split("wall_s:")[-1].split("\n")[0]
+    assert "OVER BOUND" not in wall and wall.endswith(": loss")

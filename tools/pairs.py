@@ -66,6 +66,11 @@ def last_json(stdout: str) -> dict:
     return json.loads(lines[-1])
 
 
+def value(result: dict, metric: str) -> float:
+    """A metric's value in a run's result (`{"value": v, "unit": u}`)."""
+    return result["metrics"][metric]["value"]
+
+
 def run_once(checkout: str, workload: str, seed: int, seconds: float) -> dict:
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
            "--seconds", str(seconds), "--trace", "0"]
@@ -94,7 +99,7 @@ def main(argv: list[str] | None = None) -> int:
         for side in order:
             res = run_once(sides[side], args.workload, args.seed, args.seconds)
             runs[side].append(res)
-            shown = " ".join(f"{m['name']}={res['metrics'].get(m['name'])}" for m in metrics)
+            shown = " ".join(f"{m['name']}={value(res, m['name']):.3f}" for m in metrics)
             print(f"pair {i + 1} {side}: {shown} failed={res['failed']}/{res['attempted']}",
                   flush=True)
 
@@ -102,8 +107,8 @@ def main(argv: list[str] | None = None) -> int:
           f"(q1/median/q3; wins = pairs the change won)")
     for m in metrics:
         name = m["name"]
-        parent = [r["metrics"][name] for r in runs["parent"]]
-        change = [r["metrics"][name] for r in runs["change"]]
+        parent = [value(r, name) for r in runs["parent"]]
+        change = [value(r, name) for r in runs["change"]]
         v = verdict(parent, change, m["better"])
         shift = (v["change_median"] / v["parent_median"] - 1.0) if v["parent_median"] else 0.0
         worse = shift if m["better"] == "lower" else -shift
