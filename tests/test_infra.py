@@ -811,7 +811,7 @@ class TestCatalogAndHotSet:
         path = str(tmp_path / "t")
         spark.range(3000).repartition(3).write.parquet(path)
         eng = Engine(spark=spark)
-        _, jobs = _jobs(spark, lambda: eng.register("t", path))
+        _, jobs = _jobs(spark, eng.register, "t", path)
         assert jobs == 0
         assert eng.catalog.entry("t").num_partitions is None
         assert eng.sql("SELECT count(*) FROM t").collect()[0][0] == 3000
@@ -883,17 +883,12 @@ class TestParquetSchemaMemo:
     """read_parquet reads a schema once per session and file listing,
     from one footer on the driver."""
 
-    @staticmethod
-    def _read(spark, path):
-        """(DataFrame, Spark jobs its construction launched)."""
-        return _jobs(spark, lambda: read_parquet(spark, path))
-
     def test_second_read_launches_no_job(self, spark, tmp_path):
         path = str(tmp_path / "t.parquet")
         pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
-        first, jobs = self._read(spark, path)
+        first, jobs = _jobs(spark, read_parquet, spark, path)
         assert jobs == 0  # the footer is read on the driver
-        second, jobs = self._read(spark, path)
+        second, jobs = _jobs(spark, read_parquet, spark, path)
         assert jobs == 0
         assert second.schema == first.schema == spark.read.parquet(path).schema
         assert sorted(second.collect()) == sorted(first.collect())
@@ -903,7 +898,7 @@ class TestParquetSchemaMemo:
         pq.write_table(pa.table({"a": [1, 2]}), path)
         assert read_parquet(spark, path).columns == ["a"]
         pq.write_table(pa.table({"a": ["p", "q"], "c": [1.5, 2.5]}), path)
-        df, jobs = self._read(spark, path)
+        df, jobs = _jobs(spark, read_parquet, spark, path)
         assert jobs == 0
         assert df.schema == spark.read.parquet(path).schema
         assert df.dtypes == [("a", "string"), ("c", "double")]
@@ -924,7 +919,7 @@ class TestParquetSchemaMemo:
             spark.conf.set(conf, values[0])
             assert dict(read_parquet(spark, path).dtypes)[column] == types[0]
             spark.conf.set(conf, values[1])
-            df, jobs = self._read(spark, path)
+            df, jobs = _jobs(spark, read_parquet, spark, path)
             assert jobs == 0
             assert dict(df.dtypes)[column] == types[1]
         finally:
@@ -946,7 +941,7 @@ class TestParquetSchemaMemo:
         ).write.partitionBy("k").parquet(path)
         plain = spark.read.parquet(path)
         read_parquet(spark, path)
-        df, jobs = self._read(spark, path)
+        df, jobs = _jobs(spark, read_parquet, spark, path)
         assert jobs == 0
         assert df.schema == plain.schema
         assert sorted(df.collect()) == sorted(plain.collect())
@@ -956,7 +951,7 @@ class TestParquetSchemaMemo:
         pq.write_table(pa.table({"a": [1]}), path)
         read_parquet(spark, path)
         other = spark.newSession()
-        df, jobs = self._read(other, path)
+        df, jobs = _jobs(other, read_parquet, other, path)
         assert jobs == 0
         assert df.schema == read_parquet(spark, path).schema
 
@@ -983,7 +978,7 @@ class TestParquetSchemaMemo:
         else:
             path = str(tmp_path / name)
             write(session, path)
-        df, jobs = self._read(session, path)
+        df, jobs = _jobs(session, read_parquet, session, path)
         assert jobs == 0
         assert df.schema == session.read.parquet(path).schema
 
@@ -1032,13 +1027,13 @@ class TestParquetSchemaMemo:
         assert ours.value.getCondition() == plain.value.getCondition() == "UNABLE_TO_INFER_SCHEMA"
 
 
-def _jobs(spark, fn):
-    """(fn(), Spark jobs it launched), counted by job group."""
+def _jobs(spark, fn, *args):
+    """(fn(*args), Spark jobs it launched), counted by job group."""
     sc = spark.sparkContext
     group = f"jobs-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "count jobs")
     try:
-        out = fn()
+        out = fn(*args)
     finally:
         sc.setJobGroup("", "")
     sc._jsc.sc().listenerBus().waitUntilEmpty()

@@ -63,7 +63,7 @@ def test_last_json_skips_log_lines():
 
 
 def test_main_alternates_sides_and_prints_verdicts(tmp_path, monkeypatch, capsys):
-    bench = {"end_to_end": [
+    bench = {"run_seconds": 10, "end_to_end": [
         {"name": "setup_s", "unit": "s", "better": "lower", "bound": 0.25},
         {"name": "wall_s", "unit": "s", "better": "lower", "bound": 0.24},
     ]}
@@ -74,6 +74,7 @@ def test_main_alternates_sides_and_prints_verdicts(tmp_path, monkeypatch, capsys
     calls = []
 
     def fake_run(checkout, workload, seed, seconds):
+        assert seconds == 10  # the benchmark's run length
         calls.append(checkout)
         setup = 1.0 if checkout == change else 2.0 + 0.01 * len(calls)
         return {"failed": 0, "attempted": 48, "metrics": {

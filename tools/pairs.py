@@ -2,10 +2,10 @@
 verdict on each end-to-end metric.
 
     python tools/pairs.py PARENT_DIR CHANGE_DIR --workload W --pairs N --seed S
-                          [--seconds 10]
 
 Each pair runs `perfbench/run.py --trace 0` once in each checkout,
-through a subprocess with the checkout as its working directory; pairs
+through a subprocess with the checkout as its working directory, for
+the run length (`run_seconds`) in the change's BENCHMARK.json; pairs
 alternate which side runs first. The tool prints every run's metrics,
 then per metric each side's quartiles (q1/median/q3), the pairs the
 change won, its median shift against the bound in the change's
@@ -87,17 +87,17 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, required=True)
     ap.add_argument("--seed", type=int, required=True)
-    ap.add_argument("--seconds", type=float, default=10.0)
     args = ap.parse_args(argv)
 
     with open(os.path.join(args.change_dir, "BENCHMARK.json")) as f:
-        metrics = json.load(f)["end_to_end"]
+        bench = json.load(f)
+    metrics, seconds = bench["end_to_end"], bench["run_seconds"]
     sides = {"parent": args.parent_dir, "change": args.change_dir}
     runs: dict[str, list[dict]] = {"parent": [], "change": []}
     for i in range(args.pairs):
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         for side in order:
-            res = run_once(sides[side], args.workload, args.seed, args.seconds)
+            res = run_once(sides[side], args.workload, args.seed, seconds)
             runs[side].append(res)
             shown = " ".join(f"{m['name']}={value(res, m['name']):.3f}" for m in metrics)
             print(f"pair {i + 1} {side}: {shown} failed={res['failed']}/{res['attempted']}",
