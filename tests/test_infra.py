@@ -18,7 +18,7 @@ from py4j.protocol import Py4JJavaError
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
-from hadoop_distributed_dynamic_file_system_spark import fileops, pipe, sinks
+from hadoop_distributed_dynamic_file_system_spark import catalog, fileops, pipe, sinks
 from hadoop_distributed_dynamic_file_system_spark.catalog import (
     LEVELS,
     TPCH_TABLES,
@@ -883,23 +883,38 @@ class TestParquetSchemaMemo:
     """read_parquet reads a schema once per session and file listing,
     from one footer on the driver."""
 
-    def test_second_read_launches_no_job(self, spark, tmp_path):
+    @pytest.fixture
+    def footer_reads(self, monkeypatch):
+        """The local paths whose footer read_parquet reads, in order."""
+        reads = []
+        real = catalog._footer_schema
+
+        def counted(spark, local, listing):
+            reads.append(local)
+            return real(spark, local, listing)
+
+        monkeypatch.setattr(catalog, "_footer_schema", counted)
+        return reads
+
+    def test_second_read_launches_no_job(self, spark, tmp_path, footer_reads):
         path = str(tmp_path / "t.parquet")
         pq.write_table(pa.table({"a": [1, 2], "b": ["x", "y"]}), path)
         first, jobs = _jobs(spark, read_parquet, spark, path)
         assert jobs == 0  # the footer is read on the driver
         second, jobs = _jobs(spark, read_parquet, spark, path)
         assert jobs == 0
+        assert footer_reads == [path]  # the second read is a memo hit
         assert second.schema == first.schema == spark.read.parquet(path).schema
         assert sorted(second.collect()) == sorted(first.collect())
 
-    def test_rewrite_at_same_path_infers_again(self, spark, tmp_path):
+    def test_rewrite_at_same_path_infers_again(self, spark, tmp_path, footer_reads):
         path = str(tmp_path / "t.parquet")
         pq.write_table(pa.table({"a": [1, 2]}), path)
         assert read_parquet(spark, path).columns == ["a"]
         pq.write_table(pa.table({"a": ["p", "q"], "c": [1.5, 2.5]}), path)
         df, jobs = _jobs(spark, read_parquet, spark, path)
         assert jobs == 0
+        assert footer_reads == [path, path]
         assert df.schema == spark.read.parquet(path).schema
         assert df.dtypes == [("a", "string"), ("c", "double")]
 
@@ -908,8 +923,8 @@ class TestParquetSchemaMemo:
         ("spark.sql.sources.partitionColumnTypeInference.enabled", ("true", "false"),
          "k", ("int", "string")),
     ])
-    def test_inference_conf_change_infers_again(self, spark, tmp_path, conf, values,
-                                                column, types):
+    def test_inference_conf_change_infers_again(self, spark, tmp_path, footer_reads, conf,
+                                                values, column, types):
         part = tmp_path / "t" / "k=1"
         part.mkdir(parents=True)
         pq.write_table(pa.table({"b": pa.array([b"x"], pa.binary())}), str(part / "f.parquet"))
@@ -921,6 +936,7 @@ class TestParquetSchemaMemo:
             spark.conf.set(conf, values[1])
             df, jobs = _jobs(spark, read_parquet, spark, path)
             assert jobs == 0
+            assert footer_reads == [path, path]
             assert dict(df.dtypes)[column] == types[1]
         finally:
             spark.conf.set(conf, old)
@@ -946,13 +962,14 @@ class TestParquetSchemaMemo:
         assert df.schema == plain.schema
         assert sorted(df.collect()) == sorted(plain.collect())
 
-    def test_new_session_infers_again(self, spark, tmp_path):
+    def test_new_session_infers_again(self, spark, tmp_path, footer_reads):
         path = str(tmp_path / "t.parquet")
         pq.write_table(pa.table({"a": [1]}), path)
         read_parquet(spark, path)
         other = spark.newSession()
         df, jobs = _jobs(other, read_parquet, other, path)
         assert jobs == 0
+        assert footer_reads == [path, path]
         assert df.schema == read_parquet(spark, path).schema
 
     # (name, table writer or None for the sf0.01 table `name`, confs):
