@@ -23,11 +23,11 @@ from hadoop_distributed_dynamic_file_system_spark import queries as _q  # noqa: 
 from hadoop_distributed_dynamic_file_system_spark import queries_llm as _qllm  # noqa: E402,F401
 
 # The round driver's oracle checks the FIRST 50 entries of queries().
-# ROTATION INVARIANT: there are more registered queries (228) than
+# ROTATION INVARIANT: there are more registered queries (227) than
 # window slots (50), so the window is rebuilt each round by STALENESS —
 # never-driver-checked queries first, then any query that was ever
 # driver-red until it re-earns green, then oldest-last-green (ties
-# alphabetical). 50 slots x 5 rounds = 250 >= 228, so every registered
+# alphabetical). 50 slots x 5 rounds = 250 >= 227, so every registered
 # query gets a fresh driver row at least every FIVE rounds (K grew
 # from 4 to 5 when the registry passed 200); tools/check.py still runs
 # ALL entries locally every round at sf0.01 AND sf0.1. Regenerate the

@@ -8,7 +8,9 @@ the monitor). Here the namespace is a dict of parquet-backed DataFrames;
 every `table()` call updates the same EWMA. Each `TableEntry` is the one
 record of its table's heat and hot-set level: `hotset.HotSetManager`
 reads them to decide, and `Catalog.set_level` is the only code that
-persists or unpersists a table. Registering a table is metadata-only,
+persists or unpersists a table. A level is a rank, not a storage tier:
+a table is persisted once, at `STORAGE`, when it leaves level 0 and
+freed when it returns there. Registering a table is metadata-only,
 like opening a file on the NameNode: `read_parquet` reads one footer on
 the driver and no Spark job runs.
 
@@ -50,10 +52,12 @@ TPCH_TABLES = (
 ALPHA = 0.5
 PRECISION_MS = 30_000
 
-# Hot-set level -> persist level. Level 0 = base (not cached) ≙
-# dfs.replication; higher = hotter. The reference's min=3..max=6
-# replication ladder maps onto the meaningful Spark storage tiers.
-LEVELS = (None, StorageLevel.DISK_ONLY, StorageLevel.MEMORY_AND_DISK)
+# Hot-set levels: 0 = base (not cached) ≙ dfs.replication; 1..TOP are
+# the fork's replication sets above it, higher = hotter. Every table
+# above level 0 holds one cached copy at STORAGE; its level is only the
+# policy's rank.
+TOP = 2
+STORAGE = StorageLevel.MEMORY_AND_DISK
 
 # The fork's NameNode.allocationLog (NameNode.java:126): one record per
 # level change and per capacity-triggered demotion pass.
@@ -205,8 +209,8 @@ class TableEntry:
 
     @property
     def cache_level(self) -> str | None:
-        """The persist level this entry's hot-set level maps to."""
-        return str(LEVELS[self.level]) if self.level else None
+        """The persist level of this entry's cached copy, if it has one."""
+        return str(STORAGE) if self.level else None
 
 
 class Catalog:
@@ -269,15 +273,16 @@ class Catalog:
 
     # -- the one persist point -------------------------------------------
     def set_level(self, ent: TableEntry, level: int) -> None:
-        """Move a table to hot-set `level`, re-persisting it at that
-        level's storage. The only code that persists or unpersists a
-        catalog table."""
+        """Move a table to hot-set `level`. Leaving level 0 persists the
+        table at `STORAGE`, returning to it unpersists it; a move between
+        dynamic levels changes only the rank. The only code that persists
+        or unpersists a catalog table."""
         if level == ent.level:
             return
-        if ent.level:
+        if not ent.level:
+            ent.df.persist(STORAGE)
+        elif not level:
             ent.df.unpersist()
-        if level:
-            ent.df.persist(LEVELS[level])
         allocation_log.info("%s: level %d -> %d (ewma %.0f ms)",
                             ent.name, ent.level, level, ent.access_time_ewma_ms)
         ent.level = level

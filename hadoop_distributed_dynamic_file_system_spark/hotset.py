@@ -19,9 +19,14 @@ Reference (the repo's one novel contribution):
 - State deliberately non-durable (FSDirectory.java:482-495): restart
   resets replication and sets together.
 
-Spark translation: replication levels → persist levels
-(`catalog.LEVELS`: base + 2 dynamic levels; higher replication ≙ more
-redundant/faster re-read). The manager is policy only: each level's
+Spark translation: the replication sets are hot-set levels 1..
+`catalog.TOP` above the base level 0. A level is the policy's rank:
+every table above level 0 holds one cached copy at `catalog.STORAGE`,
+persisted when it leaves level 0 and freed when it returns, so a move
+between dynamic levels re-reads nothing. Unlike the fork, a demotion
+from level 2 to 1 frees no storage (there it drops a replica); a probe
+still above `top` makes the next read run another pass, whose 1 → 0
+moves free memory. The manager is policy only: each level's
 members and minimum EWMA are derived from the catalog entries, which
 hold every table's live heat and level, at the moment it decides;
 `Catalog.set_level` carries out and logs each move. Re-registering a
@@ -35,7 +40,7 @@ from __future__ import annotations
 
 import logging
 
-from .catalog import LEVELS, Catalog, TableEntry, allocation_log
+from .catalog import TOP, Catalog, TableEntry, allocation_log
 
 logger = logging.getLogger(__name__)
 
@@ -89,7 +94,7 @@ class HotSetManager:
             return
         # insertFileIntoNewSet (:4488-4530): join the HIGHEST level whose
         # minimum EWMA this table's exceeds; an empty level accepts anyone
-        for lvl in range(len(LEVELS) - 1, ent.level, -1):
+        for lvl in range(TOP, ent.level, -1):
             coldest = min((e.access_time_ewma_ms for e in self._members(lvl)), default=None)
             if coldest is None or ent.access_time_ewma_ms > coldest:
                 self.catalog.set_level(ent, lvl)
@@ -98,7 +103,7 @@ class HotSetManager:
     def demote_cold_halves(self) -> None:
         """The capacity-pressure path (:4452-4484): in every level, demote
         the colder half (by access time) one level down."""
-        for lvl in range(len(LEVELS) - 1, 0, -1):
+        for lvl in range(TOP, 0, -1):
             ordered = sorted(self._members(lvl), key=lambda e: e.access_time_ewma_ms)
             for ent in ordered[: len(ordered) // 2]:
                 self.catalog.set_level(ent, lvl - 1)

@@ -19,9 +19,8 @@ REAL (no media library needed — pure byte/numpy arithmetic):
 
 NOT DECODED (needs a codec library, which the engine does not ship):
 pixel-level work on the remaining exotic profiles (progressive/
-arithmetic JPEG, WebP, 16-bit/palette PNG) yields null features.
-`decode_metadata` keeps md5-derived fake dimensions for the one query
-that still uses it.
+arithmetic JPEG, WebP, 16-bit/palette PNG) yields null features, and a
+payload that is not WAV yields one all-null audio chunk row.
 
 Scale notes: mapInPandas streams Arrow batches; memory is bounded by
 `spark.sql.execution.arrow.maxRecordsPerBatch`, decode parallelism by
@@ -30,7 +29,6 @@ input partitions — repartition before decode so batches are even.
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -318,8 +316,7 @@ def bmp_pixels(payload: bytes):
 
 def decode_media_metadata(binaries: DataFrame) -> DataFrame:
     """REAL decode stage: (doc_id, payload) → sniffed format + dims via
-    header arithmetic (see sniff_media) over Arrow batches. The fake
-    twin `decode_metadata` remains for payloads that aren't media."""
+    header arithmetic (see sniff_media) over Arrow batches."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -428,8 +425,9 @@ def compressed_raster_features(binaries: DataFrame) -> DataFrame:
 def wav_chunks(binaries: DataFrame, chunk_samples: int = 48000) -> DataFrame:
     """REAL audio chunking for PCM16 WAV payloads: RIFF parse + true
     windowed RMS over the sample stream (numpy int16) — the fan-out a
-    speech pipeline runs before per-chunk transcribe/embed. Non-WAV
-    payloads fall back to byte-halved samples with md5-derived rms."""
+    speech pipeline runs before per-chunk transcribe/embed. A payload
+    that is not WAV, or is malformed, yields one row with null
+    chunk_no, n_samples and rms, like the image decoders' nulls."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -438,98 +436,44 @@ def wav_chunks(binaries: DataFrame, chunk_samples: int = 48000) -> DataFrame:
             ids, nos, lens, rms = [], [], [], []
             for _, row in pdf.iterrows():
                 b = bytes(row["payload"])
-                decoded = False
+                chunks = [(None, None, None)]
                 if b[:4] == b"RIFF" and b[8:12] == b"WAVE":
                     # Malformed RIFF (no data chunk, truncated stream)
-                    # must fall through to the fallback, not raise
-                    # KeyError inside the executor (mirrors sniff_media).
+                    # must yield the null row, not raise KeyError inside
+                    # the executor (mirrors sniff_media).
                     try:
                         m = _wav_meta(b)
                         samples = np.frombuffer(
                             b[m["data_off"] : m["data_off"] + m["data_len"]],
                             dtype="<i2",
                         ).astype(np.float64)
-                        chunks = []
-                        for c, start in enumerate(
-                            range(0, len(samples), chunk_samples)
-                        ):
-                            win = samples[start : start + chunk_samples]
-                            chunks.append(
-                                (
-                                    c,
-                                    len(win),
-                                    round(float(np.sqrt((win**2).mean())), 6),
-                                )
-                            )
-                        for c, n, r in chunks:
-                            ids.append(row["doc_id"])
-                            nos.append(c)
-                            lens.append(n)
-                            rms.append(r)
-                        decoded = True
+                        wins = [
+                            samples[start : start + chunk_samples]
+                            for start in range(0, len(samples), chunk_samples)
+                        ]
+                        chunks = [
+                            (c, len(w), round(float(np.sqrt((w**2).mean())), 6))
+                            for c, w in enumerate(wins)
+                        ]
                     except Exception:
-                        decoded = False
-                if not decoded:  # non-audio payload: byte-halved fallback
-                    n_samples = max(1, len(b) // 2)
-                    for c, start in enumerate(
-                        range(0, n_samples, chunk_samples)
-                    ):
-                        ids.append(row["doc_id"])
-                        nos.append(c)
-                        lens.append(min(chunk_samples, n_samples - start))
-                        h = hashlib.md5(b + str(c).encode()).hexdigest()
-                        rms.append((int(h[:8], 16) % 10**6) / 10**6)
+                        pass
+                for c, n, r in chunks:
+                    ids.append(row["doc_id"])
+                    nos.append(c)
+                    lens.append(n)
+                    rms.append(r)
             yield pd.DataFrame(
-                {"doc_id": ids, "chunk_no": nos, "n_samples": lens, "rms": rms}
+                {
+                    "doc_id": ids,
+                    "chunk_no": pd.array(nos, dtype="Int32"),
+                    "n_samples": pd.array(lens, dtype="Int32"),
+                    "rms": pd.array(rms, dtype="float64"),
+                }
             )
 
     return binaries.mapInPandas(
         batches, schema="doc_id bigint, chunk_no int, n_samples int, rms double"
     )
-
-
-def attach_binary(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Testdata has no media files; synthesize a binary payload column
-    from the text bytes (deterministic, engine-portable)."""
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.encode(F.col(text_col), "utf-8").alias("payload"),
-    )
-
-
-def _fake_decode(payload: bytes) -> tuple[str, int, int]:
-    """Deterministic fake 'image header parse': md5-derived dims.
-
-    STUB: the real header parse is decode_media_metadata.
-    """
-    h = hashlib.md5(payload).hexdigest()
-    width = int(h[:4], 16) % 1920 + 1
-    height = int(h[4:8], 16) % 1080 + 1
-    fmt = ["png", "jpeg", "webp"][int(h[8], 16) % 3]
-    return fmt, width, height
-
-
-def decode_metadata(binaries: DataFrame) -> DataFrame:
-    """mapInPandas decode stage: (doc_id, payload) → typed metadata.
-
-    Real Arrow plumbing; fake decode (see _fake_decode). With media
-    libs installed this same operator returns true format/dims.
-    """
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            metas = [_fake_decode(b) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": [len(b) for b in pdf["payload"]],
-                    "format": [m[0] for m in metas],
-                    "width": [m[1] for m in metas],
-                    "height": [m[2] for m in metas],
-                }
-            )
-
-    return binaries.mapInPandas(batches, schema=DECODE_SCHEMA)
 
 
 def ahash_codes(binaries: DataFrame, hash_side: int = 8) -> DataFrame:

@@ -895,27 +895,6 @@ def fingerprints_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ============================================================== multimodal
 
-@query(
-    "multimodal_decode",
-    f"""
-    SELECT doc_id,
-           octet_length(encode(text)) AS n_bytes,
-           CASE ({_sql_hexval("md5(text)", 9, 1)}) % 3
-                WHEN 0 THEN 'png' WHEN 1 THEN 'jpeg' ELSE 'webp' END AS format,
-           (({_sql_hexval("md5(text)", 1, 4)}) % 1920 + 1)::INT AS width,
-           (({_sql_hexval("md5(text)", 5, 4)}) % 1080 + 1)::INT AS height
-    FROM documents
-    """,
-)
-def multimodal_decode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-column decode pipeline: synthesize payload bytes, run the
-    Arrow-batched mapInPandas decode stage (stubbed deterministic
-    'header parse' — real plumbing, fake pixels)."""
-    d = _t(spark, sf_dir, "documents")
-    binaries = multimodal.attach_binary(d, "text", "doc_id")
-    return multimodal.decode_metadata(binaries)
-
-
 # ============================================================== curation
 
 _MIX_RATES = {"en": 0.9, "de": 0.5, "fr": 0.5, "es": 0.5, "zh": 0.25}

@@ -62,7 +62,7 @@ def test_last_json_skips_log_lines():
         last_json("\n")
 
 
-def test_main_alternates_sides_and_prints_verdicts(tmp_path, monkeypatch, capsys):
+def _checkouts(tmp_path):
     bench = {"run_seconds": 10, "end_to_end": [
         {"name": "setup_s", "unit": "s", "better": "lower", "bound": 0.25},
         {"name": "wall_s", "unit": "s", "better": "lower", "bound": 0.24},
@@ -71,6 +71,11 @@ def test_main_alternates_sides_and_prints_verdicts(tmp_path, monkeypatch, capsys
     os.makedirs(change)
     with open(os.path.join(change, "BENCHMARK.json"), "w") as f:
         json.dump(bench, f)
+    return parent, change
+
+
+def test_main_alternates_sides_and_prints_verdicts(tmp_path, monkeypatch, capsys):
+    parent, change = _checkouts(tmp_path)
     calls = []
 
     def fake_run(checkout, workload, seed, seconds):
@@ -88,3 +93,25 @@ def test_main_alternates_sides_and_prints_verdicts(tmp_path, monkeypatch, capsys
     assert "setup_s:" in out and out.split("setup_s:")[1].split("\n")[0].endswith(": gain")
     wall = out.split("wall_s:")[-1].split("\n")[0]
     assert "OVER BOUND" not in wall and wall.endswith(": loss")
+
+
+def test_failed_run_voids_every_verdict(tmp_path, monkeypatch, capsys):
+    """One parent run that failed a request makes every metric invalid,
+    even where the change would otherwise win every pair."""
+    parent, change = _checkouts(tmp_path)
+    runs = {parent: 0, change: 0}
+
+    def fake_run(checkout, workload, seed, seconds):
+        runs[checkout] += 1
+        failed = 3 if checkout == parent and runs[checkout] == 2 else 0
+        return {"failed": failed, "attempted": 48, "metrics": {
+            "setup_s": {"value": 1.0 if checkout == change else 2.0, "unit": "s"},
+            "wall_s": {"value": 8.0 if checkout == change else 9.0, "unit": "s"}}}
+
+    monkeypatch.setattr(pairs, "run_once", fake_run)
+    assert pairs.main([parent, change, "--workload", "w", "--pairs", "10", "--seed", "7"]) == 1
+    out = capsys.readouterr().out
+    for name in ("setup_s", "wall_s"):
+        assert out.split(f"{name}:")[-1].split("\n")[0].endswith(": invalid")
+    assert "gain" not in out
+    assert "failed requests: parent 3, change 0" in out

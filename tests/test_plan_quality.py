@@ -65,7 +65,6 @@ class TestPlanQuality:
         # multimodal/UDAF/pipe families
         arrow_ok = {
             "udaf_geomean",            # GROUPED_AGG pandas UDF
-            "multimodal_decode",       # mapInPandas decode plumbing
             "media_roundtrip",         # mapInPandas encode+real decode
             "wav_roundtrip",           # mapInPandas encode+RIFF parse
             "pipe_translate",          # rdd.pipe external process

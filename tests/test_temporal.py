@@ -207,18 +207,22 @@ from hadoop_distributed_dynamic_file_system_spark.operators import multimodal
 
 
 def test_audio_chunks_cover_stream_exactly(spark):
+    """WAV streams split into full windows plus a tail; a payload that
+    is not WAV (or is a truncated RIFF) yields one all-null row."""
+    long_wav = multimodal.make_wav([3] * 100000)
     df = spark.createDataFrame(
-        [(1, b"x" * 200000), (2, b"y" * 1000)], "doc_id long, payload binary"
+        [(1, long_wav), (2, multimodal.make_wav([4] * 500)), (3, b"x" * 200000),
+         (4, long_wav[:40])],
+        "doc_id long, payload binary",
     )
     chunks = multimodal.wav_chunks(df, chunk_samples=48000).collect()
     by_doc = {}
     for r in chunks:
-        by_doc.setdefault(r.doc_id, []).append(r)
+        by_doc.setdefault(r.doc_id, []).append((r.chunk_no, r.n_samples, r.rms))
     # doc 1: 100000 samples -> 3 chunks (48k, 48k, 4k); doc 2: 1 chunk of 500
-    assert [c.n_samples for c in sorted(by_doc[1], key=lambda r: r.chunk_no)] == \
-        [48000, 48000, 4000]
-    assert [c.n_samples for c in by_doc[2]] == [500]
-    assert all(0.0 <= r.rms < 1.0 for r in chunks)
+    assert sorted(by_doc[1]) == [(0, 48000, 3.0), (1, 48000, 3.0), (2, 4000, 3.0)]
+    assert by_doc[2] == [(0, 500, 4.0)]
+    assert by_doc[3] == by_doc[4] == [(None, None, None)]
 
 
 # ------------------------------------------------- incremental rollups

@@ -15,7 +15,10 @@ BENCHMARK.json, and the verdict:
   neither side) and its median is better than the parent's by more
   than the parent's interquartile range;
 - loss: the same with the sides swapped;
-- unresolved: anything else.
+- unresolved: anything else;
+- invalid: any run on either side failed a request. Every metric then
+  reads invalid and the tool exits 1, since a run that failed requests
+  did not do the work its metrics time.
 """
 
 from __future__ import annotations
@@ -103,6 +106,7 @@ def main(argv: list[str] | None = None) -> int:
             print(f"pair {i + 1} {side}: {shown} failed={res['failed']}/{res['attempted']}",
                   flush=True)
 
+    failed = {side: sum(r["failed"] for r in rs) for side, rs in runs.items()}
     print(f"\n{args.workload} seed {args.seed}, {args.pairs} pairs "
           f"(q1/median/q3; wins = pairs the change won)")
     for m in metrics:
@@ -110,6 +114,8 @@ def main(argv: list[str] | None = None) -> int:
         parent = [value(r, name) for r in runs["parent"]]
         change = [value(r, name) for r in runs["change"]]
         v = verdict(parent, change, m["better"])
+        if any(failed.values()):
+            v["verdict"] = "invalid"
         shift = (v["change_median"] / v["parent_median"] - 1.0) if v["parent_median"] else 0.0
         worse = shift if m["better"] == "lower" else -shift
         bound = "OVER BOUND" if worse > m["bound"] else "within bound"
@@ -118,9 +124,8 @@ def main(argv: list[str] | None = None) -> int:
               f"change {fmt(f'{x:.3f}' for x in quartiles(change))}, "
               f"shift {shift:+.1%} ({bound} {m['bound']:.0%}), wins {v['wins']}/{args.pairs}, "
               f"losses {v['losses']}, parent IQR {v['parent_iqr']:.3f}: {v['verdict']}")
-    failed = {side: sum(r["failed"] for r in rs) for side, rs in runs.items()}
     print(f"failed requests: parent {failed['parent']}, change {failed['change']}")
-    return 0
+    return 1 if any(failed.values()) else 0
 
 
 if __name__ == "__main__":
