@@ -8,9 +8,7 @@ the monitor). Here the namespace is a dict of parquet-backed DataFrames;
 every `table()` call updates the same EWMA. Each `TableEntry` is the one
 record of its table's heat and hot-set level: `hotset.HotSetManager`
 reads them to decide, and `Catalog.set_level` is the only code that
-persists or unpersists a table. A level is a rank, not a storage tier:
-a table is persisted once, at `STORAGE`, when it leaves level 0 and
-freed when it returns there. Registering a table is metadata-only,
+persists or unpersists a table. Registering a table is metadata-only,
 like opening a file on the NameNode: `read_parquet` reads one footer on
 the driver and no Spark job runs.
 
