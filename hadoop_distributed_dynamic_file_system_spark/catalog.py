@@ -10,7 +10,8 @@ record of its table's heat and hot-set level: `hotset.HotSetManager`
 reads them to decide, and `Catalog.set_level` is the only code that
 persists or unpersists a table. Registering a table is metadata-only,
 like opening a file on the NameNode: `read_parquet` reads one footer on
-the driver and no Spark job runs.
+the driver, its file listing decides the single-block exemption, and no
+Spark job runs.
 
 EWMA formula (FSDirectory.java:1365-1373, replicated exactly):
     new = (1 - alpha) * old + alpha * now
@@ -89,11 +90,12 @@ def _local(path: str) -> str | None:
 
 
 def _listing(local: str) -> tuple | None:
-    """(relative path, size, mtime_ns, inode) of every file under
-    `local`, or None when it does not exist or changes while it is
+    """(relative path, size, mtime_ns, inode) of every data file under
+    `local`, the files Spark's file index reads (`_hidden` names are left
+    out), or None when `local` does not exist or changes while it is
     listed. A single file lists as itself, with relative path '.'."""
     if os.path.isfile(local):
-        files = [local]
+        files = [] if _hidden(os.path.basename(local)) else [local]
     elif os.path.isdir(local):
         files = [os.path.join(root, f) for root, _dirs, fs in os.walk(local) for f in fs]
     else:
@@ -101,8 +103,10 @@ def _listing(local: str) -> tuple | None:
     out = []
     try:
         for f in sorted(files):
-            st = os.stat(f)
-            out.append((os.path.relpath(f, local), st.st_size, st.st_mtime_ns, st.st_ino))
+            rel = os.path.relpath(f, local)
+            if rel == "." or not any(_hidden(c) for c in rel.split(os.sep)):
+                st = os.stat(f)
+                out.append((rel, st.st_size, st.st_mtime_ns, st.st_ino))
     except FileNotFoundError:
         return None
     return tuple(out)
@@ -124,14 +128,12 @@ def _footer_file(local: str, listing: tuple) -> str | None:
     relative path (the JVM resolves it against its own working
     directory), a listed summary file or `_`-prefixed directory, or no
     data file."""
-    if not os.path.isabs(local) or not listing:
+    rels = [rel for rel, *_ in listing]
+    if (not os.path.isabs(local) or not rels
+            or any(c.startswith("_") for rel in rels for c in rel.split(os.sep))):
         return None
-    if listing[0][0] == ".":
-        return None if _hidden(os.path.basename(local)) else local
-    visible = [rel for rel, *_ in listing if not any(_hidden(c) for c in rel.split(os.sep))]
-    if not visible or any(c.startswith("_") for rel in visible for c in rel.split(os.sep)):
-        return None
-    return os.path.join(local, min(visible, key=lambda rel: rel.encode("utf-16-be")))
+    first = min(rels, key=lambda rel: rel.encode("utf-16-be"))
+    return local if first == "." else os.path.join(local, first)
 
 
 def _footer_schema(spark: SparkSession, local: str, listing: tuple) -> StructType | None:
@@ -180,19 +182,24 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     fingerprinted, or whose footer Spark could pick differently, takes
     the plain read, so Spark infers the schema or raises its own
     errors for it."""
+    return _read(spark, path)[0]
+
+
+def _read(spark: SparkSession, path: str) -> tuple[DataFrame, tuple | None]:
+    """`read_parquet`, and the `_listing` it took (None: no listing)."""
     local = _local(path)
     fingerprint = None if local is None else _listing(local)
     if fingerprint is None:
-        return spark.read.parquet(path)
+        return spark.read.parquet(path), None
     key = (path, tuple(spark.conf.get(k) for k in _INFERENCE_CONFS))
     memo = _schemas.setdefault(spark, {})
     hit = memo.get(key)
     if hit is not None and hit[0] == fingerprint:
-        return spark.read.schema(hit[1]).parquet(path)
+        return spark.read.schema(hit[1]).parquet(path), fingerprint
     schema = _footer_schema(spark, local, fingerprint)
     df = spark.read.parquet(path) if schema is None else spark.read.schema(schema).parquet(path)
     memo[key] = (fingerprint, df.schema)
-    return df
+    return df, fingerprint
 
 
 @dataclass
@@ -202,7 +209,7 @@ class TableEntry:
     df: DataFrame = field(repr=False)
     access_time_ewma_ms: float = 0.0
     access_count: int = 0
-    num_partitions: int | None = None  # counted on first need: Catalog.num_partitions
+    single_block: bool = False  # exempt from the hot set, set by Catalog.register_path
     level: int = 0  # hot-set level, changed only by Catalog.set_level
 
     @property
@@ -225,12 +232,16 @@ class Catalog:
         new path is read first, so a path that cannot be read raises and
         leaves the earlier table as it was. The replaced entry then drops
         to level 0 while it is still registered, which frees its cached
-        copy (the reference's delete hook, FSNamesystem.java:301-303)."""
-        df = read_parquet(self.spark, path)
+        copy (the reference's delete hook, FSNamesystem.java:301-303).
+        Single-block: one data file <= `spark.sql.files.openCostInBytes`,
+        Spark's one-partition scans at parallelism >= 2 (maxSplitBytes)."""
+        df, files = _read(self.spark, path)
+        single_block = files is not None and len(files) == 1 and (
+            files[0][1] <= self.spark._jsparkSession.sessionState().conf().filesOpenCostInBytes())
         old = self._tables.get(name)
         if old is not None:
             self.set_level(old, 0)
-        self._tables[name] = TableEntry(name=name, path=path, df=df)
+        self._tables[name] = TableEntry(name=name, path=path, df=df, single_block=single_block)
 
     def names(self) -> list[str]:
         return sorted(self._tables)
@@ -240,14 +251,6 @@ class Catalog:
 
     def entries(self) -> list[TableEntry]:
         return list(self._tables.values())
-
-    def num_partitions(self, ent: TableEntry) -> int:
-        """Partitions of a full scan of the table, counted the first time
-        the hot set asks: the count plans a physical scan."""
-        if ent.num_partitions is None:
-            # counted on the JVM: df.rdd would build a Python RDD wrapper
-            ent.num_partitions = ent.df._jdf.queryExecution().toRdd().getNumPartitions()
-        return ent.num_partitions
 
     # -- access path (the getBlockLocations analog) --------------------
     def table(self, name: str, track_access: bool = True) -> DataFrame:

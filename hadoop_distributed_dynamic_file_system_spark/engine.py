@@ -21,16 +21,10 @@ from .session import get_spark
 
 
 class Engine:
-    def __init__(
-        self,
-        data_dir: str | None = None,
-        spark: SparkSession | None = None,
-        hot_set: bool = True,
-        **session_kwargs,
-    ) -> None:
-        self.spark = spark or get_spark(**session_kwargs)
+    def __init__(self, data_dir: str | None = None, spark: SparkSession | None = None) -> None:
+        self.spark = spark or get_spark()
         self.catalog = Catalog(self.spark)
-        self.hotset = HotSetManager(self.catalog) if hot_set else None
+        self.hotset = HotSetManager(self.catalog)
         if data_dir:
             for name in TPCH_TABLES:
                 path = os.path.join(data_dir, f"{name}.parquet")
@@ -43,8 +37,7 @@ class Engine:
         hot-set promotion/demotion pass (the reference's per-open
         dynamic-replication hook)."""
         df = self.catalog.table(name)
-        if self.hotset is not None:
-            self.hotset.on_access(name)
+        self.hotset.on_access(name)
         return df
 
     def sql(self, query: str) -> DataFrame:

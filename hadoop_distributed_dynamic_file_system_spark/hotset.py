@@ -34,6 +34,8 @@ table sends its old entry to level 0 (the delete hook). "Capacity" =
 fraction of used storage memory from the SparkContext status tracker
 (injectable for tests). State lives only in the catalog — non-durable,
 like the reference. Defaults mirror the fork: alpha=0.5, top=80%.
+Single-block (exempt) = one data file no larger than
+`spark.sql.files.openCostInBytes`, taken from the file listing.
 """
 
 from __future__ import annotations
@@ -84,8 +86,8 @@ class HotSetManager:
         """allocateReplication (FSNamesystem.java:4425): called on every
         table access, after the catalog EWMA update."""
         ent = self.catalog.entry(table)
-        if self.catalog.num_partitions(ent) <= 1:
-            return  # single-block exemption
+        if ent.single_block:
+            return  # single-block exemption (:4427-4431), decided at registration
         usage = self._usage_fn()
         if usage > TOP_PERCENT:
             allocation_log.info("storage %.1f%% used > %.0f%%: demoting cold halves",

@@ -11,7 +11,7 @@ fixed behavior: the checker must FAIL on the pre-fix oracle shape
 import duckdb
 import pytest
 
-from tools.check import arrow_type_class, compare, spark_type_class
+from tools.check import arrow_type_class, compare, oracle_runner, spark_type_class
 from tools.lint_oracles import SUSPECT_TYPES
 
 
@@ -139,3 +139,23 @@ class TestOracleLint:
         from tools.lint_oracles import lint
 
         assert lint("/root/testdata/sf0.001") == 0
+
+
+class TestOracleRunner:
+    def test_shared_text_runs_once_and_is_released(self):
+        """An oracle text shared by several registry entries runs once per
+        sweep; its result is dropped after its last entry, and an
+        unshared result is never kept."""
+        runs = []
+
+        class Con:
+            def execute(self, text):
+                runs.append(text)
+                return duckdb.execute(text)
+
+        a, b = "SELECT 1 AS x", "SELECT 2 AS x"
+        run = oracle_runner(Con(), [a, b, a, a])
+        assert [run(t)["x"][0].as_py() for t in (a, b, a, a)] == [1, 2, 1, 1]
+        assert runs == [a, b]
+        run(a)  # a fourth use of `a` was not announced: it runs again
+        assert runs == [a, b, a]

@@ -3,13 +3,15 @@
 import json
 import os
 
-from hadoop_distributed_dynamic_file_system_spark import cli
+import pytest
+
+from hadoop_distributed_dynamic_file_system_spark import cli, session
 from hadoop_distributed_dynamic_file_system_spark.engine import Engine
 
 
 class TestEngine:
     def test_table_access_updates_heat(self, spark, sf_dir):
-        eng = Engine(data_dir=sf_dir, spark=spark, hot_set=True)
+        eng = Engine(data_dir=sf_dir, spark=spark)
         eng.table("orders")
         eng.table("orders")
         eng.table("nation")
@@ -20,9 +22,24 @@ class TestEngine:
         spark.catalog.clearCache()
 
     def test_sql_over_registered_views(self, spark, sf_dir):
-        eng = Engine(data_dir=sf_dir, spark=spark, hot_set=False)
+        eng = Engine(data_dir=sf_dir, spark=spark)
         n = eng.sql("SELECT count(*) AS n FROM nation").collect()[0].n
         assert n == 25
+
+
+class TestDriverMemory:
+    @pytest.mark.parametrize("gib, want", [(16, "8g"), (128, "24g"), (1, "1g")])
+    def test_default_follows_host_memory(self, monkeypatch, gib, want):
+        pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": gib * 2**30 // 4096}
+        monkeypatch.setattr(session.os, "sysconf", pages.__getitem__)
+        monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+        assert session.driver_memory() == want
+
+    def test_env_var_wins(self, monkeypatch):
+        monkeypatch.setattr(session.os, "sysconf", {"SC_PAGE_SIZE": 4096,
+                                                    "SC_PHYS_PAGES": 2**22}.__getitem__)
+        monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+        assert session.driver_memory() == "3g"
 
 
 class TestCli:

@@ -620,7 +620,7 @@ class TestCatalogAndHotSet:
     def _read(self, cat, mgr, t, name, at_s):
         t["now"] = at_s * 1000.0
         cat.table(name)
-        cat.entry(name).num_partitions = 4  # sf0.001 files are 1 block
+        cat.entry(name).single_block = False  # sf0.001 files are 1 block
         mgr.on_access(name)
 
     def test_ewma_formula_and_precision_clamp(self, spark, sf_dir):
@@ -705,7 +705,7 @@ class TestCatalogAndHotSet:
         cat = self._catalog(spark, sf_dir, lambda: t["now"], names)
         for name in names[1:]:  # nation keeps its single partition: exempt
             cat.table(name, track_access=False)
-            cat.entry(name).num_partitions = 4
+            cat.entry(name).single_block = False
         mgr = HotSetManager(cat, usage_fn=lambda: usage["pct"])
         for at_s, name, pct, want in self.REPLAY:
             t["now"], usage["pct"] = at_s * 1000.0, pct
@@ -807,25 +807,19 @@ class TestCatalogAndHotSet:
         mgr.on_access("nation")
         assert mgr.level_of.get("nation", 0) == 0  # exempt, stayed base
 
-    def test_partition_count_matches_python_rdd(self, spark, tmp_path):
-        path = str(tmp_path / "multi")
-        spark.range(3000).repartition(3).write.parquet(path)
-        cat = Catalog(spark)
-        cat.register_path("multi", path)
-        ent = cat.entry("multi")
-        assert ent.num_partitions is None  # not counted at registration
-        assert cat.num_partitions(ent) == ent.df.rdd.getNumPartitions() == 3
-        assert ent.num_partitions == 3
-
-    def test_register_launches_no_job(self, spark, tmp_path):
-        """Registration reads one footer on the driver and plans no scan,
-        like the fork's NameNode-only open (FSNamesystem.getBlockLocations)."""
+    def test_register_launches_no_job(self, spark, sf_dir, tmp_path):
+        """Registration reads one footer on the driver, decides the
+        single-block exemption from the listing and plans no scan, like
+        the fork's NameNode-only open (FSNamesystem.getBlockLocations)."""
         path = str(tmp_path / "t")
         spark.range(3000).repartition(3).write.parquet(path)
         eng = Engine(spark=spark)
         _, jobs = _jobs(spark, eng.register, "t", path)
         assert jobs == 0
-        assert eng.catalog.entry("t").num_partitions is None
+        assert eng.catalog.entry("t").single_block is False
+        _, jobs = _jobs(spark, eng.register, "n", os.path.join(sf_dir, "nation.parquet"))
+        assert jobs == 0
+        assert eng.catalog.entry("n").single_block is True
         assert eng.sql("SELECT count(*) FROM t").collect()[0][0] == 3000
 
     def test_failed_reregister_keeps_old_table(self, spark, tmp_path):
@@ -1054,6 +1048,113 @@ class TestParquetSchemaMemo:
         with pytest.raises(AnalysisException) as ours:
             read_parquet(spark.newSession(), path)
         assert ours.value.getCondition() == plain.value.getCondition() == "UNABLE_TO_INFER_SCHEMA"
+
+
+OPEN_COST = "spark.sql.files.openCostInBytes"
+
+
+def _scan_partitions(df):
+    """Spark's own partition count of a full scan of `df`."""
+    return df._jdf.queryExecution().toRdd().getNumPartitions()
+
+
+def _write_files(n, rows):
+    """A writer of `n` pyarrow files of `rows` rows each into a directory,
+    named like a replay table's files."""
+    def write(spark, path):
+        os.makedirs(path)
+        for i in range(n):
+            pq.write_table(pa.table({"id": range(i * rows, (i + 1) * rows)}),
+                           os.path.join(path, f"part-{i:05d}.parquet"))
+    return write
+
+
+class TestSingleBlockExemption:
+    """The single-block rule `Catalog.register_path` takes from the file
+    listing (one data file no larger than `spark.sql.files.openCostInBytes`)
+    against Spark's partition count of a full scan."""
+
+    @pytest.fixture(autouse=True)
+    def _clear_cache(self, spark):
+        yield
+        spark.catalog.clearCache()
+
+    # (name, table writer or None for the sf0.01 table `name`, single-block)
+    CASES = [
+        ("replay_shaped", _write_files(4, 1000), False),
+        ("spark_partitioned", _write_spark_partitioned, False),
+        ("one_row", lambda spark, path: pq.write_table(pa.table({"id": [1]}), path), True),
+        ("spark_one_file",  # one data file next to _SUCCESS and .crc files
+         lambda spark, path: spark.range(10).coalesce(1).write.parquet(path), True),
+        ("many_small_files",
+         lambda spark, path: spark.range(1000).repartition(20).write.parquet(path), False),
+    ] + [(t, None, True) for t in TPCH_TABLES]
+
+    @pytest.mark.parametrize("name, write, single", CASES, ids=[c[0] for c in CASES])
+    def test_rule_matches_scan_partitions(self, spark, sf_dir, tmp_path, name, write, single):
+        if write is None:
+            path = os.path.join(os.path.dirname(sf_dir), "sf0.01", f"{name}.parquet")
+        else:
+            path = str(tmp_path / name)
+            write(spark, path)
+        cat = Catalog(spark)
+        cat.register_path(name, path)
+        ent = cat.entry(name)
+        assert ent.single_block is single
+        assert (_scan_partitions(ent.df) <= 1) is single
+
+    @pytest.mark.parametrize("slack, single", [(0, True), (-1, False)], ids=["at", "over"])
+    def test_open_cost_boundary(self, spark, tmp_path, slack, single):
+        """A file exactly `openCostInBytes` long is one partition; one byte
+        longer, it is split in two."""
+        path = str(tmp_path / "t.parquet")
+        pq.write_table(pa.table({"id": range(20_000)}), path)
+        old = spark.conf.get(OPEN_COST)
+        try:
+            spark.conf.set(OPEN_COST, str(os.path.getsize(path) + slack))
+            cat = Catalog(spark)
+            cat.register_path("t", path)
+            ent = cat.entry("t")
+            assert ent.single_block is single
+            assert (_scan_partitions(ent.df) <= 1) is single
+        finally:
+            spark.conf.set(OPEN_COST, old)
+
+    def test_second_file_ends_exemption(self, spark, tmp_path):
+        """The replay's write path: a table of one small file is exempt;
+        a write adds a file and re-registers the table, which the next
+        read then promotes."""
+        path = str(tmp_path / "t")
+        _write_files(1, 10)(spark, path)
+        eng = Engine(spark=spark)
+        eng.hotset = HotSetManager(eng.catalog, usage_fn=lambda: 0.0)
+        eng.register("t", path)
+        eng.table("t")
+        assert eng.catalog.entry("t").single_block is True
+        assert eng.hotset.level_of == {}
+        pq.write_table(pa.table({"id": [10]}), os.path.join(path, "part-w0001.parquet"))
+        eng.register("t", path)
+        ent = eng.catalog.entry("t")
+        assert ent.single_block is False
+        assert _scan_partitions(ent.df) == 2
+        eng.table("t")
+        assert eng.hotset.level_of == {"t": TOP}
+
+    def test_parallelism_one_packs_small_files(self, spark, tmp_path):
+        """The known disagreement: at scan parallelism 1 Spark packs small
+        files into one partition, while the rule counts files, so the
+        table is not exempt."""
+        path = str(tmp_path / "t")
+        _write_files(2, 10)(spark, path)
+        spark.conf.set("spark.sql.leafNodeDefaultParallelism", "1")
+        try:
+            cat = Catalog(spark)
+            cat.register_path("t", path)
+            ent = cat.entry("t")
+            assert ent.single_block is False
+            assert _scan_partitions(ent.df) == 1
+        finally:
+            spark.conf.unset("spark.sql.leafNodeDefaultParallelism")
 
 
 def _jobs(spark, fn, *args):

@@ -16,6 +16,7 @@ import os
 import sys
 import time
 import traceback
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -212,6 +213,26 @@ def compare(name, spark_df, duck_tbl):
     return problems
 
 
+def oracle_runner(con, texts):
+    """`run(text)` -> the Arrow table of oracle SQL `text` on `con`. A
+    text that occurs more than once in `texts` runs once: its result is
+    kept until `run` has returned it that many times; no other result is
+    kept."""
+    left = Counter(texts)
+    kept = {}
+
+    def run(text):
+        tbl = kept.pop(text, None)
+        if tbl is None:
+            tbl = con.execute(text).fetch_arrow_table()
+        left[text] -= 1
+        if left[text] > 0:
+            kept[text] = tbl
+        return tbl
+
+    return run
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -224,6 +245,7 @@ def main():
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
+    oracle = oracle_runner(con, [oracles[n] for n in qs if n in oracles and (not only or n in only)])
     n_pass = n_fail = n_skip = 0
     for name, fn in qs.items():
         if only and name not in only:
@@ -244,7 +266,7 @@ def main():
                 print(f"  ~ {name}: rows-only check, {cnt} rows ({time.time()-t0:.1f}s)")
                 n_skip += 1
                 continue
-            duck_tbl = con.execute(oracles[name]).fetch_arrow_table()
+            duck_tbl = oracle(oracles[name])
             problems = compare(name, df, duck_tbl)
             if problems:
                 n_fail += 1
