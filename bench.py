@@ -11,10 +11,11 @@ value is the sum of per-query wall times.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -274,9 +275,6 @@ def _artifact_rounds(repo: str) -> tuple[int, int]:
     """(max CORRECTNESS round, max BENCH round) from the driver's
     artifact files — the single source both infer_round and
     infer_phase read, so the two can never silently disagree."""
-    import glob
-    import re
-
     def _max_round(pattern):
         ns = [
             int(m.group(1))
@@ -374,6 +372,105 @@ def stdout_line(fields: dict, timings: dict[str, float]) -> str:
     return out
 
 
+def record_target(repo: str, forced_round: int | None, cpus: int) -> tuple[int, str, str]:
+    """(round, default label, full-record path) of a run on `cpus`
+    cores. The core count is in the label and the file name, so a run
+    on 8 cores cannot overwrite the same round's 32-core record."""
+    rnd = infer_round(repo, forced_round)
+    phase = f"-{infer_phase(repo)}-inferred" if forced_round is None else ""
+    return (rnd, f"r{rnd:02d}-c{cpus}{phase}",
+            os.path.join(repo, f"BENCH_LOCAL_r{rnd:02d}_c{cpus}.json"))
+
+
+def newest_record(repo: str) -> str:
+    """The BENCH_LOCAL record of the highest round, the most recently
+    written one when a round has several (core counts, labels)."""
+    return max(
+        glob.glob(os.path.join(repo, "BENCH_LOCAL_r*.json")),
+        key=lambda p: (int(re.search(r"BENCH_LOCAL_r(\d+)", p).group(1)), os.path.getmtime(p)),
+    )
+
+
+def io_tier(spark, scale: float) -> tuple[dict, dict, dict]:
+    """(timings, spreads, io block) of the IO tier, timed by
+    measure.time_reps like every other entry:
+
+    - dfsio_write / dfsio_read (TestDFSIO.java:63): bulk sequential
+      write of a generated table (~100 B/row) into a new directory,
+      then a full read of it; seconds in `queries`, MB/s under `io`;
+    - nnbench_meta (hdfs/NNBench.java): pure metadata ops through the
+      FsShell surface, create/stat/ls/delete, no data;
+    - mrbench (MRBench.java:38,301-304): framework overhead per job of
+      a tiny shuffle-sort pipeline, the sum of 4 runs (avg ms in `io`).
+
+    dfsio and nnbench take the median of 3: ambient load distorts these
+    IO-bound numbers most, and their spreads make a dirty run show."""
+    import shutil
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    from hadoop_distributed_dynamic_file_system_spark import datagen
+    from hadoop_distributed_dynamic_file_system_spark.fileops import FsShell
+
+    timings: dict[str, float] = {}
+    spreads: dict[str, list[float]] = {}
+
+    def timed(name: str, thunk) -> measure.Timing:
+        t = measure.time_reps(spark, thunk, 3, name)
+        timings[name], spreads[name] = round(t.value, 3), t.spread
+        return t
+
+    io_dir = tempfile.mkdtemp(prefix="dfsio_")
+    try:
+        gen = datagen.teragen(spark, max(100_000, int(10_000_000 * scale)))
+        # each write rep makes a new table; each read rep reads one
+        tables = [os.path.join(io_dir, f"rep{i}") for i in range(3)]
+        to_write, to_read = iter(tables), iter(tables)
+        w = timed("dfsio_write", lambda: gen.write.parquet(next(to_write)))
+        r = timed("dfsio_read", lambda: materialize(spark.read.parquet(next(to_read))))
+        nbytes = sum(
+            os.path.getsize(os.path.join(dp, f)) for dp, _, fs in os.walk(tables[0]) for f in fs
+        )
+    finally:
+        shutil.rmtree(io_dir, ignore_errors=True)
+    io = {
+        "write_mb_s": round(nbytes / w.value / 1e6, 1),
+        "read_mb_s": round(nbytes / r.value / 1e6, 1),
+        "bytes": nbytes,
+    }
+
+    meta_dir = tempfile.mkdtemp(prefix="nnbench_")
+    try:
+        sh = FsShell(spark)
+        files = [os.path.join(meta_dir, f"f{i}") for i in range(200)]
+
+        def meta_ops() -> None:  # leaves meta_dir empty for the next rep
+            for f in files:
+                sh.touchz(f)
+            for f in files:
+                sh.stat(f)
+            sh.ls(meta_dir)
+            for f in files:
+                sh.rm(f, skip_trash=True)
+
+        m = timed("nnbench_meta", meta_ops)
+    finally:
+        shutil.rmtree(meta_dir, ignore_errors=True)
+    io["meta_ops_s"] = round((3 * len(files) + 1) / m.value, 1)
+
+    def mr_job() -> None:
+        lines = spark.range(10_000).select(
+            F.lpad(F.col("id").cast("string"), 10, "0").alias("line"))
+        materialize(lines.repartition(8, "line").sortWithinPartitions("line"))
+
+    measure.warm("mrbench", mr_job)
+    mr = measure.time_reps(spark, mr_job, 4, "mrbench")
+    timings["mrbench"] = round(sum(mr.reps), 3)
+    io["mrbench_avg_ms"] = round(1000 * sum(mr.reps) / len(mr.reps), 1)
+    return timings, spreads, io
+
+
 def main() -> None:
     # --round N / --label STR pin the round this run records under
     # (ADVICE r7: the max(CORRECTNESS_r*)+1 inference mislabels a
@@ -395,6 +492,8 @@ def main() -> None:
             run_label = a.split("=", 1)[1]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
+    sf_numeric = sf.replace(".", "").isdigit()
+    scale = float(sf) if sf_numeric else 0.1  # data sizes below scale with it
     # captured BEFORE the session spins up its own 32 threads: ambient
     # machine load at start is the contamination signal; the end
     # snapshot mostly reads this bench's own work
@@ -431,7 +530,7 @@ def main() -> None:
     from hadoop_distributed_dynamic_file_system_spark import datagen
     from hadoop_distributed_dynamic_file_system_spark.operators import sort as sort_ops
 
-    n_rows = int(2_000_000 * (float(sf) if sf.replace(".", "").isdigit() else 0.1))
+    n_rows = int(2_000_000 * scale)
     measure.warm("terasort", lambda: materialize(
         sort_ops.total_order_sort(datagen.teragen(spark, 10_000), "key10")))
     single_shot("terasort", lambda: materialize(
@@ -512,110 +611,13 @@ def main() -> None:
         selected = gen.filter(F.col("line").startswith("apple")).select("line")
         materialize(sort_ops.total_order_sort(selected, "line"))  # sort
 
-    gm_rows = max(
-        10_000, int(1_000_000 * (float(sf) if sf.replace(".", "").isdigit() else 0.1))
-    )
+    gm_rows = max(10_000, int(1_000_000 * scale))
     measure.warm("gridmix", lambda: gridmix(10_000))  # the composite plan shape
     single_shot("gridmix_pipeline", lambda: gridmix(gm_rows))
 
-    # TestDFSIO analog (ref src/test/.../fs/TestDFSIO.java:63): bulk
-    # sequential write then read of a generated table, reported both as
-    # wall seconds (round-over-round comparable in `queries`) and as
-    # MB/s (the reference's metric vocabulary) under `io`.
-    import shutil
-    import tempfile
-
-    # 3-rep MEDIAN + spread for both io entries and nnbench (r10
-    # VERDICT ask #5): these are one-shot, metadata/IO-bound numbers —
-    # exactly the entries ambient machine load distorts most (the two
-    # worst outliers on the contaminated r10 driver record read 2.9x /
-    # >1.5x while the idle record sat in band). Median-of-3 absorbs one
-    # contaminated rep; the spread rows make a dirty run self-evident.
-    io_dir = tempfile.mkdtemp(prefix="dfsio_")
-    try:
-        io_rows = max(100_000, int(10_000_000 * (
-            float(sf) if sf.replace(".", "").isdigit() else 0.1)))
-        gen = datagen.teragen(spark, io_rows)  # ~100 B/row like DFSIO
-        w_reps, r_reps = [], []
-        nbytes = 0
-        for rep in range(3):
-            rep_dir = os.path.join(io_dir, f"rep{rep}")
-            t0 = time.time()
-            gen.write.mode("overwrite").parquet(rep_dir)
-            w_reps.append(time.time() - t0)
-            if rep == 0:
-                nbytes = sum(
-                    os.path.getsize(os.path.join(dp, f))
-                    for dp, _, fs in os.walk(rep_dir) for f in fs
-                )
-            t0 = time.time()
-            materialize(spark.read.parquet(rep_dir))
-            r_reps.append(time.time() - t0)
-            shutil.rmtree(rep_dir, ignore_errors=True)
-        w_sec, r_sec = sorted(w_reps)[1], sorted(r_reps)[1]
-        timings["dfsio_write"] = round(w_sec, 3)
-        timings["dfsio_read"] = round(r_sec, 3)
-        spreads["dfsio_write"] = [round(min(w_reps), 3), round(max(w_reps), 3)]
-        spreads["dfsio_read"] = [round(min(r_reps), 3), round(max(r_reps), 3)]
-        io_stats = {
-            "write_mb_s": round(nbytes / w_sec / 1e6, 1),
-            "read_mb_s": round(nbytes / r_sec / 1e6, 1),
-            "bytes": nbytes,
-        }
-    finally:
-        shutil.rmtree(io_dir, ignore_errors=True)
-
-    # NNBench analog (ref hdfs/NNBench.java): pure metadata ops/s
-    # through the FsShell surface — create/stat/ls/delete, no data.
-    from hadoop_distributed_dynamic_file_system_spark.fileops import FsShell
-
-    meta_dir = tempfile.mkdtemp(prefix="nnbench_")
-    try:
-        sh = FsShell(spark)
-        n_meta = 200
-        m_reps = []
-        for rep in range(3):
-            rep_dir = os.path.join(meta_dir, f"rep{rep}")
-            os.mkdir(rep_dir)
-            t0 = time.time()
-            for i in range(n_meta):
-                sh.touchz(os.path.join(rep_dir, f"f{i}"))
-            for i in range(n_meta):
-                sh.stat(os.path.join(rep_dir, f"f{i}"))
-            sh.ls(rep_dir)
-            for i in range(n_meta):
-                sh.rm(os.path.join(rep_dir, f"f{i}"), skip_trash=True)
-            m_reps.append(time.time() - t0)
-        m_sec = sorted(m_reps)[1]
-        timings["nnbench_meta"] = round(m_sec, 3)
-        spreads["nnbench_meta"] = [round(min(m_reps), 3), round(max(m_reps), 3)]
-        io_stats["meta_ops_s"] = round((3 * n_meta + 1) / m_sec, 1)
-    finally:
-        shutil.rmtree(meta_dir, ignore_errors=True)
-
-    # MRBench analog (ref src/test/.../mapred/MRBench.java:38,301-304):
-    # avg JOB LATENCY over N runs of a tiny fixed pipeline — zero-padded
-    # number lines → identity map → shuffle → identity reduce (sorted
-    # write). MRBench measures framework overhead per job, not
-    # throughput, so the data stays deliberately small; the number that
-    # matters is milliseconds per run.
-    def mr_job() -> None:
-        lines = spark.range(10_000).select(
-            F.lpad(F.col("id").cast("string"), 10, "0").alias("line")
-        )
-        materialize(
-            lines.repartition(8, "line").sortWithinPartitions("line")
-        )
-
-    mr_job()  # warm the plan shape once (JIT excluded, like the others)
-    n_runs = 4
-    mr_times = []
-    for _ in range(n_runs):
-        t0 = time.time()
-        mr_job()
-        mr_times.append(time.time() - t0)
-    timings["mrbench"] = round(sum(mr_times), 3)
-    io_stats["mrbench_avg_ms"] = round(1000 * sum(mr_times) / n_runs, 1)
+    tier_timings, tier_spreads, io_stats = io_tier(spark, scale)
+    timings.update(tier_timings)
+    spreads.update(tier_spreads)
 
     total = round(sum(timings.values()), 3)
     # Contamination flag (r11 VERDICT ask: both driver records started
@@ -624,7 +626,8 @@ def main() -> None:
     # BEFORE this session spun up means per-query statuses at +-20% are
     # noise, and the record should say so itself instead of reading as
     # code regressions.
-    contaminated = loadavg_start[0] > cpu_count() / 4
+    cpus = cpu_count()
+    contaminated = loadavg_start[0] > cpus / 4
     record = {
         "metric": "headline_queries_total_wall",
         "value": total,
@@ -639,31 +642,27 @@ def main() -> None:
         "loadavg_end": [round(x, 2) for x in os.getloadavg()],
         "contaminated": contaminated,
         "io": io_stats,
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "sf": scale if sf_numeric else sf,
     }
 
     # The driver captures only a ~2.2 KB tail of stdout, so a full
     # 135-entry line overflows it and BENCH_r{N}.json records
     # "parsed": null (VERDICT r5/r6 "what's wrong #1"). Contract kept
     # two ways: the FULL per-query record is written to
-    # BENCH_LOCAL_r{N}.json in-repo (N from --round, else the
+    # BENCH_LOCAL_r{N}_c{cores}.json in-repo (N from --round, else the
     # lifecycle-aware inference in infer_round) and appended to
     # tools/bench_history.csv for round-over-round diffs; stdout gets a
     # compact (<1.5 KB) summary line — total, io block, 12 slowest — as
     # the LAST line so the driver's tail-capture parses.
     repo = os.path.dirname(os.path.abspath(__file__))
-    rnd = infer_round(repo, forced_round)
     # round_label makes the N-vs-round ambiguity detectable inside the
     # artifact itself (VERDICT r7 "what's wrong" #3): "r8" = which
-    # round's rows these are, suffix = when in the round they ran.
-    label = run_label or (
-        f"r{rnd:02d}-{infer_phase(repo)}-inferred"
-        if forced_round is None
-        else f"r{rnd:02d}"
-    )
+    # round's rows these are, "c32" = on how many cores, suffix = when
+    # in the round they ran.
+    rnd, label, full_path = record_target(repo, forced_round, cpus)
+    label = run_label or label
     record["round"] = rnd
     record["round_label"] = label
-    full_path = os.path.join(repo, f"BENCH_LOCAL_r{rnd:02d}.json")
     try:
         with open(full_path, "w") as f:
             json.dump(record, f, indent=1)
@@ -683,7 +682,7 @@ def main() -> None:
     # is packed greedily, slowest entries first, under an 1800-char
     # budget (compact separators): ~55 entries instead of 12.
     # Additions-only: the old top-12 is always a prefix of this window,
-    # and the complete dict stays in BENCH_LOCAL_r{N}.json.
+    # and the complete dict stays in the BENCH_LOCAL record.
     line = stdout_line({
         "metric": "headline_queries_total_wall",
         "value": total,

@@ -1,8 +1,8 @@
 """One measurement loop for bench.py and the timing tools.
 
-Every timed number in the repo (the bench headline, profile_query,
-scaling, stress and the A/B tool) comes from `time_reps`, so warm-up,
-release and rep statistics cannot drift apart between them:
+Every timed number in the repo (the bench headline and IO tier,
+profile_query, scaling, stress, the A/B tool) comes from `time_reps`,
+so warm-up, release and rep statistics cannot drift apart between them:
 
 - `warm` runs a thunk once off the clock (whole-stage-codegen JIT and
   the plan shape's first compile) and reports a failure on stderr;

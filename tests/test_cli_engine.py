@@ -339,6 +339,54 @@ class TestBenchRoundInference:
         assert lines[0] == "round,query,seconds,label"
         assert set(lines[1:]) == {"9,q,2.0,r09-mid-inferred", "9,q,3.0,r09-final"}
 
+    def test_core_count_names_the_record(self, tmp_path):
+        # an 8-core run must not overwrite the same round's 32-core
+        # record, and profile_query --top must still read the newest
+        import bench
+
+        d = str(tmp_path)
+        rnd, label, path = bench.record_target(d, None, 8)
+        assert (rnd, label, path) == (1, "r01-c8-mid-inferred", f"{d}/BENCH_LOCAL_r01_c8.json")
+        assert bench.record_target(d, 13, 32) == (13, "r13-c32", f"{d}/BENCH_LOCAL_r13_c32.json")
+        names = ["BENCH_LOCAL_r13_c32.json", "BENCH_LOCAL_r14_c32.json",
+                 "BENCH_LOCAL_r14_c8.json", "BENCH_LOCAL_r09.json"]
+        for i, name in enumerate(names):
+            (tmp_path / name).write_text("{}")
+            os.utime(tmp_path / name, (1000 + i, 1000 + i))
+        assert bench.newest_record(d) == f"{d}/BENCH_LOCAL_r14_c8.json"
+        os.utime(tmp_path / "BENCH_LOCAL_r14_c32.json", (2000, 2000))
+        assert bench.newest_record(d) == f"{d}/BENCH_LOCAL_r14_c32.json"
+
+
+class TestBenchIoTier:
+    def test_keys_jobs_and_cleanup(self, spark, tmp_path, monkeypatch):
+        # the DFSIO/NNBench/MRBench analogs run through measure.time_reps:
+        # the same keys as the record's, every rep under a job group,
+        # and no temp directory left behind
+        import tempfile
+
+        import bench
+        from hadoop_distributed_dynamic_file_system_spark import measure
+
+        runs, time_reps = {}, measure.time_reps
+
+        def recording(spark, thunk, reps=2, label="measure"):
+            runs[label] = time_reps(spark, thunk, reps, label)
+            return runs[label]
+
+        monkeypatch.setattr(measure, "time_reps", recording)
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+        timings, spreads, io = bench.io_tier(spark, 0.001)
+        assert list(timings) == ["dfsio_write", "dfsio_read", "nnbench_meta", "mrbench"]
+        assert list(spreads) == ["dfsio_write", "dfsio_read", "nnbench_meta"]
+        assert list(io) == ["write_mb_s", "read_mb_s", "bytes", "meta_ops_s", "mrbench_avg_ms"]
+        assert [len(runs[k].reps) for k in timings] == [3, 3, 3, 4]
+        assert min(runs["dfsio_write"].jobs + runs["dfsio_read"].jobs) >= 1
+        assert runs["nnbench_meta"].jobs == [0, 0, 0]
+        assert timings["dfsio_read"] == round(sorted(runs["dfsio_read"].reps)[1], 3)
+        assert timings["mrbench"] == round(sum(runs["mrbench"].reps), 3)
+        assert io["bytes"] > 0 and os.listdir(tmp_path) == []
+
 
 class TestBenchStdoutLine:
     FIELDS = {"metric": "headline_queries_total_wall", "value": 1.0,

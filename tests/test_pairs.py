@@ -49,6 +49,13 @@ def test_higher_is_better_and_loss():
     assert verdict(PARENT, [p + 1.0 for p in PARENT], "lower")["verdict"] == "loss"
 
 
+def test_fewer_than_ten_pairs_is_unresolved():
+    """5 pairs, each won by half the parent's time: too few to judge."""
+    v = verdict(PARENT[:5], [p / 2 for p in PARENT[:5]], "lower")
+    assert (v["wins"], v["verdict"]) == (5, "unresolved")
+    assert verdict(PARENT[:9], [p * 2 for p in PARENT[:9]], "lower")["verdict"] == "unresolved"
+
+
 def test_unequal_pair_lists_raise():
     with pytest.raises(ValueError):
         verdict(PARENT, PARENT[:9], "lower")
@@ -87,8 +94,8 @@ def test_main_alternates_sides_and_prints_verdicts(tmp_path, monkeypatch, capsys
             "wall_s": {"value": 9.0 if checkout == change else 8.0, "unit": "s"}}}
 
     monkeypatch.setattr(pairs, "run_once", fake_run)
-    assert pairs.main([parent, change, "--workload", "w", "--pairs", "4", "--seed", "7"]) == 0
-    assert calls == [parent, change, change, parent] * 2
+    assert pairs.main([parent, change, "--workload", "w", "--pairs", "10", "--seed", "7"]) == 0
+    assert calls == [parent, change, change, parent] * 5
     out = capsys.readouterr().out
     assert "setup_s:" in out and out.split("setup_s:")[1].split("\n")[0].endswith(": gain")
     wall = out.split("wall_s:")[-1].split("\n")[0]

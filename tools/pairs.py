@@ -11,11 +11,12 @@ then per metric each side's quartiles (q1/median/q3), the pairs the
 change won, its median shift against the bound in the change's
 BENCHMARK.json, and the verdict:
 
-- gain: the change won at least 9 of every 10 pairs (ties count for
-  neither side) and its median is better than the parent's by more
-  than the parent's interquartile range;
+- gain: at least 10 pairs ran, the change won at least 9 of every 10
+  (ties count for neither side) and its median is better than the
+  parent's by more than the parent's interquartile range;
 - loss: the same with the sides swapped;
-- unresolved: anything else;
+- unresolved: anything else, and always for fewer than 10 pairs (5
+  pairs once read +22.8 % where the next 10 read +1.6 %);
 - invalid: any run on either side failed a request. Every metric then
   reads invalid and the tool exits 1, since a run that failed requests
   did not do the work its metrics time.
@@ -31,6 +32,7 @@ import subprocess
 import sys
 
 WIN_SHARE = 0.9
+MIN_PAIRS = 10
 
 
 def quartiles(xs: list[float]) -> tuple[float, float, float]:
@@ -51,7 +53,9 @@ def verdict(parent: list[float], change: list[float], better: str) -> dict:
     cmed = quartiles(change)[1]
     gain = sign * (cmed - pmed)  # > 0: the change's median is better
     need = WIN_SHARE * len(parent)
-    if wins >= need and gain > pq3 - pq1:
+    if len(parent) < MIN_PAIRS:
+        out = "unresolved"
+    elif wins >= need and gain > pq3 - pq1:
         out = "gain"
     elif losses >= need and -gain > pq3 - pq1:
         out = "loss"

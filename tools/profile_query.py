@@ -17,7 +17,8 @@ import json
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from hadoop_distributed_dynamic_file_system_spark.session import get_spark  # noqa: E402
 from hadoop_distributed_dynamic_file_system_spark import cache, measure  # noqa: E402
@@ -43,14 +44,10 @@ def main() -> None:
         else:
             names.append(a)
     if top_n:
-        recs = sorted(
-            (p for p in os.listdir(os.path.dirname(os.path.dirname(
-                os.path.abspath(__file__))))
-             if p.startswith("BENCH_LOCAL_r")),
-        )
-        d = json.load(open(os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            recs[-1])))
+        import bench
+
+        with open(bench.newest_record(REPO)) as f:
+            d = json.load(f)
         names += [k for k, _ in sorted(
             d["queries"].items(), key=lambda kv: -kv[1])[:top_n]
             if k in q.QUERIES]

@@ -16,6 +16,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from hadoop_distributed_dynamic_file_system_spark import cache, datagen, measure
+    from hadoop_distributed_dynamic_file_system_spark.measure import materialize
     from hadoop_distributed_dynamic_file_system_spark.operators import (
         dedup, graph, sort as sort_ops,
     )
@@ -23,9 +24,6 @@ def main() -> None:
 
     spark = get_spark("stress", master="local[32]")
     sf_docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-
-    def noop(df):
-        df.write.mode("overwrite").format("noop").save()
 
     rows = []
 
@@ -44,9 +42,9 @@ def main() -> None:
     for n in (2_000_000, 20_000_000):
         bench(
             f"total_order_sort_{n // 1_000_000}m", n,
-            lambda n=n: noop(sort_ops.total_order_sort(
+            lambda n=n: materialize(sort_ops.total_order_sort(
                 datagen.teragen(spark, n), "key10")),
-            warm_fn=lambda: noop(sort_ops.total_order_sort(
+            warm_fn=lambda: materialize(sort_ops.total_order_sort(
                 datagen.teragen(spark, 10_000), "key10")),
         )
 
@@ -72,7 +70,7 @@ def main() -> None:
         corpus = amplified(copies)
         bench(
             f"minhash_lsh_x{copies}", base * copies,
-            lambda c=corpus: noop(dedup.lsh_candidate_pairs(
+            lambda c=corpus: materialize(dedup.lsh_candidate_pairs(
                 dedup.minhash_signatures(c, "doc_id", "text", num_hashes=8),
                 "doc_id", num_hashes=8, bands=4)),
         )
@@ -84,7 +82,7 @@ def main() -> None:
         "doc_id", num_hashes=8, bands=4)
     bench(
         "dedup_components_x16", base * 16,
-        lambda: noop(graph.connected_components(pairs16, "id_a", "id_b")),
+        lambda: materialize(graph.connected_components(pairs16, "id_a", "id_b")),
     )
 
     # union-graph CC (the multi_signal_components shape): MinHash-LSH
@@ -106,7 +104,7 @@ def main() -> None:
     n_edges = union16.persist().count()
     bench(
         "union_graph_components_x16_dense", n_edges,
-        lambda: noop(graph.connected_components(union16, "id_a", "id_b")),
+        lambda: materialize(graph.connected_components(union16, "id_a", "id_b")),
     )
     union16.unpersist()
 
@@ -143,7 +141,7 @@ def main() -> None:
         )
         bench(
             f"asof_join_events_x{copies}", n_ev * copies,
-            lambda p=purchases, c=clicks: noop(
+            lambda p=purchases, c=clicks: materialize(
                 temporal.asof_join(p, c, "user_id", "p_ts", "c_ts")
             ),
         )
@@ -156,7 +154,7 @@ def main() -> None:
         corpus = amplified(copies)
         bench(
             f"span_dedup_x{copies}", base * copies,
-            lambda c=corpus: noop(dedup.remove_duplicated_spans(
+            lambda c=corpus: materialize(dedup.remove_duplicated_spans(
                 c, "doc_id", "text", n=5)),
         )
 
@@ -224,7 +222,7 @@ def main() -> None:
         corpus = amplified_big(copies).select("doc_id", "text")
         bench(
             f"crawl_to_chunks_x{copies}", base * copies,
-            lambda c=corpus: noop(crawl_to_chunks(c)),
+            lambda c=corpus: materialize(crawl_to_chunks(c)),
         )
 
     # flagship 2: the web-curation pipeline (gate -> exact dedup ->
@@ -240,7 +238,7 @@ def main() -> None:
         corpus = amplified_big(copies)
         bench(
             f"web_curation_x{copies}", base * copies,
-            lambda c=corpus: noop(web_curation(c, sf_docs)),
+            lambda c=corpus: materialize(web_curation(c, sf_docs)),
         )
 
     # multi-query BM25 at 3 and 200 queries (ROADMAP r6: the bench
@@ -268,7 +266,7 @@ def main() -> None:
         )
         bench(
             f"bm25_multi_query_q{nq}", nq,
-            lambda q=qterms: noop(
+            lambda q=qterms: materialize(
                 ta2.bm25_multi_query(sf_docs, q, "doc_id", "text")
             ),
         )
@@ -289,7 +287,7 @@ def main() -> None:
         edges = pr_edges(m)
         bench(
             f"pagerank_edges_{m // 1_000_000}m", m,
-            lambda e=edges: noop(graph.pagerank(e, iterations=3)),
+            lambda e=edges: materialize(graph.pagerank(e, iterations=3)),
         )
 
     # host-level boilerplate removal at 1x/16x: per-host line support
@@ -318,7 +316,7 @@ def main() -> None:
         corpus = hosted_lined(copies)
         bench(
             f"host_boilerplate_x{copies}", base * copies,
-            lambda c=corpus: noop(wq2.host_boilerplate_removal(
+            lambda c=corpus: materialize(wq2.host_boilerplate_removal(
                 c, "doc_id", "text", "host", frac=0.3, min_docs=5)),
         )
 
@@ -338,7 +336,7 @@ def main() -> None:
         )
         bench(
             f"html_text_extract_x{copies}", base * copies,
-            lambda c=corpus, h=html: noop(
+            lambda c=corpus, h=html: materialize(
                 c.select("doc_id", wt2.strip_html(h).alias("t"))
             ),
         )
@@ -394,7 +392,7 @@ def main() -> None:
         )
         bench(
             f"web_graph_x{copies}", base * copies,
-            lambda c=corpus: noop(web_graph_report(c)),
+            lambda c=corpus: materialize(web_graph_report(c)),
         )
 
     # length-bucketed batch assignment: ONE scale-safe global_rank
@@ -409,7 +407,7 @@ def main() -> None:
         corpus = amplified_big(copies).select("doc_id", "text")
         bench(
             f"length_batches_x{copies}", base * copies,
-            lambda c=corpus: noop(
+            lambda c=corpus: materialize(
                 cur2.length_bucketed_batches(c, "doc_id", "text")
             ),
         )
@@ -442,9 +440,9 @@ def main() -> None:
             max_bucket_size=guard)
 
     bench("lsh_degenerate_unguarded_5k", 5_000,
-          lambda: noop(lsh_pairs(degenerate(5_000), None)), reps=1)
+          lambda: materialize(lsh_pairs(degenerate(5_000), None)), reps=1)
     bench("lsh_degenerate_guarded_50k", 50_000,
-          lambda: noop(lsh_pairs(degenerate(50_000), 1_000)), reps=1)
+          lambda: materialize(lsh_pairs(degenerate(50_000), 1_000)), reps=1)
 
     # Same adversarial shape through the pairwise-shingle path: every
     # boilerplate shingle has document frequency = n_copies, so the
@@ -457,9 +455,9 @@ def main() -> None:
             threshold=0.99, max_doc_freq=cap)
 
     bench("ngram_df_unguarded_2k", 2_000,
-          lambda: noop(jaccard(degenerate(2_000), None)), reps=1)
+          lambda: materialize(jaccard(degenerate(2_000), None)), reps=1)
     bench("ngram_df_guarded_25k", 25_000,
-          lambda: noop(jaccard(degenerate(25_000), 1_000)), reps=1)
+          lambda: materialize(jaccard(degenerate(25_000), 1_000)), reps=1)
 
     # Disjoint-band hamming join (round 7's full-recall 64-bit
     # near-pair machinery) at 200k and 2M synthetic codes: 4-member
@@ -484,7 +482,7 @@ def main() -> None:
         codes = hamming_codes(n)
         bench(
             f"banded_hamming_{n // 1000}k", n,
-            lambda c=codes: noop(dedup.banded_hamming_pairs(
+            lambda c=codes: materialize(dedup.banded_hamming_pairs(
                 c, "doc_id", "code", max_hamming=3,
                 max_bucket_size=100_000)),
         )
@@ -503,7 +501,7 @@ def main() -> None:
         codes = hamming_codes(n)
         bench(
             f"banded_hamming_r1_{n // 1000}k", n,
-            lambda c=codes: noop(dedup.banded_hamming_pairs(
+            lambda c=codes: materialize(dedup.banded_hamming_pairs(
                 c, "doc_id", "code", max_hamming=1, n_bands=2,
                 max_bucket_size=100_000)),
         )
@@ -561,12 +559,12 @@ def main() -> None:
             f"frozen_probe_broadcast_1x_vs_{copies}x", base,
             # explicit since round 10: "auto" became the gate default,
             # and this row prices the FORCED-broadcast strategy
-            lambda i=idx: noop(ev_mod.streaming_near_dedup(
+            lambda i=idx: materialize(ev_mod.streaming_near_dedup(
                 sf_docs, i, index_mode="broadcast")),
         )
         bench(
             f"frozen_probe_bucketed_1x_vs_{copies}x", base,
-            lambda: noop(dedup.incremental_near_dedup_bucketed(
+            lambda: materialize(dedup.incremental_near_dedup_bucketed(
                 spark, sf_docs, "stress_frozen_bk", "doc_id", "text")),
         )
         if copies == 100:
@@ -577,7 +575,7 @@ def main() -> None:
             batch16 = distinct_corpus(16)
             bench(
                 "frozen_probe_bucketed_16x_vs_100x", base * 16,
-                lambda b=batch16: noop(dedup.incremental_near_dedup_bucketed(
+                lambda b=batch16: materialize(dedup.incremental_near_dedup_bucketed(
                     spark, b, "stress_frozen_bk", "doc_id", "text")),
             )
             # Round-10: the streaming AUTO mode priced at the scale a
@@ -687,7 +685,7 @@ def main() -> None:
             )
             bench(
                 "attr_probe_clean_1x_vs_100x", base,
-                lambda: noop(dedup.incremental_near_dedup_attributed(
+                lambda: materialize(dedup.incremental_near_dedup_attributed(
                     spark, sf_docs, "stress_frozen_attr",
                     "doc_id", "text")),
             )
@@ -703,7 +701,7 @@ def main() -> None:
             )
             bench(
                 "attr_probe_tombstoned_1x_vs_100x", base,
-                lambda: noop(dedup.incremental_near_dedup_attributed(
+                lambda: materialize(dedup.incremental_near_dedup_attributed(
                     spark, sf_docs, "stress_frozen_attr",
                     "doc_id", "text")),
             )
@@ -712,7 +710,7 @@ def main() -> None:
             # compaction it schedules
             bench(
                 "health_census_100x_tombstoned", base * 100,
-                lambda: noop(dedup.band_index_health(
+                lambda: materialize(dedup.band_index_health(
                     spark, "stress_frozen_attr", "doc_id")),
             )
             bench(
@@ -723,7 +721,7 @@ def main() -> None:
             )
             bench(
                 "attr_probe_compacted_1x_vs_90x", base,
-                lambda: noop(dedup.incremental_near_dedup_attributed(
+                lambda: materialize(dedup.incremental_near_dedup_attributed(
                     spark, sf_docs, "stress_frozen_attr",
                     "doc_id", "text")),
             )
@@ -791,7 +789,7 @@ def main() -> None:
             )
             bench(
                 "frag_probe_fragmented_1x_vs_90x", base,
-                lambda: noop(dedup.incremental_near_dedup_attributed(
+                lambda: materialize(dedup.incremental_near_dedup_attributed(
                     spark, sf_docs, "stress_frozen_attr",
                     "doc_id", "text")),
             )
@@ -802,7 +800,7 @@ def main() -> None:
             )
             bench(
                 "frag_probe_refolded_1x_vs_90x", base,
-                lambda: noop(dedup.incremental_near_dedup_attributed(
+                lambda: materialize(dedup.incremental_near_dedup_attributed(
                     spark, sf_docs, "stress_frozen_attr",
                     "doc_id", "text")),
             )
@@ -841,7 +839,7 @@ def main() -> None:
             )
             bench(
                 "gen_probe_after_rollover_1x_vs_90x", base,
-                lambda: noop(dedup.incremental_near_dedup_attributed(
+                lambda: materialize(dedup.incremental_near_dedup_attributed(
                     spark, sf_docs, "stress_frozen_attr",
                     "doc_id", "text")),
             )
@@ -891,12 +889,12 @@ def main() -> None:
         for k, v in skew_confs.items():
             spark.conf.set(k, v)
         bench("skew99_join_plain_10m", n_skew,
-              lambda: noop(fact.join(dim, on="k")))
+              lambda: materialize(fact.join(dim, on="k")))
         spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
         bench("skew99_join_aqe_10m", n_skew,
-              lambda: noop(fact.join(dim, on="k")))
+              lambda: materialize(fact.join(dim, on="k")))
         bench("skew99_join_salted_10m", n_skew,
-              lambda: noop(skew.salted_join(fact, dim, ["k"], salt=64)))
+              lambda: materialize(skew.salted_join(fact, dim, ["k"], salt=64)))
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
