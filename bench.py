@@ -372,14 +372,20 @@ def stdout_line(fields: dict, timings: dict[str, float]) -> str:
     return out
 
 
-def record_target(repo: str, forced_round: int | None, cpus: int) -> tuple[int, str, str]:
-    """(round, default label, full-record path) of a run on `cpus`
-    cores. The core count is in the label and the file name, so a run
-    on 8 cores cannot overwrite the same round's 32-core record."""
+def record_target(
+    repo: str, forced_round: int | None, cpus: int, label: str | None = None
+) -> tuple[int, str, str]:
+    """(round, label, full-record path) of a run on `cpus` cores. The
+    core count is in the default label and the file name, so a run on
+    8 cores cannot overwrite the same round's 32-core record. A
+    --label suffixes the file name too (characters outside
+    [A-Za-z0-9._-] become "-"), so two labelled runs keep two records."""
     rnd = infer_round(repo, forced_round)
+    stem = os.path.join(repo, f"BENCH_LOCAL_r{rnd:02d}_c{cpus}")
+    if label:
+        return rnd, label, f"{stem}_{re.sub(r'[^A-Za-z0-9._-]', '-', label)}.json"
     phase = f"-{infer_phase(repo)}-inferred" if forced_round is None else ""
-    return (rnd, f"r{rnd:02d}-c{cpus}{phase}",
-            os.path.join(repo, f"BENCH_LOCAL_r{rnd:02d}_c{cpus}.json"))
+    return rnd, f"r{rnd:02d}-c{cpus}{phase}", f"{stem}.json"
 
 
 def newest_record(repo: str) -> str:
@@ -649,8 +655,8 @@ def main() -> None:
     # 135-entry line overflows it and BENCH_r{N}.json records
     # "parsed": null (VERDICT r5/r6 "what's wrong #1"). Contract kept
     # two ways: the FULL per-query record is written to
-    # BENCH_LOCAL_r{N}_c{cores}.json in-repo (N from --round, else the
-    # lifecycle-aware inference in infer_round) and appended to
+    # BENCH_LOCAL_r{N}_c{cores}[_{label}].json in-repo (N from --round,
+    # else the lifecycle-aware inference in infer_round) and appended to
     # tools/bench_history.csv for round-over-round diffs; stdout gets a
     # compact (<1.5 KB) summary line — total, io block, 12 slowest — as
     # the LAST line so the driver's tail-capture parses.
@@ -659,8 +665,7 @@ def main() -> None:
     # artifact itself (VERDICT r7 "what's wrong" #3): "r8" = which
     # round's rows these are, "c32" = on how many cores, suffix = when
     # in the round they ran.
-    rnd, label, full_path = record_target(repo, forced_round, cpus)
-    label = run_label or label
+    rnd, label, full_path = record_target(repo, forced_round, cpus, run_label)
     record["round"] = rnd
     record["round_label"] = label
     try:

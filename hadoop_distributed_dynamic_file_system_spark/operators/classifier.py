@@ -47,11 +47,10 @@ def hashed_tf(
     id_col: str,
     text_col: str,
     buckets: int = 1024,
-    normalize: bool = True,
 ) -> DataFrame:
-    """(id, b, tf) hashed bag-of-words features. `normalize` divides
-    by the doc's token count (fasttext-style mean pooling) so long
-    docs don't dominate the dot product."""
+    """(id, b, tf) hashed bag-of-words features, divided by the doc's
+    token count (fasttext-style mean pooling) so long docs don't
+    dominate the dot product."""
     toks = df.select(
         F.col(id_col),
         F.explode(
@@ -61,12 +60,10 @@ def hashed_tf(
     feats = toks.groupBy(
         id_col, word_bucket(F.col("_w"), buckets).alias("b")
     ).agg(F.count("*").cast("double").alias("tf"))
-    if normalize:
-        totals = feats.groupBy(id_col).agg(F.sum("tf").alias("_n"))
-        feats = feats.join(totals, id_col).select(
-            id_col, "b", (F.col("tf") / F.col("_n")).alias("tf")
-        )
-    return feats
+    totals = feats.groupBy(id_col).agg(F.sum("tf").alias("_n"))
+    return feats.join(totals, id_col).select(
+        id_col, "b", (F.col("tf") / F.col("_n")).alias("tf")
+    )
 
 
 def _sigmoid(x: Column) -> Column:

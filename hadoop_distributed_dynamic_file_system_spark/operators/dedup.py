@@ -41,7 +41,7 @@ def _drop_oversized_buckets(
     max_bucket_size: int,
     what: str,
     census: str = "lazy",
-    census_hint: str = "lsh_bucket_stats",
+    census_hint: str | None = "lsh_bucket_stats",
 ) -> DataFrame:
     """Hot-bucket guard for the candidate-pair generators: a bucket
     key shared by m rows yields O(m²) join output, and on real crawl
@@ -60,15 +60,17 @@ def _drop_oversized_buckets(
     drop log (one info line notes the armed cap + which pre-flight
     census to run); size the cap beforehand with `census_hint` (the
     lsh_bucket_stats / hamming_bucket_stats pre-flight), which
-    reports exactly what a given cap would drop.
+    reports exactly what a given cap would drop. A generator with no
+    pre-flight census passes None and the line names only the
+    caller's `bucket_census="eager"`.
 
     `census="eager"` is the opt-in DEBUG mode: it runs a driver-side
     size census FIRST and LOGS any drop (bucket count + rows +
     largest), never silent — one cheap aggregation, but it is a
-    CONSTRUCTION-TIME ACTION: it assumes `banded` is persisted (with
-    cache=False or a parquet-staged input it recomputes the upstream
-    pipeline), it runs even when nothing exceeds the cap, and it is
-    illegal inside a streaming plan (the streaming gates use the
+    CONSTRUCTION-TIME ACTION: it assumes `banded` is persisted (every
+    generator persists it; a parquet-staged input would recompute the
+    upstream pipeline), it runs even when nothing exceeds the cap, and
+    it is illegal inside a streaming plan (the streaming gates use the
     frozen-index path instead — pinned by a negative test).
 
     Either way the anti-join side is at most |rows|/max_bucket_size
@@ -80,12 +82,12 @@ def _drop_oversized_buckets(
     sizes = banded.groupBy(*key_cols).agg(F.count("*").alias("_bsz"))
     big = sizes.filter(F.col("_bsz") > max_bucket_size)
     if census == "lazy":
+        preflight = f"run {census_hint} for the drop census, or " if census_hint else ""
         log.info(
             "%s: hot-bucket guard armed lazily (max_bucket_size=%d); "
             "oversized buckets are dropped from candidate generation — "
-            "run %s for the drop census, or pass census='eager' for a "
-            "logged drop count",
-            what, max_bucket_size, census_hint,
+            "%spass bucket_census='eager' for a logged drop count",
+            what, max_bucket_size, preflight,
         )
         return banded.join(big.select(*key_cols), key_cols, "left_anti")
     stats = big.agg(
@@ -265,8 +267,6 @@ def lsh_candidate_pairs(
     id_col: str,
     num_hashes: int,
     bands: int,
-    cache: bool = True,
-    hash_band_keys: bool = True,
     max_bucket_size: int | None = None,
     bucket_census: str = "lazy",
 ) -> DataFrame:
@@ -288,26 +288,22 @@ def lsh_candidate_pairs(
     scan + 2× k·shingles md5 work — measured 30× slower). At 100 TB
     write signatures to a parquet stage table instead of memory cache.
 
-    `hash_band_keys` folds (band, concat of md5 components) to one
-    xxhash64 long: an 8-byte join key instead of a ~32·rows_per_band
-    char string — same shuffle-width argument as hashed shingles in
-    ngram_jaccard_pairs; exact up to 64-bit collisions.
+    The join key folds (band, concat of md5 components) to one
+    xxhash64 long: an 8-byte key instead of a ~32·rows_per_band char
+    string — same shuffle-width argument as hashed shingles in
+    ngram_jaccard_pairs, and the same fold as minhash_band_key_cols
+    and lsh_band_index; exact up to 64-bit collisions.
     """
-    banded = _lsh_banded(sigs, id_col, num_hashes, bands)
-    if hash_band_keys:
-        banded = banded.select(
-            id_col, F.xxhash64("bk.band", "bk.bkey").alias("band"), F.lit(0).alias("bkey")
-        )
-    else:
-        banded = banded.select(id_col, "bk.band", "bk.bkey")
-    if cache:
-        # eager: a lazy persist doesn't help here — both self-join sides
-        # race to scan before the cache fills, so each recomputes the
-        # signature pipeline anyway
-        banded = tracked_persist(banded)
+    banded = _lsh_banded(sigs, id_col, num_hashes, bands).select(
+        id_col, F.xxhash64("bk.band", "bk.bkey").alias("band")
+    )
+    # eager: a lazy persist doesn't help here — both self-join sides
+    # race to scan before the cache fills, so each recomputes the
+    # signature pipeline anyway
+    banded = tracked_persist(banded)
     if max_bucket_size is not None:
         banded = _drop_oversized_buckets(
-            banded, ["band", "bkey"], max_bucket_size,
+            banded, ["band"], max_bucket_size,
             "lsh_candidate_pairs", census=bucket_census,
         )
     a = banded.alias("a")
@@ -316,7 +312,6 @@ def lsh_candidate_pairs(
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
             & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
         )
         .select(
@@ -555,7 +550,6 @@ def banded_hamming_pairs(
     max_hamming: int = 4,
     n_bands: int | None = None,
     bits: int = 64,
-    cache: bool = True,
     max_bucket_size: int | None = None,
     bucket_census: str = "lazy",
 ) -> DataFrame:
@@ -589,9 +583,9 @@ def banded_hamming_pairs(
     Output: (id_a, id_b, hamming) with id_a < id_b."""
     if n_bands is None:
         n_bands = max_hamming + 1
-    banded = _hamming_banded(codes, id_col, hash_col, n_bands, bits)
-    if cache:
-        banded = tracked_persist(banded)
+    banded = tracked_persist(
+        _hamming_banded(codes, id_col, hash_col, n_bands, bits)
+    )
     if max_bucket_size is not None:
         banded = _drop_oversized_buckets(
             banded, ["_band", "_val"], max_bucket_size,
@@ -626,7 +620,6 @@ def simhash_near_pairs(
     hash_col: str = "simhash",
     max_hamming: int = 3,
     band_shift: int = 8,
-    cache: bool = True,
     rotations: int = 1,
     bits: int = 16,
     max_bucket_size: int | None = None,
@@ -666,20 +659,20 @@ def simhash_near_pairs(
                 F.shiftright(rotated, band_shift).alias("band"),
             )
         )
-    banded = fingerprints.select(
+    banded = tracked_persist(fingerprints.select(
         F.col(id_col),
         F.col(hash_col),
         F.explode(F.array(*bands)).alias("_rb"),
     ).select(
         F.col(id_col), F.col(hash_col), F.col("_rb.rot").alias("_rot"),
         F.col("_rb.band").alias("_band"),
-    )
-    if cache:
-        banded = tracked_persist(banded)
+    ))
     if max_bucket_size is not None:
+        # no pre-flight census sizes rotation bands (lsh_bucket_stats
+        # bands MinHash columns), so the log names only the eager mode
         banded = _drop_oversized_buckets(
             banded, ["_rot", "_band"], max_bucket_size,
-            "simhash_near_pairs", census=bucket_census,
+            "simhash_near_pairs", census=bucket_census, census_hint=None,
         )
     a, b = banded.alias("a"), banded.alias("b")
     pairs = (
@@ -710,13 +703,11 @@ def _pairwise_shingle_stats(
     id_col: str,
     text_col: str,
     shingle_n: int,
-    cache: bool,
-    hash_shingles: bool,
     max_doc_freq: int | None = None,
 ) -> DataFrame:
     """Shared core of the pairwise shingle-overlap metrics
     (Jaccard, containment): distinct shingles per side (8-byte
-    xxhash64 keys under `hash_shingles`), per-doc counts, and the
+    xxhash64 keys), per-doc counts, and the
     intersection sizes from one equi-join. Returns one relation
     (id_a, id_b, n_a, n_b, n_common); only pairs sharing >= 1
     shingle ever materialize.
@@ -756,9 +747,9 @@ def _pairwise_shingle_stats(
             F.col(id_col).alias(f"id_{side}"),
             F.split(F.col(text_col), r"\s+").alias("_w"),
         )
-        sh_arr = _shingles_of(F.col("_w"), shingle_n)
-        if hash_shingles:
-            sh_arr = F.transform(sh_arr, lambda s: F.xxhash64(s))
+        sh_arr = F.transform(
+            _shingles_of(F.col("_w"), shingle_n), lambda s: F.xxhash64(s)
+        )
         bound = words.select(
             f"id_{side}", F.array_distinct(sh_arr).alias("_sharr")
         )
@@ -787,40 +778,33 @@ def _pairwise_shingle_stats(
         )
 
     def exploded_guarded(df: DataFrame, side: str) -> DataFrame:
-        out = exploded_shingles(df, id_col, text_col, shingle_n).withColumnRenamed(
-            id_col, f"id_{side}"
+        out = exploded_shingles(df, id_col, text_col, shingle_n).select(
+            F.col(id_col).alias(f"id_{side}"), F.xxhash64("sh").alias("sh")
         )
-        if hash_shingles:
-            out = out.select(f"id_{side}", F.xxhash64("sh").alias("sh"))
-        out = out.distinct()
-        if cache:
-            out = tracked_persist(out)  # eager — both consumers race otherwise
-        return out
+        # eager — both consumers race otherwise
+        return tracked_persist(out.distinct())
 
     ea, eb = exploded_guarded(df_a, "a"), exploded_guarded(df_b, "b")
-    if max_doc_freq is not None:
-        df_counts = (
-            ea.select(F.col("sh")).unionAll(eb.select(F.col("sh")))
-            .groupBy("sh").agg(F.count("*").alias("_df"))
+    df_counts = (
+        ea.select(F.col("sh")).unionAll(eb.select(F.col("sh")))
+        .groupBy("sh").agg(F.count("*").alias("_df"))
+    )
+    hot = df_counts.filter(F.col("_df") > max_doc_freq)
+    stats = hot.agg(
+        F.count("*").alias("nk"), F.max("_df").alias("mx")
+    ).first()
+    if stats["nk"]:
+        log.warning(
+            "_pairwise_shingle_stats: dropped %d shingle key(s) with "
+            "document frequency > %d (max observed %d) from the "
+            "shingle universe — near-ubiquitous boilerplate carries "
+            "no dedup signal and makes the intersection join "
+            "quadratic",
+            stats["nk"], max_doc_freq, stats["mx"],
         )
-        hot = df_counts.filter(F.col("_df") > max_doc_freq)
-        stats = hot.agg(
-            F.count("*").alias("nk"), F.max("_df").alias("mx")
-        ).first()
-        if stats["nk"]:
-            log.warning(
-                "_pairwise_shingle_stats: dropped %d shingle key(s) with "
-                "document frequency > %d (max observed %d) from the "
-                "shingle universe — near-ubiquitous boilerplate carries "
-                "no dedup signal and makes the intersection join "
-                "quadratic",
-                stats["nk"], max_doc_freq, stats["mx"],
-            )
-            hot_keys = hot.select("sh")
-            ea = ea.join(hot_keys, "sh", "left_anti")
-            eb = eb.join(hot_keys, "sh", "left_anti")
-            if cache:
-                ea, eb = tracked_persist(ea), tracked_persist(eb)
+        hot_keys = hot.select("sh")
+        ea = tracked_persist(ea.join(hot_keys, "sh", "left_anti"))
+        eb = tracked_persist(eb.join(hot_keys, "sh", "left_anti"))
     na = ea.groupBy("id_a").agg(F.count("*").alias("n_a"))
     nb = eb.groupBy("id_b").agg(F.count("*").alias("n_b"))
     common = (
@@ -840,8 +824,6 @@ def ngram_jaccard_pairs(
     text_col: str,
     shingle_n: int = 3,
     threshold: float = 0.5,
-    cache: bool = True,
-    hash_shingles: bool = True,
     max_doc_freq: int | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard between two corpora via shingle equi-join.
@@ -853,24 +835,22 @@ def ngram_jaccard_pairs(
     Each exploded-shingle table feeds both its count agg and the
     intersection join — persisted so shingling runs once per corpus.
 
-    `hash_shingles` replaces each shingle string with xxhash64(sh)
-    before the distinct/join: 8-byte fixed shuffle keys instead of
+    Each shingle string is replaced with xxhash64(sh) before the
+    distinct/join: 8-byte fixed shuffle keys instead of
     arbitrary-length strings, which at 100 TB is the difference
     between shuffling the corpus text twice and shuffling one long
     per shingle. Exact up to 64-bit collisions (P ≈ n²/2⁶⁵ — for a
-    billion distinct shingles, ~3%·ε; disable for a provably exact
-    answer).
+    billion distinct shingles, ~3%·ε).
 
-    `cache` governs the GUARDED (max_doc_freq) path's eager persists
-    only. The unguarded path ALWAYS installs one lazy persist per side
-    — it is a pushdown barrier against the O(words²) filter-inlining
-    trap, not a reuse cache (see _pairwise_shingle_stats), fills
-    inside the join job, and is strictly smaller than the exploded
-    stream the guarded path persists.
+    The GUARDED (max_doc_freq) path persists each side eagerly. The
+    unguarded path installs one lazy persist per side — a pushdown
+    barrier against the O(words²) filter-inlining trap, not a reuse
+    cache (see _pairwise_shingle_stats), filled inside the join job
+    and strictly smaller than the exploded stream the guarded path
+    persists.
     """
     stats = _pairwise_shingle_stats(
-        df_a, df_b, id_col, text_col, shingle_n, cache, hash_shingles,
-        max_doc_freq,
+        df_a, df_b, id_col, text_col, shingle_n, max_doc_freq,
     )
     return stats.select(
         "id_a",
@@ -890,8 +870,6 @@ def ngram_containment_pairs(
     text_col: str,
     shingle_n: int = 3,
     threshold: float = 0.8,
-    cache: bool = True,
-    hash_shingles: bool = True,
     max_doc_freq: int | None = None,
 ) -> DataFrame:
     """ASYMMETRIC n-gram containment between two corpora:
@@ -902,15 +880,12 @@ def ngram_containment_pairs(
     exactly this signal for partial-overlap dedup.
 
     Same scale shape as ngram_jaccard_pairs: distinct shingles per
-    side (8-byte xxhash64 keys under `hash_shingles`), one equi-join
-    for the intersection, per-doc counts joined back — only pairs
-    sharing ≥1 shingle ever materialize; pairs survive when EITHER
-    direction reaches `threshold`. `cache` likewise affects only the
-    guarded path; the unguarded path's per-side lazy persist is a
-    pushdown barrier, not a reuse cache (see ngram_jaccard_pairs)."""
+    side (8-byte xxhash64 keys), one equi-join for the intersection,
+    per-doc counts joined back — only pairs sharing ≥1 shingle ever
+    materialize; pairs survive when EITHER direction reaches
+    `threshold`. The persists are ngram_jaccard_pairs' too."""
     stats = _pairwise_shingle_stats(
-        df_a, df_b, id_col, text_col, shingle_n, cache, hash_shingles,
-        max_doc_freq,
+        df_a, df_b, id_col, text_col, shingle_n, max_doc_freq,
     )
     c_ab = F.round(F.col("n_common") / F.col("n_a"), 6)
     c_ba = F.round(F.col("n_common") / F.col("n_b"), 6)
@@ -1153,7 +1128,7 @@ def minhash_band_key_cols(
     expression runs on a Structured Streaming micro-batch (stateful
     aggregation is illegal pre-watermark) and on a batch frame
     identically. Key fold = xxhash64(band, mh|mh|...), byte-compatible
-    with lsh_candidate_pairs(hash_band_keys=True) and lsh_band_index.
+    with lsh_candidate_pairs and lsh_band_index.
 
     Each derived array sits behind its own projection boundary —
     INCLUDING the words array: _shingles_of reads its words argument

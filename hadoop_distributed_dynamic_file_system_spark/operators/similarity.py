@@ -817,7 +817,6 @@ def embedding_near_dup_pairs(
     vec_col: str = "embedding",
     threshold: float = 0.95,
     num_planes: int = 8,
-    cache: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via sign-LSH bucketing.
 
@@ -835,9 +834,10 @@ def embedding_near_dup_pairs(
         hp = F.array(*[F.lit(float(v)) for v in plane])
         proj = dot(F.col("cv"), hp)
         bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
-    bucketed = c.select(id_col, "cv", F.concat(*bits).alias("bucket"))
-    if cache:
-        bucketed = tracked_persist(bucketed)  # eager — both self-join sides race otherwise
+    # eager — both self-join sides race otherwise
+    bucketed = tracked_persist(
+        c.select(id_col, "cv", F.concat(*bits).alias("bucket"))
+    )
     a, b = bucketed.alias("a"), bucketed.alias("b")
     cand = a.join(
         b,

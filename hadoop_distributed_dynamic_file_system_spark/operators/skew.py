@@ -31,7 +31,6 @@ def write_bucketed(
     num_buckets: int = 32,
     sort_cols: list[str] | None = None,
     mode: str = "overwrite",
-    align: bool = True,
     location: str | None = None,
 ) -> None:
     """Persist as a bucketed+sorted table (saveAsTable — bucketing
@@ -40,14 +39,12 @@ def write_bucketed(
     shuffle, paid once at write time — exactly the reference's
     'identically partitioned, key-sorted sources' precondition.
 
-    `align=True` (default) repartitions on the bucket columns before
-    writing so each bucket lands in ONE file. Without it every write
-    task emits a file per bucket it touches — files = tasks × buckets,
-    the small-file explosion that kills NameNode/listing performance
-    at 100 TB (the very pathology the reference's HadoopArchives tool
-    exists to clean up, src/tools/HadoopArchives.java). Set False only
-    when one bucket exceeds a comfortable single-task output and you
-    prefer parallel writers over file count.
+    The write repartitions on the bucket columns first so each bucket
+    lands in ONE file. Without it every write task emits a file per
+    bucket it touches — files = tasks × buckets, the small-file
+    explosion that kills NameNode/listing performance at 100 TB (the
+    very pathology the reference's HadoopArchives tool exists to clean
+    up, src/tools/HadoopArchives.java).
 
     `location` makes the table EXTERNAL at that path (generational
     layout — see enable_generational): DROP then keeps the files,
@@ -68,7 +65,7 @@ def write_bucketed(
          .sortBy(*(sort_cols or bucket_cols))
          .saveAsTable(table_name))
 
-    _aligned_bucket_write(df, num_buckets, bucket_cols, align, save)
+    _aligned_bucket_write(df, num_buckets, bucket_cols, save)
 
 
 def _remove_orphan_table_dir(spark, table_name: str) -> None:
@@ -115,20 +112,17 @@ def _remove_orphan_table_dir(spark, table_name: str) -> None:
 _ALIGNED_WRITE_LOCK = threading.Lock()
 
 
-def _aligned_bucket_write(df, num_buckets, bucket_cols, align, save) -> None:
-    """Shared alignment core of write_bucketed/append_bucketed. With
-    align=True the repartition pins exactly num_buckets tasks, one per
-    bucket — but the sortBy write plans a Sort ABOVE the alignment
-    shuffle, and AQE then treats that shuffle as coalescible (the
-    user-repartition protection applies only to a terminal
-    repartition), silently merging partitions on small data so tasks
-    straddle buckets and files = tasks × buckets again. Disable AQE
-    partition coalescing for just this write: at scale the partitions
-    exceed the advisory size and coalescing would be a no-op anyway —
-    this only pins the invariant the knob exists for."""
-    if not align:
-        save(df)
-        return
+def _aligned_bucket_write(df, num_buckets, bucket_cols, save) -> None:
+    """Shared alignment core of write_bucketed/append_bucketed. The
+    repartition pins exactly num_buckets tasks, one per bucket — but
+    the sortBy write plans a Sort ABOVE the alignment shuffle, and AQE
+    then treats that shuffle as coalescible (the user-repartition
+    protection applies only to a terminal repartition), silently
+    merging partitions on small data so tasks straddle buckets and
+    files = tasks × buckets again. Disable AQE partition coalescing
+    for just this write: at scale the partitions exceed the advisory
+    size and coalescing would be a no-op anyway — this only pins the
+    invariant the repartition exists for."""
     df = df.repartition(num_buckets, *[F.col(c) for c in bucket_cols])
     spark = df.sparkSession
     pins = {
@@ -160,7 +154,6 @@ def append_bucketed(
     bucket_cols: list[str],
     num_buckets: int = 32,
     sort_cols: list[str] | None = None,
-    align: bool = True,
 ) -> None:
     """Append to an existing bucketed table keeping the layout live:
     saveAsTable(mode="append") with a bucketBy spec validates against
@@ -168,13 +161,13 @@ def append_bucketed(
     than silently corrupting the bucket layout — pinned in tests) and
     writes properly bucketed files, so later joins stay Exchange-free
     on the bucketed key. Each append adds at most one file per touched
-    bucket (with align=True); compact periodically with
-    compact_bucketed when file counts grow — the HadoopArchives
-    small-file discipline (src/tools/HadoopArchives.java). (Never
-    write_bucketed(spark.table(t), t, ...): Spark rejects overwriting
-    a table from its own scan.)"""
+    bucket; compact periodically with compact_bucketed when file
+    counts grow — the HadoopArchives small-file discipline
+    (src/tools/HadoopArchives.java). (Never write_bucketed(
+    spark.table(t), t, ...): Spark rejects overwriting a table from
+    its own scan.)"""
     _aligned_bucket_write(
-        df, num_buckets, bucket_cols, align,
+        df, num_buckets, bucket_cols,
         lambda d: d.write.mode("append")
         .bucketBy(num_buckets, *bucket_cols)
         .sortBy(*(sort_cols or bucket_cols))

@@ -17,9 +17,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-# On a real cluster these scale with executor count; locally with cores.
-_DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
 
 def driver_memory() -> str:
     """`spark.driver.memory`: SPARK_GRAFT_DRIVER_MEM, else half the host's
@@ -50,7 +47,8 @@ def get_spark(
     runtime, so the same plan survives sf0.001 → 100 TB. On a real
     cluster, set it to 2-3× total executor cores.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", _DEFAULT_CPUS))
+    # On a real cluster these scale with executor count; locally with cores.
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -75,28 +73,11 @@ def get_spark(
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        .config("spark.ui.enabled", "false")
     )
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
-    # Ad-hoc conf overrides for A/B measurement (optimization rounds):
-    # SPARK_GRAFT_CONF="k1=v1;k2=v2". Only read at first JVM launch.
-    # Applied LAST — an A/B override must beat a caller's extra_conf or
-    # the measurement silently compares identical configs — and logged
-    # loudly so a leftover env var from a finished A/B can't skew a
-    # benchmark/correctness run without a trace (ADVICE r11).
-    env_conf = os.environ.get("SPARK_GRAFT_CONF", "")
-    if env_conf:
-        import logging
-
-        for pair in env_conf.split(";"):
-            if "=" in pair:
-                k, v = pair.split("=", 1)
-                logging.getLogger(__name__).warning(
-                    "SPARK_GRAFT_CONF override: %s=%s", k.strip(), v.strip()
-                )
-                builder = builder.config(k.strip(), v.strip())
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

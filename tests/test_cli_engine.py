@@ -357,6 +357,28 @@ class TestBenchRoundInference:
         os.utime(tmp_path / "BENCH_LOCAL_r14_c32.json", (2000, 2000))
         assert bench.newest_record(d) == f"{d}/BENCH_LOCAL_r14_c32.json"
 
+    def test_label_names_the_record(self, tmp_path):
+        # two labelled runs of one round and core count must keep two
+        # records; the label is sanitised into the file name only
+        import bench
+
+        d = str(tmp_path)
+        assert bench.record_target(d, 13, 8, "base") == (
+            13, "base", f"{d}/BENCH_LOCAL_r13_c8_base.json")
+        assert bench.record_target(d, 13, 8, "pr 11/b:v2") == (
+            13, "pr 11/b:v2", f"{d}/BENCH_LOCAL_r13_c8_pr-11-b-v2.json")
+        assert bench.record_target(d, 13, 8) == (
+            13, "r13-c8", f"{d}/BENCH_LOCAL_r13_c8.json")
+        for i, name in enumerate(["BENCH_LOCAL_r13_c8_base.json",
+                                  "BENCH_LOCAL_r13_c8_pr-11-b-v2.json",
+                                  "BENCH_LOCAL_r13_c8.json",
+                                  "BENCH_LOCAL_r12_c8_zz.json"]):
+            (tmp_path / name).write_text("{}")
+            os.utime(tmp_path / name, (1000 + i, 1000 + i))
+        assert bench.newest_record(d) == f"{d}/BENCH_LOCAL_r13_c8.json"
+        os.utime(tmp_path / "BENCH_LOCAL_r13_c8_base.json", (2000, 2000))
+        assert bench.newest_record(d) == f"{d}/BENCH_LOCAL_r13_c8_base.json"
+
 
 class TestBenchIoTier:
     def test_keys_jobs_and_cleanup(self, spark, tmp_path, monkeypatch):

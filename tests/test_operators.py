@@ -6,6 +6,7 @@ for sort specs)."""
 import pytest
 from pyspark.sql import functions as F
 
+from hadoop_distributed_dynamic_file_system_spark import cache
 from hadoop_distributed_dynamic_file_system_spark.operators import (
     aggregate as agg_ops,
 )
@@ -181,15 +182,16 @@ class TestSimhashRotations:
         )
         try:
             r1 = dedup.simhash_near_pairs(
-                fps, "doc_id", max_hamming=3, band_shift=8, rotations=1, cache=False
+                fps, "doc_id", max_hamming=3, band_shift=8, rotations=1
             )
             assert r1.count() == 0
             r2 = dedup.simhash_near_pairs(
-                fps, "doc_id", max_hamming=3, band_shift=8, rotations=2, cache=False
+                fps, "doc_id", max_hamming=3, band_shift=8, rotations=2
             )
             got = [(r.id_a, r.id_b, r.hamming) for r in r2.collect()]
             assert got == [(1, 2, 2)]
         finally:
+            cache.release_all()
             spark.catalog.clearCache()
 
     def test_both_rotations_match_yields_one_pair(self, spark):
@@ -202,10 +204,11 @@ class TestSimhashRotations:
         )
         try:
             out = dedup.simhash_near_pairs(
-                fps, "doc_id", max_hamming=0, band_shift=8, rotations=2, cache=False
+                fps, "doc_id", max_hamming=0, band_shift=8, rotations=2
             )
             assert [(r.id_a, r.id_b, r.hamming) for r in out.collect()] == [(1, 2, 0)]
         finally:
+            cache.release_all()
             spark.catalog.clearCache()
 
 
@@ -237,7 +240,7 @@ class TestHotBucketGuards:
         sigs = dedup.minhash_signatures(df, "doc_id", "text", num_hashes=8)
         try:
             unguarded = dedup.lsh_candidate_pairs(
-                sigs, "doc_id", num_hashes=8, bands=4, cache=False
+                sigs, "doc_id", num_hashes=8, bands=4
             ).count()
             assert unguarded >= 40 * 39 // 2  # the quadratic blow-up
             with caplog.at_level(
@@ -245,7 +248,7 @@ class TestHotBucketGuards:
                 logger="hadoop_distributed_dynamic_file_system_spark.operators.dedup",
             ):
                 guarded = dedup.lsh_candidate_pairs(
-                    sigs, "doc_id", num_hashes=8, bands=4, cache=False,
+                    sigs, "doc_id", num_hashes=8, bands=4,
                     max_bucket_size=10, bucket_census="eager",
                 ).count()
             assert guarded == 0  # all pairs lived in the hot bucket
@@ -254,6 +257,7 @@ class TestHotBucketGuards:
                 for r in caplog.records
             )
         finally:
+            cache.release_all()
             spark.catalog.clearCache()
 
     def test_lsh_guard_keeps_small_buckets(self, spark):
@@ -269,12 +273,12 @@ class TestHotBucketGuards:
             pairs = {
                 (r.id_a, r.id_b)
                 for r in dedup.lsh_candidate_pairs(
-                    sigs, "doc_id", num_hashes=8, bands=4, cache=False,
-                    max_bucket_size=10,
+                    sigs, "doc_id", num_hashes=8, bands=4, max_bucket_size=10,
                 ).collect()
             }
             assert pairs == {(1, 2)}  # under the cap: exact behavior
         finally:
+            cache.release_all()
             spark.catalog.clearCache()
 
     def test_simhash_oversized_bucket_dropped_and_logged(self, spark, caplog):
@@ -288,14 +292,17 @@ class TestHotBucketGuards:
             [(i, 0x1234) for i in range(30)] + [(100, 0x5634), (101, 0x5635)],
             "doc_id INT, simhash BIGINT",
         )
-        with caplog.at_level(
-            logging.WARNING,
-            logger="hadoop_distributed_dynamic_file_system_spark.operators.dedup",
-        ):
-            out = dedup.simhash_near_pairs(
-                fps, "doc_id", max_hamming=3, band_shift=8, cache=False,
-                max_bucket_size=8, bucket_census="eager",
-            ).collect()
+        try:
+            with caplog.at_level(
+                logging.WARNING,
+                logger="hadoop_distributed_dynamic_file_system_spark.operators.dedup",
+            ):
+                out = dedup.simhash_near_pairs(
+                    fps, "doc_id", max_hamming=3, band_shift=8,
+                    max_bucket_size=8, bucket_census="eager",
+                ).collect()
+        finally:
+            cache.release_all()
         # the 30-member bucket is gone; 100/101 share a band and survive
         assert {(r.id_a, r.id_b) for r in out} == {(100, 101)}
         assert any(
@@ -303,32 +310,59 @@ class TestHotBucketGuards:
             for r in caplog.records
         )
 
+    def test_simhash_lazy_guard_log_names_its_own_census(self, spark, caplog):
+        # lsh_bucket_stats bands MinHash mh_* columns and cannot size
+        # simhash rotation bands: the lazy guard's line must point at
+        # the public bucket_census argument instead
+        import logging
+
+        from hadoop_distributed_dynamic_file_system_spark.operators import dedup
+
+        fps = spark.createDataFrame([(1, 0x1234)], "doc_id INT, simhash BIGINT")
+        try:
+            with caplog.at_level(
+                logging.INFO,
+                logger="hadoop_distributed_dynamic_file_system_spark.operators.dedup",
+            ):
+                dedup.simhash_near_pairs(fps, "doc_id", max_bucket_size=8)
+        finally:
+            cache.release_all()
+        (msg,) = [
+            r.getMessage() for r in caplog.records
+            if "simhash_near_pairs" in r.getMessage()
+        ]
+        assert "bucket_census='eager'" in msg
+        assert "lsh_bucket_stats" not in msg
+
     def test_ngram_doc_freq_ceiling_dropped_and_logged(self, spark, caplog):
         import logging
 
         from hadoop_distributed_dynamic_file_system_spark.operators import dedup
 
         df = self._boilerplate_corpus(spark, n_dup=25)
-        with caplog.at_level(
-            logging.WARNING,
-            logger="hadoop_distributed_dynamic_file_system_spark.operators.dedup",
-        ):
-            got = dedup.ngram_jaccard_pairs(
-                df, df.withColumnRenamed("doc_id", "doc_id"),
-                "doc_id", "text", threshold=0.99, cache=False,
-                max_doc_freq=10,
-            ).count()
-        # the boilerplate shingles (df=50 across both sides) are gone:
-        # the 25×25 identical-doc pair block never materializes; only
-        # self-pairs of the unique docs (jaccard 1.0) remain
-        assert got == 4
-        assert any(
-            "document frequency" in r.message for r in caplog.records
-        )
-        # unguarded: the quadratic block exists (25² self-join pairs)
-        assert dedup.ngram_jaccard_pairs(
-            df, df, "doc_id", "text", threshold=0.99, cache=False
-        ).count() == 25 * 25 + 4
+        try:
+            with caplog.at_level(
+                logging.WARNING,
+                logger="hadoop_distributed_dynamic_file_system_spark.operators.dedup",
+            ):
+                got = dedup.ngram_jaccard_pairs(
+                    df, df.withColumnRenamed("doc_id", "doc_id"),
+                    "doc_id", "text", threshold=0.99, max_doc_freq=10,
+                ).count()
+            # the boilerplate shingles (df=50 across both sides) are
+            # gone: the 25×25 identical-doc pair block never
+            # materializes; only self-pairs of the unique docs
+            # (jaccard 1.0) remain
+            assert got == 4
+            assert any(
+                "document frequency" in r.message for r in caplog.records
+            )
+            # unguarded: the quadratic block exists (25² self-join pairs)
+            assert dedup.ngram_jaccard_pairs(
+                df, df, "doc_id", "text", threshold=0.99
+            ).count() == 25 * 25 + 4
+        finally:
+            cache.release_all()
 
     def test_lazy_census_matches_eager_and_is_action_free(
         self, spark, monkeypatch
@@ -341,8 +375,7 @@ class TestHotBucketGuards:
         sigs = dedup.minhash_signatures(df, "doc_id", "text", num_hashes=8)
         try:
             eager = dedup.lsh_candidate_pairs(
-                sigs, "doc_id", num_hashes=8, bands=4, cache=False,
-                max_bucket_size=10,
+                sigs, "doc_id", num_hashes=8, bands=4, max_bucket_size=10,
             ).count()
             # lazy census: plan CONSTRUCTION must trigger no driver
             # action (the eager form's .first() census would)
@@ -352,12 +385,13 @@ class TestHotBucketGuards:
             monkeypatch.setattr(DataFrame, "first", _boom)
             monkeypatch.setattr(DataFrame, "head", _boom)
             lazy_df = dedup.lsh_candidate_pairs(
-                sigs, "doc_id", num_hashes=8, bands=4, cache=False,
+                sigs, "doc_id", num_hashes=8, bands=4,
                 max_bucket_size=10, bucket_census="lazy",
             )
             monkeypatch.undo()
             assert lazy_df.count() == eager == 0
         finally:
+            cache.release_all()
             spark.catalog.clearCache()
 
     def test_near_dedup_default_cap_survives_degenerate_corpus(self, spark):
@@ -496,19 +530,18 @@ class TestHotBucketGuards:
             )
             sigs = dedup.minhash_signatures(df, "doc_id", "text", num_hashes=8)
             dedup.lsh_candidate_pairs(
-                sigs, "doc_id", num_hashes=8, bands=4, cache=False,
-                max_bucket_size=10,
+                sigs, "doc_id", num_hashes=8, bands=4, max_bucket_size=10,
             )
             dedup.near_dedup(df, "doc_id", "text")
             codes = spark.createDataFrame(
                 [(1, 0x1234)], "doc_id long, code long"
             )
             dedup.banded_hamming_pairs(
-                codes, "doc_id", "code", max_bucket_size=10, cache=False
+                codes, "doc_id", "code", max_bucket_size=10
             )
             dedup.simhash_near_pairs(
                 codes.withColumnRenamed("code", "simhash"), "doc_id",
-                max_bucket_size=10, cache=False,
+                max_bucket_size=10,
             )
             bins = spark.createDataFrame(
                 [(1, mm.make_two_tone_bmp(16, 16, 4))],
@@ -1340,14 +1373,16 @@ class TestLshEmptyDocSemantics:
             "doc_id long, text string",
         )
         sigs = dedup.minhash_signatures(df, "doc_id", "text", num_hashes=8)
-        for hashed in (True, False):
+        try:
             pairs = {
                 (r.id_a, r.id_b)
                 for r in dedup.lsh_candidate_pairs(
-                    sigs, "doc_id", num_hashes=8, bands=4, hash_band_keys=hashed
+                    sigs, "doc_id", num_hashes=8, bands=4
                 ).collect()
             }
-            assert pairs == {(4, 5)}, f"hash_band_keys={hashed}: {pairs}"
+        finally:
+            cache.release_all()
+        assert pairs == {(4, 5)}, pairs
 
     def test_batch_agrees_with_band_key_cols_producer(self, spark):
         from hadoop_distributed_dynamic_file_system_spark.operators import dedup
@@ -1548,10 +1583,11 @@ class TestAHashNearDup:
         )
         try:
             got = dedup.banded_hamming_pairs(
-                codes, "doc_id", "ahash", max_hamming=3, cache=False
+                codes, "doc_id", "ahash", max_hamming=3
             ).collect()
             assert [(r.id_a, r.id_b, r.hamming) for r in got] == [(1, 2, 3)]
         finally:
+            cache.release_all()
             spark.catalog.clearCache()
 
 

@@ -860,7 +860,7 @@ class TestBandedHammingCompleteness:
             (r.id_a, r.id_b, r.hamming)
             for r in dedup.banded_hamming_pairs(
                 df, "doc_id", "code",
-                max_hamming=max_h, n_bands=n_bands, bits=bits, cache=False,
+                max_hamming=max_h, n_bands=n_bands, bits=bits,
             ).collect()
         }
         cache.release_all()

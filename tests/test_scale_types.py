@@ -47,7 +47,7 @@ class TestBucketedJoin:
 class TestBucketedWriteAlignment:
     def test_aligned_write_is_one_file_per_bucket(self, spark):
         # files = tasks x buckets without alignment — the small-file
-        # explosion write_bucketed(align=True) exists to prevent
+        # explosion write_bucketed's alignment exists to prevent
         import glob
         import shutil
 

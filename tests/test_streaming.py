@@ -885,7 +885,7 @@ class TestStreamingNearDedup:
 
     def test_band_keys_fold_compatible_with_lsh_pairs(self, spark):
         # the folded stream keys must equal lsh_candidate_pairs'
-        # hash_band_keys fold, or index and stream silently disagree
+        # band-key fold, or index and stream silently disagree
         from hadoop_distributed_dynamic_file_system_spark.operators import dedup
 
         corpus, _ = self._corpus_and_batch(spark)

@@ -179,20 +179,42 @@ class TestDsirImportance:
         )
         return df, F.col("tag") == "t"
 
-    def test_fused_weights_equal_two_pass(self, spark):
-        df, flag = self._flagged(spark)
-        fused = wq.dsir_bucket_weights(df, "text", target_flag=flag)
-        twopass = wq.dsir_bucket_weights(df, "text", df.filter(flag))
-        assert sorted(fused.collect()) == sorted(twopass.collect())
+    def _flagged_inputs(self, spark, sf_dir):
+        # the toy frame, then the fixture corpus: it activates far more
+        # buckets, most of them unseen in a one-source target subset,
+        # so the unseen-target floor carries most of the weights
+        import os
 
-    def test_fused_importance_equals_two_pass(self, spark):
-        df, flag = self._flagged(spark)
+        yield self._flagged(spark)
+        df = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        yield df, F.col("source") == df.select("source").first()[0]
+
+    def test_fused_weights_equal_two_pass(self, spark, sf_dir):
+        from hadoop_distributed_dynamic_file_system_spark import cache
+
+        try:
+            for df, flag in self._flagged_inputs(spark, sf_dir):
+                fused = wq.dsir_bucket_weights(df, "text", target_flag=flag)
+                twopass = wq.dsir_bucket_weights(df, "text", df.filter(flag))
+                assert sorted(fused.select("b", "w").collect()) == sorted(
+                    twopass.select("b", "w").collect()
+                )
+        finally:
+            cache.release_all()
+
+    def test_fused_importance_equals_two_pass(self, spark, sf_dir):
+        from hadoop_distributed_dynamic_file_system_spark import cache
+
         cols = ["doc_id", "n_tokens", "avg_llr"]
-        fused = wq.dsir_importance(df, "doc_id", "text", target_flag=flag)
-        twopass = wq.dsir_importance(df, "doc_id", "text", df.filter(flag))
-        assert sorted(fused.select(cols).collect()) == sorted(
-            twopass.select(cols).collect()
-        )
+        try:
+            for df, flag in self._flagged_inputs(spark, sf_dir):
+                fused = wq.dsir_importance(df, "doc_id", "text", target_flag=flag)
+                twopass = wq.dsir_importance(df, "doc_id", "text", df.filter(flag))
+                assert sorted(fused.select(cols).collect()) == sorted(
+                    twopass.select(cols).collect()
+                )
+        finally:
+            cache.release_all()
 
     def test_exactly_one_target_form(self, spark):
         df, flag = self._flagged(spark)
