@@ -16,6 +16,7 @@ import json
 import os
 import re
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -260,10 +261,29 @@ REPS = {
 }
 
 
+# perfbench's rule: the machine is idle when the 1-minute load average is
+# below IDLE_LOAD_PER_CPU x cpus; bench.py waits at most IDLE_WAIT_S for it
+IDLE_LOAD_PER_CPU = 0.75
+IDLE_WAIT_S = 90.0
+
+
+def wait_for_idle(cpus: int, loadavg=os.getloadavg, sleep=time.sleep,
+                  clock=time.monotonic) -> dict:
+    """Wait, at most IDLE_WAIT_S, for the 1-minute load average to fall
+    below IDLE_LOAD_PER_CPU x `cpus`. Returns the seconds waited, whether
+    the machine was then idle and the load averages after the wait."""
+    t0 = clock()
+    load = loadavg()
+    while load[0] >= IDLE_LOAD_PER_CPU * cpus and clock() - t0 < IDLE_WAIT_S:
+        sleep(1.0)
+        load = loadavg()
+    return {"waited_s": round(clock() - t0, 2), "idle": load[0] < IDLE_LOAD_PER_CPU * cpus,
+            "loadavg": [round(x, 2) for x in load]}
+
+
 def cpu_count() -> int:
     """SPARK_GRAFT_CPUS, or os.cpu_count() when it is unset or not a
-    positive integer: it is read after the timed work, so a bad value
-    must not lose the record."""
+    positive integer: a bad value must not stop the run."""
     try:
         cpus = int(os.environ["SPARK_GRAFT_CPUS"])
     except (KeyError, ValueError):
@@ -500,10 +520,13 @@ def main() -> None:
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     sf_numeric = sf.replace(".", "").isdigit()
     scale = float(sf) if sf_numeric else 0.1  # data sizes below scale with it
-    # captured BEFORE the session spins up its own 32 threads: ambient
-    # machine load at start is the contamination signal; the end
-    # snapshot mostly reads this bench's own work
-    loadavg_start = [round(x, 2) for x in os.getloadavg()]
+    # captured BEFORE the session spins up its own 32 threads, after a
+    # bounded wait for ambient load to fall: the load at start is the
+    # contamination signal; the end snapshot mostly reads this bench's
+    # own work
+    cpus = cpu_count()
+    idle = wait_for_idle(cpus)
+    loadavg_start = idle.pop("loadavg")
     spark = get_spark("bench")
 
     # Warm-up at the smallest SF: pays whole-stage-codegen JIT for each
@@ -632,7 +655,6 @@ def main() -> None:
     # BEFORE this session spun up means per-query statuses at +-20% are
     # noise, and the record should say so itself instead of reading as
     # code regressions.
-    cpus = cpu_count()
     contaminated = loadavg_start[0] > cpus / 4
     record = {
         "metric": "headline_queries_total_wall",
@@ -646,6 +668,7 @@ def main() -> None:
         "queries_spread": spreads,
         "loadavg_start": loadavg_start,
         "loadavg_end": [round(x, 2) for x in os.getloadavg()],
+        **idle,
         "contaminated": contaminated,
         "io": io_stats,
         "sf": scale if sf_numeric else sf,

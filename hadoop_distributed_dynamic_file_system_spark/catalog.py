@@ -8,10 +8,22 @@ the monitor). Here the namespace is a dict of parquet-backed DataFrames;
 every `table()` call updates the same EWMA. Each `TableEntry` is the one
 record of its table's heat and hot-set level: `hotset.HotSetManager`
 reads them to decide, and `Catalog.set_level` is the only code that
-persists or unpersists a table. Registering a table is metadata-only,
-like opening a file on the NameNode: `read_parquet` reads one footer on
-the driver, its file listing decides the single-block exemption, and no
-Spark job runs.
+asks for a cached copy or frees one. Registering a table is
+metadata-only, like opening a file on the NameNode: `read_parquet` reads
+one footer on the driver, its file listing decides the single-block
+exemption, no Spark job runs, and the table's SQL view is created.
+
+A promotion completes in the background, as the fork's replication
+monitor raises a file's target and DataNodes copy blocks while readers
+keep using the replicas that exist. When a table leaves level 0,
+`set_level` queues a copy with an analyzed plan of its own; one fill
+worker per catalog persists and fills queued copies one at a time, one
+partition per one-task job, under the job group `hotset-fill-<table>`,
+and exits when the queue is empty. `Catalog.table`
+and the SQL view read the parquet table until the copy is filled, then
+the worker switches both to the copy. Returning to level 0 switches
+them back and frees the copy, or has the worker free it when a fill
+still runs: freeing a copy while its fill job runs leaks blocks.
 
 EWMA formula (FSDirectory.java:1365-1373, replicated exactly):
     new = (1 - alpha) * old + alpha * now
@@ -24,13 +36,16 @@ from __future__ import annotations
 import json
 import logging
 import os
+import threading
 import time
 import weakref
+from collections import deque
 from dataclasses import dataclass, field
 from urllib.parse import unquote, urlparse
 
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from pyspark.storagelevel import StorageLevel
 
@@ -59,7 +74,8 @@ TOP = 2
 STORAGE = StorageLevel.MEMORY_AND_DISK
 
 # The fork's NameNode.allocationLog (NameNode.java:126): one record per
-# level change and per capacity-triggered demotion pass.
+# level change, per capacity-triggered demotion pass and per fill event
+# (queued, filled, dropped unfilled, failed).
 allocation_log = logging.getLogger(f"{__package__}.allocation")
 
 
@@ -202,6 +218,27 @@ def _read(spark: SparkSession, path: str) -> tuple[DataFrame, tuple | None]:
     return df, fingerprint
 
 
+def _fill(copy: DataFrame) -> None:
+    """Fill a persisted copy one partition at a time, each in a one-task
+    job that returns no rows, so a fill holds at most one core. Spark's
+    FIFO scheduler gives a freed core to an earlier job first, so a
+    request submitted while a partition fills runs before the next
+    partition does. (`rand() < 0` would not do: Spark folds it to false
+    and scans nothing.)"""
+    for _ in copy.where(F.spark_partition_id() < 0).toLocalIterator():
+        pass
+
+
+@dataclass(eq=False)
+class _Copy:
+    """A table's cached copy, from the promotion that queued it until it
+    is freed. `state`: queued, filling or filled."""
+
+    df: DataFrame = field(repr=False)
+    queued_at: float
+    state: str = "queued"
+
+
 @dataclass
 class TableEntry:
     name: str
@@ -211,37 +248,55 @@ class TableEntry:
     access_count: int = 0
     single_block: bool = False  # exempt from the hot set, set by Catalog.register_path
     level: int = 0  # hot-set level, changed only by Catalog.set_level
+    copy: _Copy | None = field(default=None, repr=False)  # while level > 0
 
     @property
     def cache_level(self) -> str | None:
-        """The persist level of this entry's cached copy, if it has one."""
-        return str(STORAGE) if self.level else None
+        """The persist level of this entry's cached copy, if it has one;
+        a copy that is still queued or filling counts."""
+        return str(STORAGE) if self.copy is not None else None
+
+    @property
+    def read_df(self) -> DataFrame:
+        """What reads of this table use: the copy once it is filled, else
+        the parquet table."""
+        copy = self.copy
+        return copy.df if copy is not None and copy.state == "filled" else self.df
 
 
 class Catalog:
-    """Registry of named parquet tables with access-EWMA tracking."""
+    """Registry of named parquet tables and their SQL views, with
+    access-EWMA tracking and the background fill of cached copies."""
 
     def __init__(self, spark: SparkSession, clock=None) -> None:
         self.spark = spark
         self._clock = clock or (lambda: time.time() * 1000.0)
         self._tables: dict[str, TableEntry] = {}
+        # guards every entry's `copy`, the SQL views and the fill queue
+        self._lock = threading.Lock()
+        self._queue: deque[tuple[TableEntry, _Copy]] = deque()
+        self._worker: threading.Thread | None = None
 
     # -- registration ------------------------------------------------
     def register_path(self, name: str, path: str) -> None:
-        """Register `name`, replacing any earlier table of that name. The
-        new path is read first, so a path that cannot be read raises and
-        leaves the earlier table as it was. The replaced entry then drops
-        to level 0 while it is still registered, which frees its cached
-        copy (the reference's delete hook, FSNamesystem.java:301-303).
-        Single-block: one data file <= `spark.sql.files.openCostInBytes`,
-        Spark's one-partition scans at parallelism >= 2 (maxSplitBytes)."""
+        """Register `name` and point its SQL view at it, replacing any
+        earlier table of that name. The new path is read first, so a path
+        that cannot be read raises and leaves the earlier table as it
+        was. The replaced entry then drops to level 0 while it is still
+        registered, which frees its cached copy (the reference's delete
+        hook, FSNamesystem.java:301-303). Single-block: one data file <=
+        `spark.sql.files.openCostInBytes`, Spark's one-partition scans at
+        parallelism >= 2 (maxSplitBytes)."""
         df, files = _read(self.spark, path)
         single_block = files is not None and len(files) == 1 and (
             files[0][1] <= self.spark._jsparkSession.sessionState().conf().filesOpenCostInBytes())
         old = self._tables.get(name)
         if old is not None:
             self.set_level(old, 0)
-        self._tables[name] = TableEntry(name=name, path=path, df=df, single_block=single_block)
+        ent = TableEntry(name=name, path=path, df=df, single_block=single_block)
+        with self._lock:
+            self._tables[name] = ent
+            df.createOrReplaceTempView(name)
 
     def names(self) -> list[str]:
         return sorted(self._tables)
@@ -257,7 +312,8 @@ class Catalog:
         ent = self._tables[name]
         if track_access:
             self._touch(ent)
-        return ent.df
+        with self._lock:
+            return ent.read_df
 
     def _touch(self, ent: TableEntry) -> None:
         now = self._clock()
@@ -274,16 +330,107 @@ class Catalog:
 
     # -- the one persist point -------------------------------------------
     def set_level(self, ent: TableEntry, level: int) -> None:
-        """Move a table to hot-set `level`. Leaving level 0 persists the
-        table at `STORAGE`, returning to it unpersists it; a move between
-        dynamic levels changes only the rank. The only code that persists
-        or unpersists a catalog table."""
+        """Move a table to hot-set `level`. Leaving level 0 queues a copy
+        for the fill worker; returning to it switches reads back to the
+        parquet table and frees the copy, at once unless its fill still
+        runs. A move between dynamic levels changes only the rank. The
+        only code that asks for a cached copy or frees one."""
         if level == ent.level:
             return
-        if not ent.level:
-            ent.df.persist(STORAGE)
-        elif not level:
-            ent.df.unpersist()
+        t0 = time.monotonic()
         allocation_log.info("%s: level %d -> %d (ewma %.0f ms)",
                             ent.name, ent.level, level, ent.access_time_ewma_ms)
-        ent.level = level
+        with self._lock:
+            if not ent.level:
+                # `ent.df.select("*")` would not do: Spark's cache lookup
+                # still matches it to `ent.df`'s own relation (as it does
+                # `alias` and `hint`), so reads of the parquet table would
+                # be planned over the half-filled copy and fill it
+                # themselves. A filter on a literal keeps a plan of its own.
+                ent.copy = _Copy(ent.df.filter(F.lit(True)), t0)
+                self._queue.append((ent, ent.copy))
+                allocation_log.info("%s: fill queued in %.3f s, %d ahead", ent.name,
+                                    time.monotonic() - t0, len(self._queue) - 1)
+                if self._worker is None:
+                    self._worker = threading.Thread(target=self._fill_loop,
+                                                    name="hotset-fill", daemon=True)
+                    self._worker.start()
+            elif not level:
+                copy, ent.copy = ent.copy, None  # None: its fill failed or was stopped
+                state = copy.state if copy is not None else None
+                if state == "filled":
+                    ent.df.createOrReplaceTempView(ent.name)
+                    copy.df.unpersist()
+                elif state == "queued":
+                    self._queue.remove((ent, copy))
+                    self._dropped(ent.name, copy)
+                # a filling copy is freed by the worker when its job ends
+            ent.level = level
+
+    # -- the fill worker ----------------------------------------------------
+    def _fill_loop(self) -> None:
+        """Persist and fill queued copies one at a time, then exit when
+        the queue is empty. A copy whose entry let go of it while it
+        filled, or whose fill raised, is freed once its job has ended; a
+        fill that raised is logged at WARNING only if its copy was still
+        wanted."""
+        sc = self.spark.sparkContext
+        while True:
+            with self._lock:
+                if not self._queue:
+                    self._worker = None
+                    return
+                ent, copy = self._queue.popleft()
+                copy.state = "filling"
+            t0 = time.monotonic()
+            error = None
+            try:
+                sc.setJobGroup(f"hotset-fill-{ent.name}", f"fill the cached copy of {ent.name}")
+                copy.df.persist(STORAGE)
+                _fill(copy.df)
+            except Exception as exc:  # e.g. a write moved the files away
+                error = exc
+            with self._lock:
+                wanted = ent.copy is copy
+                if wanted and error is None:
+                    copy.state = "filled"
+                    if self._tables.get(ent.name) is ent:
+                        copy.df.createOrReplaceTempView(ent.name)
+                elif wanted:
+                    ent.copy = None
+            if not wanted:
+                self._dropped(ent.name, copy)
+            elif error is None:
+                allocation_log.info("%s: copy filled in %.3f s, %.3f s after it was queued",
+                                    ent.name, time.monotonic() - t0,
+                                    time.monotonic() - copy.queued_at)
+                continue
+            else:
+                allocation_log.warning("%s: copy fill failed after %.3f s; reads stay on "
+                                       "parquet", ent.name, time.monotonic() - t0,
+                                       exc_info=error)
+            try:
+                copy.df.unpersist()
+            except Py4JError:  # the session stopped under the fill
+                pass
+
+    @staticmethod
+    def _dropped(name: str, copy: _Copy) -> None:
+        allocation_log.info("%s: copy dropped %.3f s after it was queued, before it "
+                            "was filled", name, time.monotonic() - copy.queued_at)
+
+    def fills_idle(self) -> bool:
+        """No copy is queued or filling."""
+        with self._lock:
+            return self._worker is None
+
+    def stop_fills(self) -> None:
+        """Drop every queued copy and wait for a running fill to end."""
+        with self._lock:
+            while self._queue:
+                ent, copy = self._queue.popleft()
+                ent.copy = None
+                self._dropped(ent.name, copy)
+            worker = self._worker
+        if worker is not None:
+            worker.join()

@@ -35,13 +35,16 @@ class Engine:
     def table(self, name: str) -> DataFrame:
         """Read a registered table; updates access EWMA and runs the
         hot-set promotion/demotion pass (the reference's per-open
-        dynamic-replication hook)."""
+        dynamic-replication hook). A promotion only queues the fill of a
+        cached copy: this read, and every read until the copy is filled,
+        scans parquet."""
         df = self.catalog.table(name)
         self.hotset.on_access(name)
         return df
 
     def sql(self, query: str) -> DataFrame:
-        """SQL over the registered views."""
+        """SQL over the registered views; a promoted table's view reads
+        its cached copy once the copy is filled."""
         return self.spark.sql(query)
 
     def register(self, name: str, path: str) -> None:
@@ -51,7 +54,6 @@ class Engine:
         be read raises and leaves the earlier table of that name as it
         was."""
         self.catalog.register_path(name, path)
-        self.catalog.table(name, track_access=False).createOrReplaceTempView(name)
 
     def heat_report(self) -> list[dict]:
         """Per-table access heat + current cache level; the changes
@@ -71,4 +73,6 @@ class Engine:
         return sorted(out, key=lambda r: -r["ewma_ms"])
 
     def stop(self) -> None:
+        """Drop queued fills, wait for a running one, stop the session."""
+        self.catalog.stop_fills()
         self.spark.stop()

@@ -22,8 +22,12 @@ Reference (the repo's one novel contribution):
 Spark translation: the replication sets are hot-set levels 1..
 `catalog.TOP` above the base level 0. A level is the policy's rank:
 every table above level 0 holds one cached copy at `catalog.STORAGE`,
-persisted when it leaves level 0 and freed when it returns, so a move
-between dynamic levels re-reads nothing. Unlike the fork, a demotion
+asked for when it leaves level 0 and freed when it returns, so a move
+between dynamic levels re-reads nothing. As in the fork, where a raised
+replication target is met by DataNodes in the background, a promotion
+only queues the copy: the catalog's fill worker fills it off the
+request path and reads switch to it once it is filled, so the capacity
+probe sees a copy grow while it fills. Unlike the fork, a demotion
 from level 2 to 1 frees no storage (there it drops a replica); a probe
 still above `top` makes the next read run another pass, whose 1 → 0
 moves free memory. The manager is policy only: each level's

@@ -305,8 +305,8 @@ class TestBenchRoundInference:
         assert bench.infer_phase(d) == "mid"  # round 9 working runs
 
     def test_malformed_cpu_count_falls_back(self, monkeypatch):
-        # the count is read after the timed work: a bad value must not
-        # raise and lose the finished record
+        # the count sets the idle threshold and names the record: a bad
+        # value must not raise
         import bench
 
         for bad in ("", "eight", "0", "-4"):
@@ -378,6 +378,41 @@ class TestBenchRoundInference:
         assert bench.newest_record(d) == f"{d}/BENCH_LOCAL_r13_c8.json"
         os.utime(tmp_path / "BENCH_LOCAL_r13_c8_base.json", (2000, 2000))
         assert bench.newest_record(d) == f"{d}/BENCH_LOCAL_r13_c8_base.json"
+
+
+class TestBenchIdleWait:
+    """bench.py waits, at most 90 s, for the 1-minute load average to fall
+    below perfbench's 0.75 x cpus before its session starts."""
+
+    @staticmethod
+    def _wait(loads, cpus=4):
+        import bench
+
+        now, slept = [0.0], []
+
+        def sleep(s):
+            slept.append(s)
+            now[0] += s
+
+        it = iter(loads)
+        out = bench.wait_for_idle(cpus, loadavg=lambda: (next(it), 0.5, 0.25),
+                                  sleep=sleep, clock=lambda: now[0])
+        return out, slept
+
+    def test_waits_until_load_falls(self):
+        out, slept = self._wait([3.9, 3.2, 2.99, 9.0])
+        assert out == {"waited_s": 2.0, "idle": True, "loadavg": [2.99, 0.5, 0.25]}
+        assert slept == [1.0, 1.0]
+
+    def test_idle_machine_does_not_wait(self):
+        out, slept = self._wait([0.4])
+        assert out == {"waited_s": 0.0, "idle": True, "loadavg": [0.4, 0.5, 0.25]}
+        assert slept == []
+
+    def test_wait_is_bounded(self):
+        out, slept = self._wait([7.5] * 200)
+        assert out == {"waited_s": 90.0, "idle": False, "loadavg": [7.5, 0.5, 0.25]}
+        assert len(slept) == 90
 
 
 class TestBenchIoTier:

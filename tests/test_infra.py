@@ -8,6 +8,8 @@ jobcontrol tests, and the fork's DynamicReplicationMonitor behavior
 
 import logging
 import os
+import threading
+import time
 import uuid
 from types import SimpleNamespace
 
@@ -607,8 +609,10 @@ class TestCatalogAndHotSet:
     def _clear_cache(self, spark):
         # hot-set promotion persists tables; a lingering cache entry
         # would be substituted into OTHER tests' identical scans
-        # (cache manager matches by logical plan) and hide pushdowns
+        # (cache manager matches by logical plan) and hide pushdowns.
+        # A fill still running would persist after the clear.
         yield
+        _until(lambda: not _fill_threads())
         spark.catalog.clearCache()
 
     def _catalog(self, spark, sf_dir, clock, names=("nation", "orders", "lineitem")):
@@ -655,13 +659,18 @@ class TestCatalogAndHotSet:
         self._read(cat, mgr, t, "lineitem", 300)
         assert mgr.level_of == {"orders": TOP - 1, "lineitem": TOP}
 
-        # the allocation log: every level change and the capacity pass
-        assert [(r.levelno, r.getMessage()) for r in caplog.records] == [
+        # the allocation log: every level change and the capacity pass,
+        # in order; the fill events come from the worker thread
+        records = [(r.levelno, r.getMessage()) for r in caplog.records]
+        assert [r for r in records if " fill queued " not in r[1]
+                and " copy filled " not in r[1]] == [
             (logging.INFO, "orders: level 0 -> 2 (ewma 100000 ms)"),
             (logging.INFO, "lineitem: level 0 -> 2 (ewma 200000 ms)"),
             (logging.INFO, "storage 95.0% used > 80%: demoting cold halves"),
             (logging.INFO, "orders: level 2 -> 1 (ewma 100000 ms)"),
         ]
+        assert [m.split(":")[0] for _, m in records if " fill queued " in m] == [
+            "orders", "lineitem"]
 
     def test_demotion_ranks_by_live_heat(self, spark, sf_dir):
         """The read that crosses `top` ranks tables by their live EWMA:
@@ -730,6 +739,8 @@ class TestCatalogAndHotSet:
         eng.register("t", path)
         eng.table("t").count()
         assert eng.hotset.level_of == {"t": TOP}
+        _until(eng.catalog.fills_idle)
+        assert eng.catalog.entry("t").copy.df.storageLevel == STORAGE
         assert cached() - before
         eng.register("t", path)
         assert "t" not in eng.hotset.level_of
@@ -737,6 +748,8 @@ class TestCatalogAndHotSet:
         eng.table("t")
         assert eng.hotset.level_of == {"t": TOP}
         assert eng.catalog.entry("t").cache_level is not None
+        _until(eng.catalog.fills_idle)
+        assert eng.catalog.entry("t").copy.df.storageLevel == STORAGE
 
     def test_live_persist_change_and_demotion_under_pressure(
         self, spark, sf_dir
@@ -760,17 +773,19 @@ class TestCatalogAndHotSet:
             return {i.id(): str(i.storageLevel()) for i in sc.getRDDStorageInfo()
                     if i.numCachedPartitions() > 0}
 
+        # the fill worker materializes each promoted copy; read the LIVE
+        # level back from the session's cache manager (not our bookkeeping)
         names = ("orders", "lineitem", "nation")
-        for at_s, name in zip((100, 200, 300), names):
+        before = cached()
+        self._read(cat, mgr, t, "orders", 100)
+        _until(cat.fills_idle)
+        orders_ids = set(cached()) - set(before)
+        for at_s, name in zip((200, 300), names[1:]):
             self._read(cat, mgr, t, name, at_s)
         assert mgr.level_of == dict.fromkeys(names, TOP)
-
-        # materialize the promoted blocks, then read the LIVE level
-        # back from the session's cache manager (not our bookkeeping)
-        before = cached()
+        _until(cat.fills_idle)
         orders_df = cat.table("orders", track_access=False)
         orders_df.count()
-        orders_ids = set(cached()) - set(before)
         assert orders_ids
         for name in names[1:]:
             cat.table(name, track_access=False).count()
@@ -833,14 +848,128 @@ class TestCatalogAndHotSet:
         want = sorted(eng.table("t").collect())
         ent = eng.catalog.entry("t")
         assert ent.level == TOP
+        _until(eng.catalog.fills_idle)
         with pytest.raises(AnalysisException) as err:
             eng.register("t", str(tmp_path / "absent"))
         assert err.value.getCondition() == "PATH_NOT_FOUND"
         assert eng.catalog.entry("t") is ent
         assert (ent.path, ent.level) == (path, TOP)
-        assert ent.df.storageLevel == STORAGE
+        assert ent.copy.df.storageLevel == STORAGE
         assert sorted(eng.table("t").collect()) == want
         assert sorted(eng.sql("SELECT * FROM t").collect()) == want
+
+    # -- the background fill of a promoted table's copy ------------------
+    def _promoted(self, spark, tmp_path, monkeypatch, fill=None):
+        """An engine whose table `t` (3000 rows, 3 files) was just
+        promoted, and `fill` in place of the one-task fill."""
+        if fill is not None:
+            monkeypatch.setattr(catalog, "_fill", fill)
+        path = str(tmp_path / "t")
+        spark.range(3000).repartition(3).write.parquet(path)
+        eng = Engine(spark=spark)
+        eng.hotset = HotSetManager(eng.catalog, usage_fn=lambda: 0.0)
+        eng.register("t", path)
+        eng.table("t")
+        assert eng.hotset.level_of == {"t": TOP}
+        return eng
+
+    @staticmethod
+    def _gated(started, release):
+        """The one-task fill, run once `release` is set."""
+        real = catalog._fill
+
+        def fill(copy):
+            started.set()
+            assert release.wait(60)
+            real(copy)
+        return fill
+
+    def test_reads_switch_to_the_copy_once_it_is_filled(self, spark, tmp_path, monkeypatch,
+                                                       caplog):
+        """While the copy fills, the table and its view plan parquet
+        scans, so a read never fills the copy itself; after the fill
+        both read the copy."""
+        caplog.set_level(logging.INFO, logger=catalog.allocation_log.name)
+        started, release = threading.Event(), threading.Event()
+        eng = self._promoted(spark, tmp_path, monkeypatch, self._gated(started, release))
+        assert started.wait(60)  # the copy is persisted, its fill not run
+        assert eng.catalog.entry("t").cache_level == str(STORAGE)
+        assert not _in_memory(eng.table("t").groupBy().count())
+        assert not _in_memory(eng.sql("SELECT count(*) FROM t"))
+        release.set()
+        _until(eng.catalog.fills_idle)
+        assert _in_memory(eng.table("t").groupBy().count())
+        assert _in_memory(eng.sql("SELECT count(*) FROM t"))
+        assert eng.sql("SELECT count(*) FROM t").collect()[0][0] == 3000
+        events = [r.getMessage() for r in caplog.records]
+        assert any(m.startswith("t: fill queued in ") for m in events)
+        assert any(m.startswith("t: copy filled in ") for m in events)
+
+    @pytest.mark.parametrize("how", ["demote", "reregister"])
+    def test_copy_let_go_while_filling_is_freed(self, spark, tmp_path, monkeypatch, caplog,
+                                               how):
+        """Demoting or re-registering a table while its copy fills leaves
+        no cached RDD once the worker is idle, and the view reads the
+        table the catalog holds."""
+        caplog.set_level(logging.INFO, logger=catalog.allocation_log.name)
+        before = _cached_rdds(spark)
+        started, release = threading.Event(), threading.Event()
+        eng = self._promoted(spark, tmp_path, monkeypatch, self._gated(started, release))
+        assert started.wait(60)
+        if how == "demote":
+            eng.catalog.set_level(eng.catalog.entry("t"), 0)
+            rows = 3000
+        else:
+            path = str(tmp_path / "t2")
+            spark.range(500).repartition(2).write.parquet(path)
+            eng.register("t", path)
+            rows = 500
+        release.set()
+        _until(eng.catalog.fills_idle)
+        assert _cached_rdds(spark) <= before
+        assert eng.catalog.entry("t").cache_level is None
+        assert not _in_memory(eng.sql("SELECT count(*) FROM t"))
+        assert eng.sql("SELECT count(*) FROM t").collect()[0][0] == rows
+        assert eng.table("t").count() == rows
+        assert any(r.getMessage().startswith("t: copy dropped ") for r in caplog.records)
+
+    def test_failed_fill_is_logged_and_freed(self, spark, tmp_path, monkeypatch, caplog):
+        before = _cached_rdds(spark)
+        real = catalog._fill
+
+        def failing(copy):
+            real(copy)
+            raise RuntimeError("executor lost")
+
+        with caplog.at_level(logging.WARNING, logger=catalog.allocation_log.name):
+            eng = self._promoted(spark, tmp_path, monkeypatch, failing)
+            _until(eng.catalog.fills_idle)
+        [rec] = [r for r in caplog.records if r.levelno == logging.WARNING]
+        assert rec.getMessage().startswith("t: copy fill failed after ")
+        assert "executor lost" in str(rec.exc_info[1])
+        assert _cached_rdds(spark) <= before
+        assert eng.catalog.entry("t").cache_level is None
+        assert not _in_memory(eng.table("t").groupBy().count())
+        assert not _in_memory(eng.sql("SELECT count(*) FROM t"))
+        assert eng.table("t").count() == 3000
+
+    def test_stop_leaves_no_fill_thread(self, spark, tmp_path, monkeypatch):
+        """`Engine.stop` drops queued fills and waits for the running one
+        before it stops the session."""
+        started, release = threading.Event(), threading.Event()
+        eng = self._promoted(spark, tmp_path, monkeypatch, self._gated(started, release))
+        path = str(tmp_path / "u")
+        spark.range(3000).repartition(3).write.parquet(path)
+        eng.register("u", path)
+        eng.table("u")  # queued behind t's fill
+        assert started.wait(60)
+        assert _fill_threads()
+        stopped = []
+        monkeypatch.setattr(spark, "stop", lambda: stopped.append(True))
+        release.set()
+        eng.stop()
+        assert stopped and not _fill_threads()
+        assert eng.catalog.entry("u").cache_level is None
 
     def test_capacity_probe_failure_is_logged(self, caplog):
         def broken():
@@ -1155,6 +1284,29 @@ class TestSingleBlockExemption:
             assert _scan_partitions(ent.df) == 1
         finally:
             spark.conf.unset("spark.sql.leafNodeDefaultParallelism")
+
+
+def _until(pred, timeout=60.0):
+    """Poll `pred` until it holds; fail after `timeout` seconds."""
+    deadline = time.monotonic() + timeout
+    while not pred():
+        assert time.monotonic() < deadline, f"timed out waiting for {pred}"
+        time.sleep(0.02)
+
+
+def _fill_threads():
+    return [t for t in threading.enumerate() if t.name == "hotset-fill"]
+
+
+def _cached_rdds(spark):
+    """Ids of the RDDs holding cached blocks."""
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    return {i.id() for i in infos if i.numCachedPartitions() > 0}
+
+
+def _in_memory(df):
+    """Whether `df`'s physical plan reads a cached relation."""
+    return "InMemoryTableScan" in df._jdf.queryExecution().executedPlan().toString()
 
 
 def _jobs(spark, fn, *args):

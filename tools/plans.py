@@ -4,6 +4,7 @@ actually hold in the shipped plans (regenerate after planner-visible
 changes: `python tools/plans.py`)."""
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -245,6 +246,77 @@ shows the real number).
 """
 
 
+_ID = re.compile(r"#\d+L?")
+
+
+def _split(text: str) -> list[str]:
+    """`text`'s comma-separated items at bracket depth 0."""
+    items, depth, start = [], 0, 0
+    for i, c in enumerate(text):
+        depth += c in "([{"
+        depth -= c in ")]}"
+        if c == "," and depth == 0:
+            items.append(text[start:i].strip())
+            start = i + 1
+    items.append(text[start:].strip())
+    return items
+
+
+def normalise_expands(plan: str) -> str:
+    """`plan` (a formatted physical plan) with the alternatives of each
+    distinct-aggregate Expand in one canonical order.
+
+    Spark's distinct-aggregate rewrite numbers its groups (`gid`) and
+    lays out their columns in the iteration order of a hash map keyed by
+    expression ids, so identical code can print the groups in another
+    order. Here the groups are ordered by their column names: each
+    group's columns move to its new slots and its gid to its new number,
+    in the Expand and in every line that lists those columns in a row
+    or compares the gid."""
+    lines = plan.split("\n")
+    for i, line in enumerate(lines):
+        if not (line.startswith("Arguments: [[") and i >= 2
+                and lines[i - 2].split(" ", 1)[-1] == "Expand"):
+            continue
+        alts_text, out_text = line[len("Arguments: ["):].rsplit("], [", 1)
+        alts = [_split(a[1:-1]) for a in _split(alts_text)]
+        out = _split(out_text[:-1])
+        gid = next((k for k, o in enumerate(out) if o.startswith("gid#")), None)
+        if gid is None:
+            continue
+        # a group's slots: columns only its alternative fills
+        slots = {int(a[gid]): [k for k in range(gid) if a[k] != "null"
+                               and sum(b[k] != "null" for b in alts) == 1] for a in alts}
+        groups = [v for v in slots if slots[v]]
+        order = sorted(groups, key=lambda v: [_ID.sub("", out[k]) for k in slots[v]])
+        renumber = dict(zip(order, sorted(groups)))
+        moved = sorted(k for v in groups for k in slots[v])
+        perm = dict(zip(moved, [k for v in order for k in slots[v]]))  # new slot -> old
+
+        def place(items, gid_to=None):
+            new = [items[perm.get(k, k)] for k in range(len(items))]
+            if gid_to is not None:
+                new[gid] = str(gid_to)
+            return new
+
+        alts = sorted((place(a, renumber.get(int(a[gid]), int(a[gid]))) for a in alts),
+                      key=lambda a: int(a[gid]))
+        lines[i] = ("Arguments: [" + ", ".join("[" + ", ".join(a) + "]" for a in alts)
+                    + "], [" + ", ".join(place(out)) + "]")
+        old = [out[k] for k in moved]
+        new = [out[perm[k]] for k in moved]
+        row = re.compile(", ".join(
+            re.escape(t) + (r"(?!\w)(?P<deco>[^,()\[\]]*)" if j == 0 else r"(?!\w)(?P=deco)")
+            for j, t in enumerate(old)))
+        test = re.compile(re.escape(out[gid]) + r" = (\d+)\b")
+        for j, other in enumerate(lines):
+            if j != i:
+                other = row.sub(lambda m: ", ".join(t + m["deco"] for t in new), other)
+                lines[j] = test.sub(lambda m: f"{out[gid]} = "
+                                    f"{renumber.get(int(m[1]), int(m[1]))}", other)
+    return "\n".join(lines)
+
+
 def main() -> None:
     from hadoop_distributed_dynamic_file_system_spark import queries as q
     from hadoop_distributed_dynamic_file_system_spark import queries_llm  # noqa: F401
@@ -261,9 +333,9 @@ def main() -> None:
     ]
     for name, why in SHOWCASE:
         df = q.QUERIES[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
+        plan = normalise_expands(df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
-        )
+        ))
         out.append(f"## {name}\n\n*{why}*\n\n```\n{plan.strip()}\n```\n")
     out.append(EPILOGUE)
     with open(os.path.join(os.path.dirname(os.path.dirname(
