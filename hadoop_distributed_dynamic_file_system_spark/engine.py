@@ -48,8 +48,8 @@ class Engine:
         return self.spark.sql(query)
 
     def register(self, name: str, path: str) -> None:
-        """(Re-)register a parquet table and its SQL view, the only code
-        that creates one. Registration is not an access: it does not
+        """(Re-)register a parquet table and its SQL view, both made by
+        `Catalog.register_path`. Registration is not an access: it does not
         heat the table, and it launches no Spark job. A path that cannot
         be read raises and leaves the earlier table of that name as it
         was."""
