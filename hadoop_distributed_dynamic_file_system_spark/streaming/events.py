@@ -74,8 +74,8 @@ def read_events_stream(
     `max_files_per_trigger` rate-limits ingestion: each micro-batch
     consumes at most that many files, so a backlog drains in bounded
     increments instead of one giant batch — the ingestion-side
-    backpressure knob (Kafka twin: maxOffsetsPerTrigger, see
-    streaming/kafka.py). At 100 TB a cold start over an existing
+    backpressure knob (Spark's Kafka source calls it
+    maxOffsetsPerTrigger). At 100 TB a cold start over an existing
     directory MUST be rate-limited or the first batch shuffles the
     whole history at once."""
     # the file source lists a DIRECTORY; events.parquet is one file, so

@@ -265,64 +265,6 @@ class TestIdempotentSink:
         assert sorted(r.id for r in again.collect()) == [1, 2]  # replay ignored
 
 
-class TestKafkaSurface:
-    """Broker-less coverage: option normalization, wire-format decode
-    on a kafka-shaped batch frame, checkpoint conventions."""
-
-    def test_kafka_options_normalization(self):
-        from hadoop_distributed_dynamic_file_system_spark.streaming import kafka as kf
-
-        opts = kf.kafka_options(
-            "b1:9092,b2:9092",
-            topics=["events", "clicks"],
-            max_offsets_per_trigger=10_000,
-            min_partitions=64,
-        )
-        assert opts["kafka.bootstrap.servers"] == "b1:9092,b2:9092"
-        assert opts["subscribe"] == "events,clicks"
-        assert opts["startingOffsets"] == "earliest"
-        assert opts["failOnDataLoss"] == "false"
-        assert opts["maxOffsetsPerTrigger"] == "10000"
-        assert opts["minPartitions"] == "64"
-        with pytest.raises(ValueError):
-            kf.kafka_options("b:9092")  # neither topics nor pattern
-        with pytest.raises(ValueError):
-            kf.kafka_options("b:9092", topics=["t"], subscribe_pattern="t.*")
-
-    def test_decode_json_values_kafka_shape(self, spark):
-        from hadoop_distributed_dynamic_file_system_spark.streaming import kafka as kf
-        import datetime
-
-        ts = datetime.datetime(2024, 1, 1, 0, 0, 0)
-        rows = [
-            (b"u1", b'{"user_id": 7, "value": 1.5}', "events", 0, 100, ts, 0),
-            (b"u2", b"not json at all", "events", 1, 101, ts, 0),
-        ]
-        df = spark.createDataFrame(rows, kf.KAFKA_ROW_SCHEMA)
-        out = kf.decode_json_values(df, "user_id long, value double")
-        got = {(r.key, r.user_id, r.value, r.partition, r.offset) for r in out.collect()}
-        # malformed value -> NULL fields, stream survives
-        assert got == {("u1", 7, 1.5, 0, 100), ("u2", None, None, 1, 101)}
-
-    def test_read_kafka_stream_errors_clearly_without_connector(self, spark):
-        from hadoop_distributed_dynamic_file_system_spark.streaming import kafka as kf
-
-        try:
-            df = kf.read_kafka_stream(
-                spark, bootstrap_servers="localhost:9092", topics=["t"]
-            )
-        except RuntimeError as e:
-            assert "spark-sql-kafka" in str(e)  # actionable message
-        else:  # connector present in this env: plan is a streaming df
-            assert df.isStreaming and set(df.columns) >= {"key", "value", "offset"}
-
-    def test_checkpoint_dir_convention(self):
-        from hadoop_distributed_dynamic_file_system_spark.streaming import kafka as kf
-
-        assert kf.checkpoint_dir("/ckpt", "hourly_counts") == "/ckpt/hourly_counts/v1"
-        assert kf.checkpoint_dir("/ckpt", "hourly_counts", 3) == "/ckpt/hourly_counts/v3"
-
-
 class TestUpsertSnapshots:
     def test_latest_per_key_argmax(self, spark):
         df = spark.createDataFrame(
