@@ -229,6 +229,18 @@ def _fill(copy: DataFrame) -> None:
         pass
 
 
+def _session_stopped(sc) -> bool:
+    """The session has stopped: PySpark dropped its Java context, the
+    JVM SparkContext reports itself stopped, or the JVM is gone."""
+    jsc = sc._jsc
+    if jsc is None:
+        return True
+    try:
+        return jsc.sc().isStopped()
+    except Py4JError:
+        return True
+
+
 @dataclass(eq=False)
 class _Copy:
     """A table's cached copy, from the promotion that queued it until it
@@ -373,7 +385,8 @@ class Catalog:
         the queue is empty. A copy whose entry let go of it while it
         filled, or whose fill raised, is freed once its job has ended; a
         fill that raised is logged at WARNING only if its copy was still
-        wanted."""
+        wanted and the session still runs. A fill cut off by the session
+        stopping is a drop."""
         sc = self.spark.sparkContext
         while True:
             with self._lock:
@@ -405,6 +418,9 @@ class Catalog:
                                     ent.name, time.monotonic() - t0,
                                     time.monotonic() - copy.queued_at)
                 continue
+            elif _session_stopped(sc):
+                allocation_log.info("%s: copy dropped after %.3f s: the session stopped "
+                                    "under its fill", ent.name, time.monotonic() - t0)
             else:
                 allocation_log.warning("%s: copy fill failed after %.3f s; reads stay on "
                                        "parquet", ent.name, time.monotonic() - t0,

@@ -16,7 +16,7 @@ from types import SimpleNamespace
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
-from py4j.protocol import Py4JJavaError
+from py4j.protocol import Py4JError, Py4JJavaError
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
@@ -952,6 +952,43 @@ class TestCatalogAndHotSet:
         assert not _in_memory(eng.table("t").groupBy().count())
         assert not _in_memory(eng.sql("SELECT count(*) FROM t"))
         assert eng.table("t").count() == 3000
+
+    def test_fill_cut_off_by_a_stopped_session_is_a_drop(self, spark, tmp_path, monkeypatch,
+                                                        caplog):
+        """A fill that raises because the session stopped under it (a
+        harness that stops the session without `Engine.stop`) is logged at
+        INFO as a drop, without a traceback, and frees its copy."""
+        before = _cached_rdds(spark)
+        real = catalog._fill
+
+        def cancelled(copy):
+            real(copy)
+            raise RuntimeError("Job 7 cancelled because SparkContext was shut down")
+
+        monkeypatch.setattr(catalog, "_session_stopped", lambda sc: True)
+        with caplog.at_level(logging.INFO, logger=catalog.allocation_log.name):
+            eng = self._promoted(spark, tmp_path, monkeypatch, cancelled)
+            _until(eng.catalog.fills_idle)
+        assert not [r for r in caplog.records if r.levelno >= logging.WARNING]
+        [rec] = [r for r in caplog.records if "session stopped" in r.getMessage()]
+        assert rec.getMessage().startswith("t: copy dropped after ")
+        assert rec.levelno == logging.INFO and rec.exc_info is None
+        assert _cached_rdds(spark) <= before
+        assert eng.catalog.entry("t").cache_level is None
+
+    def test_session_stopped_reads_the_context(self, spark):
+        def context(is_stopped):
+            return SimpleNamespace(_jsc=SimpleNamespace(
+                sc=lambda: SimpleNamespace(isStopped=is_stopped)))
+
+        def gateway_gone():
+            raise Py4JError("gateway closed")
+
+        assert not catalog._session_stopped(spark.sparkContext)
+        assert not catalog._session_stopped(context(lambda: False))
+        assert catalog._session_stopped(context(lambda: True))
+        assert catalog._session_stopped(context(gateway_gone))
+        assert catalog._session_stopped(SimpleNamespace(_jsc=None))
 
     def test_stop_leaves_no_fill_thread(self, spark, tmp_path, monkeypatch):
         """`Engine.stop` drops queued fills and waits for the running one
